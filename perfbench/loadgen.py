@@ -10,8 +10,8 @@ start it
 - publishes live file ``i`` at ``start + i * interval_s`` (when
   ``files`` > 0): written to a staging directory, then renamed
   atomically into the watched directory;
-- issues dashboard ``HGETALL`` reads at ``read_rate`` per second to the
-  mini-Redis on ``port``, each timed from its due time;
+- issues dashboard ``HGETALL`` reads at ``read_rate`` per second (when
+  above 0) to the mini-Redis on ``port``, each timed from its due time;
 - with ``ping`` set, times a ``PING`` round trip 20 times per second on
   a second connection.
 
@@ -114,7 +114,10 @@ def main() -> None:
     published: list = []
     reads = {"reads": [], "read_late": [], "read_errors": 0}
     rtts: list = []
-    threads = [threading.Thread(target=read_loop, args=(cfg, start, stop, reads))]
+    threads = []
+    if cfg["read_rate"]:
+        threads.append(threading.Thread(
+            target=read_loop, args=(cfg, start, stop, reads)))
     if payloads:
         threads.append(threading.Thread(
             target=publish, args=(cfg, payloads, start, published)))

@@ -23,7 +23,7 @@ SMALL = {
     "orders_scattered": {**run.WORKLOADS["orders_scattered"],
                          "files": 4, "events_per_file": 500},
     "orders_live": {**run.WORKLOADS["orders_live"],
-                    "interval_s": 0.02, "events_per_file": 5},
+                    "events_per_file": 5},
 }
 SECONDS = 2.0
 
@@ -45,8 +45,8 @@ def main() -> None:
         0: {m["name"]: m["unit"] for m in spec["end_to_end"]},
         1: {m["name"]: m["unit"] for m in spec["per_layer"]},
     }
-    expect([w["name"] for w in spec["workloads"]] == sorted(run.WORKLOADS),
-           "BENCHMARK.json names every workload")
+    expect({w["name"] for w in spec["workloads"]} <= set(run.WORKLOADS),
+           "every workload BENCHMARK.json names exists")
     for name in sorted(SMALL):
         for trace in (0, 1):
             res = run.run_workload(name, SMALL[name], 7, SECONDS, bool(trace))["result"]
