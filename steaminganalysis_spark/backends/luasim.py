@@ -1,31 +1,27 @@
-"""Minimal in-process Redis EVAL emulator (VERDICT r3 order #4).
+"""Lua 5.1-subset interpreter for the mini-Redis server's EVAL.
 
 Neither ``redis`` + a server, nor ``fakeredis``, nor ``lupa`` is
-installable here, so the production Lua script in
-``steaminganalysis_spark.streaming.sinks._APPLY_BATCH_LUA`` was only
-ever reviewed, never executed. This module executes it: a tiny
-tree-walking interpreter for the Lua 5.1 subset Redis scripts use —
-local assignment, if/then/return, numeric for, ``or`` fallback,
+installable here, so ``MiniRedisServer`` runs scripts with this tiny
+tree-walking interpreter for the subset Redis scripts use: local
+assignment, if/then/return, numeric for, ``or`` fallback,
 ``tonumber``, ``#``, arithmetic/comparison, string/number literals,
-and ``redis.call`` — driven by the REAL script text, against an
-emulated Redis keyspace (GET/SET/HINCRBY).
+and ``redis.call``. It holds no keyspace and takes no lock: the caller
+passes the ``redis.call`` function, and the server passes one that
+runs its own command dispatch under its command lock, so a command
+behaves the same inside a script as over the wire.
 
-Faithful Redis-Lua details that matter to the script under test:
-- ``redis.call('GET', missing)`` returns **false** (not nil) — the
-  script's ``or '-1'`` fallback depends on false being falsy;
+Faithful Redis-Lua details that matter to the production script:
 - all Lua numbers are doubles (Lua 5.1);
-- EVAL runs atomically — emulated with one lock around the script.
+- a number returned from the script is truncated to an integer reply.
 
-This is test infrastructure, deliberately NOT general Lua: an
-unsupported construct raises instead of guessing, so if the script
-grows past the subset the test fails loudly and this interpreter must
-be extended (never silently skipped).
+This is deliberately NOT general Lua: an unsupported construct raises
+instead of guessing, so if the script grows past the subset the tests
+fail loudly and this interpreter must be extended.
 """
 
 from __future__ import annotations
 
 import re
-import threading
 
 _TOKEN = re.compile(
     r"\s*(?:(?P<num>\d+\.?\d*)|(?P<name>[A-Za-z_][A-Za-z0-9_]*)"
@@ -203,48 +199,24 @@ def _truthy(v):
 
 
 class LuaScriptRunner:
-    """EVAL(script, KEYS, ARGV) against an emulated Redis keyspace."""
+    """EVAL(script, KEYS, ARGV) with ``redis.call`` bound to ``call``."""
 
-    def __init__(self):
-        self.strings: dict[str, str] = {}
-        self.hashes: dict[str, dict[str, int]] = {}
-        self._mu = threading.Lock()  # EVAL atomicity
-
-    # --- the redis.call surface the script uses ---
-    def _redis_call(self, cmd, *args):
-        cmd = cmd.upper()
-        if cmd == "GET":
-            v = self.strings.get(args[0])
-            return v if v is not None else False  # Redis-Lua: missing → false
-        if cmd == "SET":
-            self.strings[args[0]] = str(args[1])
-            return "OK"
-        if cmd == "HINCRBY":
-            key, field, delta = args[0], args[1], int(float(args[2]))
-            h = self.hashes.setdefault(key, {})
-            h[field] = h.get(field, 0) + delta
-            return h[field]
-        raise NotImplementedError(f"lua-sim redis.call: {cmd}")
-
-    def eval(self, script: str, keys: list[str], argv: list[str]):
-        with self._mu:
-            ast = _Parser(_tokenize(script)).block(stop=())
-            env = {
-                "KEYS": list(keys),
-                "ARGV": [str(a) for a in argv],
-                "tonumber": lambda v: self._tonumber(v),
-                "redis": {"call": self._redis_call},
-            }
-            try:
-                self._exec(ast, env)
-            except _Return as r:
-                v = r.value
-                # Redis truncates ANY Lua number to an integer in the
-                # EVAL reply (fractional parts are dropped, not an
-                # error) — match that so this in-process path cannot
-                # diverge from the miniredis wire path.
-                return int(v) if isinstance(v, float) else v
-            return None
+    def eval(self, script: str, keys: list[str], argv: list[str], call):
+        ast = _Parser(_tokenize(script)).block(stop=())
+        env = {
+            "KEYS": keys,
+            "ARGV": argv,
+            "tonumber": self._tonumber,
+            "redis": {"call": call},
+        }
+        try:
+            self._exec(ast, env)
+        except _Return as r:
+            v = r.value
+            # Redis truncates ANY Lua number to an integer in the EVAL
+            # reply (fractional parts are dropped, not an error).
+            return int(v) if isinstance(v, float) else v
+        return None
 
     @staticmethod
     def _tonumber(v):
@@ -322,44 +294,3 @@ class LuaScriptRunner:
             b = float(b) if isinstance(b, str) else b
             return {"+": a + b, "-": a - b, "*": a * b}[node[1]]
         raise NotImplementedError(f"lua-sim expr: {kind}")
-
-
-class LuaKVStore:
-    """KVStore-contract implementation whose ``apply_batch`` is the
-    PRODUCTION Lua script executed by the emulator — the drop-in used
-    by the sink tests to certify the script itself, mirroring
-    ``RedisKVStore.apply_batch`` (same EVAL keys/args marshalling)."""
-
-    def __init__(self) -> None:
-        self._rt = LuaScriptRunner()
-
-    def hincrby(self, key: str, field: str, delta: int) -> int:
-        return self._rt._redis_call("HINCRBY", key, field, str(int(delta)))
-
-    def hgetall(self, key: str) -> dict[str, int]:
-        return dict(self._rt.hashes.get(key, {}))
-
-    def keys(self) -> list[str]:
-        return list(self._rt.hashes)
-
-    def setnx(self, key: str, value: str) -> bool:
-        if key in self._rt.strings:
-            return False
-        self._rt.strings[key] = value
-        return True
-
-    def last_applied(self, marker_key: str) -> int:
-        return int(self._rt.strings.get(marker_key, "-1"))
-
-    def apply_batch(
-        self,
-        batch_id: int,
-        increments: list[tuple[str, str, int]],
-        marker_key: str,
-    ) -> bool:
-        from steaminganalysis_spark.streaming.sinks import _APPLY_BATCH_LUA
-
-        args: list[str] = [str(int(batch_id))]
-        for key, field, delta in increments:
-            args += [key, field, str(int(delta))]
-        return bool(self._rt.eval(_APPLY_BATCH_LUA, keys=[marker_key], argv=args))

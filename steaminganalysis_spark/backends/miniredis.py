@@ -9,11 +9,15 @@ KV sink uses (reference parity: CommonUtil.scala:39-49's Jedis calls):
     PING GET SET SETNX DEL HINCRBY HGETALL TYPE SCAN
     SCRIPT LOAD  EVALSHA  EVAL  FLUSHALL
 
-EVAL/EVALSHA execute the PRODUCTION Lua script
-(``steaminganalysis_spark.streaming.sinks._APPLY_BATCH_LUA``) through
-the in-repo Lua-5.1-subset interpreter
-(``steaminganalysis_spark.backends.luasim``), under the server's
-global command lock — the same atomicity a real Redis gives scripts.
+The server is the only place a command is implemented. It owns one
+keyspace (key -> string or hash) under one command lock. EVAL/EVALSHA
+run the script with the in-repo Lua-5.1-subset interpreter
+(``steaminganalysis_spark.backends.luasim``), whose ``redis.call``
+runs the server's own dispatch, so a command inside a script behaves
+exactly as it does over the wire. As in Redis, a nil reply reaches the
+script as ``false``, an integer reply as a Lua number, and an error
+reply aborts the script; holding the command lock for the whole script
+gives the atomicity a real Redis gives scripts.
 
 ``MiniRedisClient`` implements the slice of the ``redis.Redis`` API
 that ``RedisKVStore`` consumes (``from_url``, ``ping``, ``get``,
@@ -29,6 +33,7 @@ pre-aggregated per-day deltas, O(days) not O(rows)) changes.
 
 from __future__ import annotations
 
+import fnmatch
 import hashlib
 import socket
 import socketserver
@@ -39,6 +44,7 @@ from steaminganalysis_spark.backends.luasim import LuaScriptRunner
 __all__ = ["MiniRedisServer", "MiniRedisClient"]
 
 _WRONG_TYPE = "WRONGTYPE Operation against a key holding the wrong kind of value"
+_INT64_MIN, _INT64_MAX = -(2**63), 2**63 - 1
 
 
 # --------------------------------------------------------------------------
@@ -199,7 +205,8 @@ class MiniRedisServer:
     """
 
     def __init__(self, host: str = "127.0.0.1", port: int = 0) -> None:
-        self._rt = LuaScriptRunner()  # strings + hashes keyspace & EVAL
+        self._data: dict[str, str | dict[str, int]] = {}  # string or hash
+        self._lua = LuaScriptRunner()
         self._scripts: dict[str, str] = {}
         self._mu = threading.Lock()
         self._tcp = _TCPServer((host, port), _Handler)
@@ -240,49 +247,54 @@ class MiniRedisServer:
 
     def _dispatch_locked(self, argv: list[str]):
         cmd, args = argv[0].upper(), argv[1:]
-        strings, hashes = self._rt.strings, self._rt.hashes
+        data = self._data
+        if cmd == "HINCRBY":  # the sink's hot command: test it first
+            delta = _int64(args[2])
+            h = data.get(args[0])
+            if isinstance(h, str):
+                raise ResponseError(_WRONG_TYPE)
+            v = (h.get(args[1], 0) if h else 0) + delta
+            if not _INT64_MIN <= v <= _INT64_MAX:
+                raise ResponseError("ERR increment or decrement would overflow")
+            if h is None:
+                h = data[args[0]] = {}
+            h[args[1]] = v
+            return v
+        if cmd == "GET":
+            v = data.get(args[0])
+            if isinstance(v, dict):
+                raise ResponseError(_WRONG_TYPE)
+            return v
+        if cmd == "SET":
+            data[args[0]] = args[1]
+            return _Simple("OK")
+        if cmd == "SETNX":
+            if args[0] in data:
+                return 0
+            data[args[0]] = args[1]
+            return 1
+        if cmd == "DEL":
+            return sum(data.pop(k, None) is not None for k in args)
+        if cmd == "HGETALL":
+            h = data.get(args[0], {})
+            if isinstance(h, str):
+                raise ResponseError(_WRONG_TYPE)
+            out: list[str] = []
+            for f, v in h.items():
+                out += [f, str(v)]
+            return out
+        if cmd == "TYPE":
+            v = data.get(args[0])
+            if v is None:
+                return _Simple("none")
+            return _Simple("hash" if isinstance(v, dict) else "string")
         if cmd == "PING":
             return _Simple("PONG")
         if cmd == "SELECT":  # single logical db; accept and ignore index
             return _Simple("OK")
         if cmd == "FLUSHALL":
-            strings.clear()
-            hashes.clear()
+            data.clear()
             return _Simple("OK")
-        if cmd == "GET":
-            if args[0] in hashes:
-                raise ResponseError(_WRONG_TYPE)
-            return strings.get(args[0])
-        if cmd == "SET":
-            strings[args[0]] = args[1]
-            return _Simple("OK")
-        if cmd == "SETNX":
-            if args[0] in strings:
-                return 0
-            strings[args[0]] = args[1]
-            return 1
-        if cmd == "DEL":
-            n = 0
-            for k in args:
-                n += (strings.pop(k, None) is not None) + (hashes.pop(k, None) is not None)
-            return n
-        if cmd == "HINCRBY":
-            if args[0] in strings:
-                raise ResponseError(_WRONG_TYPE)
-            h = hashes.setdefault(args[0], {})
-            h[args[1]] = h.get(args[1], 0) + int(args[2])
-            return h[args[1]]
-        if cmd == "HGETALL":
-            out: list[str] = []
-            for f, v in hashes.get(args[0], {}).items():
-                out += [f, str(v)]
-            return out
-        if cmd == "TYPE":
-            if args[0] in hashes:
-                return _Simple("hash")
-            if args[0] in strings:
-                return _Simple("string")
-            return _Simple("none")
         if cmd == "SCAN":
             return self._scan(args)
         if cmd == "SCRIPT":
@@ -301,12 +313,12 @@ class MiniRedisServer:
         raise ResponseError(f"ERR unknown command '{cmd}'")
 
     def _scan(self, args: list[str]):
-        # Positional cursor over the key pool re-derived per page
-        # (strings then hashes). A real Redis cursor is a reverse-bit
-        # iterator with an at-least-once guarantee under concurrent
-        # mutation; this index cursor only guarantees full coverage
-        # when the keyspace is not mutated between pages — fine for
-        # the single-threaded drain-after-batch callers here.
+        # Positional cursor over the key pool re-derived per page. A
+        # real Redis cursor is a reverse-bit iterator with an
+        # at-least-once guarantee under concurrent mutation; this index
+        # cursor only guarantees full coverage when the keyspace is not
+        # mutated between pages — fine for the single-threaded
+        # drain-after-batch callers here.
         cursor = int(args[0])
         match, type_filter, count = "*", None, 10
         i = 1
@@ -320,14 +332,11 @@ class MiniRedisServer:
                 count, i = int(args[i + 1]), i + 2
             else:
                 raise ResponseError(f"ERR syntax error near '{args[i]}'")
-        if type_filter == "hash":
-            pool = list(self._rt.hashes)
-        elif type_filter == "string":
-            pool = list(self._rt.strings)
+        if type_filter is None:
+            pool = list(self._data)
         else:
-            pool = list(self._rt.strings) + list(self._rt.hashes)
-        import fnmatch
-
+            want = dict if type_filter == "hash" else str
+            pool = [k for k, v in self._data.items() if isinstance(v, want)]
         window = pool[cursor : cursor + count]
         matched = [k for k in window if fnmatch.fnmatchcase(k, match)]
         next_cursor = cursor + count
@@ -336,9 +345,34 @@ class MiniRedisServer:
     def _eval(self, script: str, args: list[str]):
         nkeys = int(args[0])
         keys, argv = args[1 : 1 + nkeys], args[1 + nkeys :]
-        # LuaScriptRunner.eval takes its own lock; we already hold the
-        # command lock, which is the real atomicity boundary here.
-        return self._rt.eval(script, keys=list(keys), argv=list(argv))
+        return self._lua.eval(script, keys, argv, self._script_call)
+
+    def _script_call(self, *argv):
+        """``redis.call``: the script's command runs the same dispatch a
+        wire command does (the command lock is already held). An error
+        reply raises out of the interpreter, aborting the script."""
+        v = self._dispatch_locked([a if type(a) is str else _lua_arg(a) for a in argv])
+        if v is None:
+            return False  # nil bulk reply → Lua false
+        return float(v) if type(v) is int else v  # Lua 5.1 numbers are doubles
+
+
+def _int64(v: str) -> int:
+    """Redis's string2ll: a canonical decimal integer within int64."""
+    try:
+        n = int(v)
+        if str(n) == v and _INT64_MIN <= n <= _INT64_MAX:
+            return n
+    except ValueError:
+        pass
+    raise ResponseError("ERR value is not an integer or out of range")
+
+
+def _lua_arg(a) -> str:
+    """Redis converts a Lua number argument of ``redis.call`` to text."""
+    if type(a) is float:
+        return str(int(a)) if a.is_integer() else repr(a)
+    raise ResponseError("ERR Lua redis lib command arguments must be strings or integers")
 
 
 # --------------------------------------------------------------------------

@@ -22,3 +22,19 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_DIR
+
+
+@pytest.fixture
+def miniredis():
+    """URL of a fresh in-process ``MiniRedisServer``. Teardown drops the
+    URL's cached store before stopping the server, so a later server on
+    the same ephemeral port is never handed this one's dead client."""
+    from steaminganalysis_spark.backends.miniredis import MiniRedisServer
+    from steaminganalysis_spark.streaming.sinks import KVStore
+
+    srv = MiniRedisServer().start()
+    try:
+        yield srv.url
+    finally:
+        KVStore.reset(srv.url)
+        srv.stop()

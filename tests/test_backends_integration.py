@@ -122,48 +122,42 @@ def test_redis_kvstore_contract():
     _exercise_contract(store)
 
 
-def test_miniredis_kvstore_contract_over_socket():
+def test_miniredis_kvstore_contract_over_socket(miniredis):
     """VERDICT r4 order #3: the KV contract against a real RESP2 server
     over a real TCP socket — RedisKVStore's production code path
     (SCRIPT LOAD + EVALSHA of the production Lua script, SCAN with a
     server-side TYPE filter, HINCRBY/HGETALL/SETNX) executes the same
     bytes it would send a genuine redis-server. Runs un-skipped: the
     server is the in-repo pure-Python miniredis."""
-    from steaminganalysis_spark.backends.miniredis import MiniRedisServer
-
-    with MiniRedisServer() as srv:
-        store = _redis_store(srv.url)
-        assert store is not None, "RedisKVStore could not reach miniredis"
-        _exercise_contract(store)
-        # keys() must see only hashes (TYPE-filtered SCAN), deduped
-        assert all(isinstance(k, str) for k in store.keys())
+    store = _redis_store(miniredis)
+    assert store is not None, "RedisKVStore could not reach miniredis"
+    _exercise_contract(store)
+    # keys() must see only hashes (TYPE-filtered SCAN), deduped
+    assert all(isinstance(k, str) for k in store.keys())
 
 
-def test_miniredis_streaming_rollup_end_to_end(spark):
+def test_miniredis_streaming_rollup_end_to_end(spark, miniredis):
     """The flagship micro-batch apply path against the socket-backed
     store: per-day rollup deltas land via the atomic Lua apply_batch,
     replay of a committed batch_id is a no-op, and the final keyspace
     equals the batch computation — the reference's Redis deployment
     shape (CommonUtil.scala:39-49) exercised over an actual wire."""
-    from steaminganalysis_spark.backends.miniredis import MiniRedisServer
     from steaminganalysis_spark.streaming.datagen import order_events_batch, to_kafka_json
     from steaminganalysis_spark.streaming.pipeline import (
         classify_orders,
         day_rollup_delta,
         parse_order_json,
     )
-    from steaminganalysis_spark.streaming.sinks import KVStore, apply_day_rollup_batch
 
-    with MiniRedisServer() as srv:
-        df = classify_orders(parse_order_json(to_kafka_json(order_events_batch(spark, 60))))
-        apply_day_rollup_batch(df, batch_id=0, agg_fn=day_rollup_delta, store_name=srv.url)
-        # replay must be skipped whole (marker already at 0)
-        apply_day_rollup_batch(df, batch_id=0, agg_fn=day_rollup_delta, store_name=srv.url)
-        store = KVStore.instance(srv.url)
-        totals = {k: store.hgetall(k) for k in store.keys()}
-        assert sum(h["total"] for h in totals.values()) == 60
-        for h in totals.values():
-            assert 0 <= h["success"] <= h["total"]
+    df = classify_orders(parse_order_json(to_kafka_json(order_events_batch(spark, 60))))
+    apply_day_rollup_batch(df, batch_id=0, agg_fn=day_rollup_delta, store_name=miniredis)
+    # replay must be skipped whole (marker already at 0)
+    apply_day_rollup_batch(df, batch_id=0, agg_fn=day_rollup_delta, store_name=miniredis)
+    store = KVStore.instance(miniredis)
+    totals = {k: store.hgetall(k) for k in store.keys()}
+    assert sum(h["total"] for h in totals.values()) == 60
+    for h in totals.values():
+        assert 0 <= h["success"] <= h["total"]
 
 
 def test_kafka_order_stream_end_to_end(spark, tmp_path):
@@ -207,16 +201,12 @@ def test_kafka_order_stream_end_to_end(spark, tmp_path):
         assert store.hgetall(KEY_PREFIX + r["day"])["total"] == r["total"]
 
 
-def test_kvstore_instance_resolves_redis_urls_or_raises_cleanly():
+def test_kvstore_instance_resolves_redis_urls_or_raises_cleanly(miniredis):
     """`KVStore.instance("redis://...")` must route to the Redis
     adapter — NEVER silently fall back to the in-process dict store. A
     URL nothing listens on must therefore raise a connection error
     (redis-py is lazy, so force a ping; the miniredis fallback client
     connects eagerly)."""
-    import pytest
-
-    from steaminganalysis_spark.streaming.sinks import KVStore
-
     url = "redis://localhost:1/9"  # nothing listens on port 1
     # Only genuine connection-error types count: a broad Exception
     # would let e.g. an AttributeError from a silently-substituted
@@ -236,10 +226,6 @@ def test_kvstore_instance_resolves_redis_urls_or_raises_cleanly():
         store._r.ping()
     KVStore.reset(url)
     # and a URL something DOES listen on routes to the Redis adapter
-    from steaminganalysis_spark.backends.miniredis import MiniRedisServer
     from steaminganalysis_spark.streaming.sinks import RedisKVStore
 
-    with MiniRedisServer() as srv:
-        store = KVStore.instance(srv.url)
-        assert isinstance(store, RedisKVStore)
-        KVStore.reset(srv.url)
+    assert isinstance(KVStore.instance(miniredis), RedisKVStore)

@@ -1,8 +1,10 @@
-"""Execute the production Redis Lua apply-batch script (VERDICT r3
-order #4): ``_APPLY_BATCH_LUA`` — previously reviewed-only because no
-redis/fakeredis/lupa exists here — runs through the
-``tests.lua_redis_sim`` interpreter against an emulated keyspace, with
-the same assertions the in-process Python twin passes
+"""Execute the production Redis Lua apply-batch script: ``_APPLY_BATCH_LUA``
+runs through ``RedisKVStore`` against an in-process ``MiniRedisServer``,
+the same bytes and the same executor a ``redis://`` deployment and the
+benchmark use. The server's ``redis.call`` runs its own command
+dispatch, so the tests also pin that a command replies the same inside
+``EVAL`` as over the wire. The store passes the same assertions as the
+in-process Python twin
 (test_streaming.py::test_idempotent_sink_skips_replayed_batch) plus a
 twin-equivalence sweep. If the script drifts (a typo in HINCRBY
 marshalling, an off-by-one in the ARGV stride, a broken marker
@@ -10,38 +12,18 @@ compare) these fail."""
 
 from __future__ import annotations
 
-import uuid
+from contextlib import closing
 
-from steaminganalysis_spark.streaming.pipeline import (
-    classify_orders,
-    day_rollup_delta,
-    parse_order_json,
-)
-from steaminganalysis_spark.streaming.datagen import (
-    order_events_batch,
-    to_kafka_json,
-)
-from steaminganalysis_spark.streaming.sinks import (
-    KEY_PREFIX,
-    KVStore,
-    apply_day_rollup_batch,
-)
-from tests.lua_redis_sim import LuaKVStore
+import pytest
+
+from steaminganalysis_spark.backends.miniredis import MiniRedisClient, ResponseError
+from steaminganalysis_spark.streaming.sinks import KVStore
 
 MARKER = "sa-spark-last-applied-batch:test"
 
 
-def test_lua_apply_batch_applies_and_advances_marker():
-    s = LuaKVStore()
-    inc = [("d1", "total", 3), ("d1", "fee_cents", 250), ("d2", "total", 1)]
-    assert s.apply_batch(0, inc, MARKER) is True  # fresh store: marker GET → false → -1
-    assert s.hgetall("d1") == {"total": 3, "fee_cents": 250}
-    assert s.hgetall("d2") == {"total": 1}
-    assert s.last_applied(MARKER) == 0
-
-
-def test_lua_apply_batch_skips_replay_and_lower_ids():
-    s = LuaKVStore()
+def test_lua_apply_batch_skips_replay_and_lower_ids(miniredis):
+    s = KVStore.instance(miniredis)
     inc = [("d1", "total", 5)]
     assert s.apply_batch(4, inc, MARKER) is True
     # crash-replay of the SAME batch id: whole batch skipped, no
@@ -55,29 +37,29 @@ def test_lua_apply_batch_skips_replay_and_lower_ids():
     assert s.hgetall("d1") == {"total": 10}
 
 
-def test_lua_apply_batch_empty_increments_still_advances():
+def test_lua_apply_batch_empty_increments_still_advances(miniredis):
     """An empty micro-batch must still advance the watermark, else its
     id replays forever."""
-    s = LuaKVStore()
+    s = KVStore.instance(miniredis)
     assert s.apply_batch(2, [], MARKER) is True
     assert s.last_applied(MARKER) == 2
     assert s.keys() == []
 
 
-def test_lua_negative_deltas_and_multi_field():
-    s = LuaKVStore()
+def test_lua_negative_deltas_and_multi_field(miniredis):
+    s = KVStore.instance(miniredis)
     s.apply_batch(0, [("d", "x", -7), ("d", "x", 3), ("d", "y", 2)], MARKER)
     assert s.hgetall("d") == {"x": -4, "y": 2}
 
 
-def test_lua_script_equals_python_twin_on_random_sequence():
+def test_lua_script_equals_python_twin_on_random_sequence(miniredis):
     """Twin equivalence: an arbitrary interleaving of applies, replays
     and stale ids leaves the Lua-backed store and the in-process Python
     store in identical final states (hashes AND marker)."""
     import random
 
     rng = random.Random(42)
-    lua, py = LuaKVStore(), KVStore()
+    lua, py = KVStore.instance(miniredis), KVStore()
     for _ in range(60):
         bid = rng.randint(0, 12)
         inc = [
@@ -91,60 +73,114 @@ def test_lua_script_equals_python_twin_on_random_sequence():
     assert lua.last_applied(MARKER) == py.last_applied(MARKER)
 
 
-def test_lua_store_through_foreachbatch_body(spark):
-    """End-to-end through the real sink body: register a LuaKVStore
-    under a store name and drive ``apply_day_rollup_batch`` (the
-    foreachBatch body) — replay skipped, new batch accumulates, exactly
-    as the Python-twin test asserts."""
-    store_name = f"lua-replay-{uuid.uuid4().hex[:6]}"
-    with KVStore._lock:
-        KVStore._instances[store_name] = LuaKVStore()  # type: ignore[assignment]
-    try:
-        df = classify_orders(
-            parse_order_json(to_kafka_json(order_events_batch(spark, 50)))
-        )
-        apply_day_rollup_batch(df, batch_id=7, agg_fn=day_rollup_delta, store_name=store_name)
-        store = KVStore.instance(store_name)
-        before = {k: store.hgetall(k) for k in store.keys()}
-        assert before, "first apply wrote nothing"
-        assert all(k.startswith(KEY_PREFIX) for k in before)
-        apply_day_rollup_batch(df, batch_id=7, agg_fn=day_rollup_delta, store_name=store_name)
-        assert {k: store.hgetall(k) for k in store.keys()} == before
-        apply_day_rollup_batch(df, batch_id=8, agg_fn=day_rollup_delta, store_name=store_name)
-        doubled = {k: store.hgetall(k) for k in store.keys()}
-        for k, h in before.items():
-            assert doubled[k]["total"] == 2 * h["total"]
-    finally:
-        KVStore.reset(store_name)
+def test_lua_store_through_foreachbatch_body(spark, miniredis):
+    """End-to-end through the real sink body: drive
+    ``apply_day_rollup_batch`` (the foreachBatch body) against the
+    server-backed store — keys carry the day prefix, a replayed batch
+    id is skipped, and the next id accumulates, exactly as the
+    Python-twin test asserts."""
+    from steaminganalysis_spark.streaming.datagen import order_events_batch, to_kafka_json
+    from steaminganalysis_spark.streaming.pipeline import (
+        classify_orders,
+        day_rollup_delta,
+        parse_order_json,
+    )
+    from steaminganalysis_spark.streaming.sinks import KEY_PREFIX, apply_day_rollup_batch
+
+    df = classify_orders(parse_order_json(to_kafka_json(order_events_batch(spark, 50))))
+    apply_day_rollup_batch(df, batch_id=7, agg_fn=day_rollup_delta, store_name=miniredis)
+    store = KVStore.instance(miniredis)
+    before = {k: store.hgetall(k) for k in store.keys()}
+    assert before, "first apply wrote nothing"
+    assert all(k.startswith(KEY_PREFIX) for k in before)
+    apply_day_rollup_batch(df, batch_id=7, agg_fn=day_rollup_delta, store_name=miniredis)
+    assert {k: store.hgetall(k) for k in store.keys()} == before
+    apply_day_rollup_batch(df, batch_id=8, agg_fn=day_rollup_delta, store_name=miniredis)
+    doubled = {k: store.hgetall(k) for k in store.keys()}
+    for k, h in before.items():
+        assert doubled[k]["total"] == 2 * h["total"]
 
 
-def test_lua_runner_rejects_unsupported_constructs():
+def test_lua_runner_rejects_unsupported_constructs(miniredis):
     """The interpreter is deliberately partial: growth of the script
-    past the supported subset must fail loudly, not silently no-op."""
-    import pytest
+    past the supported subset must fail loudly with an error reply, not
+    silently no-op, and the server keeps serving."""
+    with closing(MiniRedisClient.from_url(miniredis)) as r:
+        with pytest.raises(ResponseError, match="lua-sim"):
+            r.execute_command("EVAL", "while true do end", "0")
+        assert r.ping()
 
-    from tests.lua_redis_sim import LuaScriptRunner
 
-    with pytest.raises(NotImplementedError):
-        LuaScriptRunner().eval("redis.call('DEL', KEYS[1])", ["k"], [])
+def test_lua_eval_truncates_fractional_number_replies(miniredis):
+    """Redis truncates ANY Lua number to an integer in the EVAL reply."""
+    with closing(MiniRedisClient.from_url(miniredis)) as r:
+        assert r.execute_command("EVAL", "return tonumber(ARGV[1])", "0", "7.9") == 7
 
 
-def test_lua_eval_truncates_fractional_number_replies():
-    """Redis truncates ANY Lua number to an integer in the EVAL reply.
-    Both execution paths — the in-process runner and the miniredis
-    RESP wire — must agree, or a script returning a fractional value
-    would diverge between LuaKVStore and RedisKVStore deployments."""
-    from tests.lua_redis_sim import LuaScriptRunner
+def test_lua_number_arguments_and_replies_match_redis(miniredis):
+    """A Lua number passed to ``redis.call`` arrives as its decimal
+    text, so an integral double is an integer and a fraction is not;
+    an integer reply comes back as a Lua double."""
+    incr = "return redis.call('HINCRBY', KEYS[1], 'f', tonumber(ARGV[1]) + 1)"
+    with closing(MiniRedisClient.from_url(miniredis)) as r:
+        assert r.execute_command("EVAL", incr, "1", "h", "4") == 5
+        with pytest.raises(ResponseError, match="not an integer"):
+            r.execute_command("EVAL", incr, "1", "h", "0.5")
+        assert r.hgetall("h") == {"f": "5"}
+        big = "return redis.call('HINCRBY', KEYS[1], 'g', ARGV[1])"
+        assert r.execute_command("EVAL", big, "1", "h", str(2**53 + 1)) == 2**53
+        assert r.hgetall("h") == {"f": "5", "g": str(2**53 + 1)}
 
-    assert LuaScriptRunner().eval("return tonumber(ARGV[1])", [], ["7.9"]) == 7
-    from steaminganalysis_spark.backends.miniredis import MiniRedisServer
-    from steaminganalysis_spark.streaming.sinks import KVStore
 
-    with MiniRedisServer() as srv:
-        store = KVStore.instance(srv.url)
-        try:
-            assert store._r.execute_command(
-                "EVAL", "return tonumber(ARGV[1])", "0", "7.9"
-            ) == 7
-        finally:
-            KVStore.reset(srv.url)
+_INT64_MAX = str(2**63 - 1)
+
+# name: (set-up commands, command, Redis's error reply or None, hash "h" after)
+_CASES = {
+    "incr-2^53+1-exact": (
+        [], ["HINCRBY", "h", "f", str(2**53 + 1)], None, {"f": str(2**53 + 1)}
+    ),
+    "incr-fraction-rejected": (
+        [], ["HINCRBY", "h", "f", "1.5"], "ERR value is not an integer or out of range", {}
+    ),
+    "incr-int64-overflow": (
+        [["HINCRBY", "h", "f", _INT64_MAX]],
+        ["HINCRBY", "h", "f", "1"],
+        "ERR increment or decrement would overflow",
+        {"f": _INT64_MAX},
+    ),
+    "get-on-hash-wrongtype": (
+        [["HINCRBY", "h", "f", "1"]],
+        ["GET", "h"],
+        "WRONGTYPE Operation against a key holding the wrong kind of value",
+        {"f": "1"},
+    ),
+}
+
+
+def _over_wire(r, cmd):
+    return r.execute_command(*cmd)
+
+
+def _inside_eval(r, cmd):
+    call = ", ".join(f"ARGV[{i}]" for i in range(1, len(cmd) + 1))
+    return r.execute_command("EVAL", f"return redis.call({call})", "0", *cmd)
+
+
+@pytest.mark.parametrize("path", [_over_wire, _inside_eval], ids=["wire", "eval"])
+@pytest.mark.parametrize("case", list(_CASES))
+def test_command_behaves_as_redis_over_wire_and_inside_eval(miniredis, case, path):
+    """One command implementation serves both paths, with Redis's
+    integer and type rules. The stored hash is compared rather than a
+    successful reply: a script sees an integer reply as a Lua double,
+    as in Redis."""
+    setup, cmd, error, after = _CASES[case]
+    with closing(MiniRedisClient.from_url(miniredis)) as r:
+        for c in setup:
+            r.execute_command(*c)
+        if error is None:
+            path(r, cmd)
+        else:
+            with pytest.raises(ResponseError) as e:
+                path(r, cmd)
+            assert str(e.value).startswith(error)
+        assert r.hgetall("h") == after
