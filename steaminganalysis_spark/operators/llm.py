@@ -1467,30 +1467,6 @@ emb_random_projection.__doc__ = emb_random_projection.__doc__.replace(
 ).replace("{D}", str(_RP_IN_DIMS))
 
 
-def _symmetrize_scored(scored: DataFrame) -> DataFrame:
-    """(vec_a, vec_b, cosine) → both directed edges in ONE pass via a
-    generator (r18, guide §2.4 — the butterfly "explode, not union"
-    lesson): the two-branch union the kNN-graph keys used re-executed
-    the ENTIRE candidate join + exact-rescore subtree once per branch
-    (Spark shares no common subexpressions across union branches — the
-    before-plan shows the full pipeline twice, 24 parquet scans). The
-    explode emits (a→b) and (b→a) from one execution: half the plan,
-    half the candidate-join/rescore work, identical rows."""
-    return scored.select(
-        F.explode(
-            F.array(
-                F.struct(
-                    F.col("vec_a").alias("src"), F.col("vec_b").alias("dst")
-                ),
-                F.struct(
-                    F.col("vec_b").alias("src"), F.col("vec_a").alias("dst")
-                ),
-            )
-        ).alias("e"),
-        "cosine",
-    ).select("e.src", "e.dst", "cosine")
-
-
 @query(
     "q_knn_graph",
     oracle=_SIM_ORACLE_BASE.replace("WHERE a.vec_id < 50", "")
@@ -1526,7 +1502,9 @@ def knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = _emb_double(spark, sf_dir)
     cand = _lsh_candidate_pairs(base, THRESH_LSH_TABLES, THRESH_LSH_BITS)
     scored = _score_pairs_exact(base, cand, 0.4)
-    sym = _symmetrize_scored(scored)
+    from steaminganalysis_spark.operators.graph import _sym_edges
+
+    sym = _sym_edges(scored, "vec_a", "vec_b", ["cosine"])
     w = W.partitionBy("src").orderBy(F.desc("cosine"), F.asc("dst"))
     return (
         sym.withColumn("rn", F.row_number().over(w))
@@ -1706,7 +1684,9 @@ def knn_graph_selective(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = _aug_embeddings(spark, sf_dir)
     cand = _selective_candidate_pairs(base)
     scored = _score_pairs_exact(base, cand, SELECTIVE_TAU)
-    sym = _symmetrize_scored(scored)
+    from steaminganalysis_spark.operators.graph import _sym_edges
+
+    sym = _sym_edges(scored, "vec_a", "vec_b", ["cosine"])
     w = W.partitionBy("src").orderBy(F.desc("cosine"), F.asc("dst"))
     return (
         sym.withColumn("rn", F.row_number().over(w))

@@ -5,6 +5,12 @@ Kafka/JSON source → ``from_json`` with a declared schema → typed
 projection + cast → paid/placed classification → per-day delta
 aggregate → idempotent KV sink.
 
+Classification is total, so no input record can raise. A record whose
+``time``, ``flag`` or parsed ``fee`` is null is rejected: it gets a
+null ``day``. A payload that is not JSON parses to all nulls and is
+rejected too. Rejected rows reach the sink as the delta's null-``day``
+group, which counts them (streaming/sinks.py).
+
 Every step is a declarative DataFrame transform shared verbatim between
 batch and stream (stream-batch equivalence is the test strategy,
 SURVEY.md §5.2). Where the reference hand-rolled physical behavior,
@@ -44,26 +50,30 @@ def classify_orders(orders: DataFrame) -> DataFrame:
     """Typed projection + classification (StreamingAnalysisAppWithKafkaManageOffset.scala:54-64):
     day bucket from event time, paid flag, fee masked to paid orders.
     Fee is carried as integer cents so downstream accumulation is exact
-    (the reference reads fee as a long, StreamingAnalysisAppWithKafkaManageOffset.scala:55)."""
+    (the reference reads fee as a long, StreamingAnalysisAppWithKafkaManageOffset.scala:55).
+
+    Rejection rule: the fee is read with ``try_cast`` to decimal(18,2),
+    so a non-numeric or out-of-range fee becomes null instead of raising.
+    A row whose ``time``, ``flag`` or parsed fee is null gets a null
+    ``day``; valid rows keep the reference's rules unchanged."""
     paid = F.col("flag") == "1"
+    fee = F.col("fee").try_cast("decimal(18,2)")
     return orders.select(
-        F.substring("time", 1, 10).alias("day"),  # reference substring bucketing (line 58)
+        # reference substring bucketing (line 58); null time → null day
+        F.when(F.col("flag").isNotNull() & fee.isNotNull(), F.substring("time", 1, 10))
+        .alias("day"),
         paid.cast("int").alias("success"),
-        F.when(paid, (F.col("fee").cast("decimal(18,2)") * 100).cast("long"))
-        .otherwise(0)
-        .alias("fee_cents"),
+        F.when(paid, (fee * 100).cast("long")).otherwise(0).alias("fee_cents"),
         F.col("orderId"),
     )
 
 
-def day_rollup_delta(classified_or_raw: DataFrame) -> DataFrame:
-    """Per-day delta aggregate of one micro-batch (StreamingAnalysisAppWithKafkaManageOffset.scala:67-69:
-    reduceByKey over [1, success, successFee]). Accepts either
-    classified orders or raw json-valued frames."""
-    df = classified_or_raw
-    if "day" not in df.columns:
-        df = classify_orders(parse_order_json(df))
-    return df.groupBy("day").agg(
+def day_rollup_delta(classified: DataFrame) -> DataFrame:
+    """Per-day delta aggregate of one micro-batch of classified orders
+    (StreamingAnalysisAppWithKafkaManageOffset.scala:67-69: reduceByKey
+    over [1, success, successFee]). Rejected rows form the null-``day``
+    group, whose ``total`` is the batch's rejected count."""
+    return classified.groupBy("day").agg(
         F.count("*").alias("total"),
         F.sum("success").alias("success"),
         F.sum("fee_cents").alias("fee_cents"),
@@ -147,62 +157,3 @@ def kafka_order_stream(
     ).load()
     return classify_orders(parse_order_json(raw))
 
-
-def split_dead_letters(raw: DataFrame, value_col: str = "value"):
-    """PERMISSIVE parse with dead-letter routing: rows whose JSON fails
-    to parse (or lacks the mandatory fields) are NOT dropped silently —
-    they split into a quarantine frame carrying the raw payload, so a
-    10-hour ingest neither dies on one bad record (reference behavior:
-    fastjson throws and kills the batch, StreamingAnalysisAppWithKafkaManageOffset.scala:52) nor loses
-    it. Returns (good, dead) frames computed from one shared parse."""
-    parsed = raw.withColumn(
-        "_o", F.from_json(F.col(value_col).cast("string"), ORDER_EVENT_SCHEMA)
-    )
-    is_good = (
-        F.col("_o").isNotNull()
-        & F.col("_o.time").isNotNull()
-        & F.col("_o.flag").isNotNull()
-        & F.col("_o.fee").isNotNull()
-    )
-    good = parsed.filter(is_good).select("_o.*")
-    dead = parsed.filter(~is_good).select(
-        F.col(value_col).cast("string").alias("raw_value")
-    )
-    return good, dead
-
-
-def day_rollup_with_dead_letters(
-    raw_stream: DataFrame,
-    checkpoint_dir: str,
-    dead_letter_dir: str,
-    agg_fn,
-    store_name: str = "default",
-):
-    """The flagship sink with quarantine: per micro-batch, malformed
-    payloads land in a dead-letter parquet dir (re-driveable later);
-    well-formed rows flow to the idempotent KV rollup. Replay safety is
-    per-write, with no guard-first crash window: the dead-letter write
-    goes to a batch-id-scoped partition with overwrite (a replayed
-    batch rewrites the same files — idempotent by construction), and
-    the KV rollup commits its increments atomically with its own
-    last-applied-batch watermark."""
-    from steaminganalysis_spark.streaming.sinks import (
-        apply_day_rollup_batch,
-        checkpoint_scope,
-    )
-
-    scope = checkpoint_scope(checkpoint_dir)
-
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        good, dead = split_dead_letters(batch_df)
-        dead.write.mode("overwrite").parquet(f"{dead_letter_dir}/batch_id={batch_id}")
-        apply_day_rollup_batch(
-            classify_orders(good), batch_id, agg_fn, store_name=store_name,
-            scope=scope,
-        )
-
-    return (
-        raw_stream.writeStream.outputMode("append")
-        .foreachBatch(handle)
-        .option("checkpointLocation", checkpoint_dir)
-    )

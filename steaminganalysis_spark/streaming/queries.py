@@ -440,7 +440,11 @@ def stream_flagship_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from steaminganalysis_spark.registry import to_cents
     from steaminganalysis_spark.scratch import scratch_dir
-    from steaminganalysis_spark.streaming.pipeline import day_rollup_delta
+    from steaminganalysis_spark.streaming.pipeline import (
+        classify_orders,
+        day_rollup_delta,
+        parse_order_json,
+    )
     from steaminganalysis_spark.streaming.sinks import (
         KEY_PREFIX,
         KVStore,
@@ -471,9 +475,9 @@ def stream_flagship_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("event_id").cast("string").alias("orderId"),
         )
     )
-    raw = ev.select(payload.alias("value"))
+    orders = classify_orders(parse_order_json(ev.select(payload.alias("value"))))
 
-    q = day_rollup_sink(raw, ckpt, day_rollup_delta, store_name=store_name).start()
+    q = day_rollup_sink(orders, ckpt, day_rollup_delta, store_name=store_name).start()
     try:
         q.processAllAvailable()
     finally:

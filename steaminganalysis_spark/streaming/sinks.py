@@ -11,6 +11,14 @@ batch-id watermark are applied in ONE atomic step (single lock in
 process, single Lua EVAL on Redis), turning at-least-once delivery into
 an exactly-once effect without the guard-first crash window.
 
+Rejected records (a null ``day`` from ``classify_orders``) are counted,
+not dropped and not raised on: their count goes to the ``total`` field
+of ``sa-spark-rejected-records`` in the same atomic step as the day
+totals, so input rows = Σ day ``total`` + rejected, exactly once. The
+key is written only by a batch that has rejects, and its suffix is
+longer than any ``substring(time, 1, 10)`` day, so it never collides
+with one.
+
 Backend: ``redis`` is not installed in this environment, so the default
 backend is an in-process dict implementing the same HINCRBY/HGETALL
 contract. The Spark-side shape is the production one: ``foreachBatch``
@@ -32,6 +40,7 @@ __all__ = [
     "KVStore",
     "RedisKVStore",
     "KEY_PREFIX",
+    "REJECTED_KEY",
     "apply_day_rollup_batch",
     "day_rollup_sink",
 ]
@@ -201,6 +210,7 @@ class RedisKVStore:
 
 
 KEY_PREFIX = "sa-spark-"  # reference used "n-ko-" / "zk-ko-" (KafkaApp:72, ZkApp:105)
+REJECTED_KEY = KEY_PREFIX + "rejected-records"
 
 
 def checkpoint_scope(checkpoint_dir: str) -> str:
@@ -255,7 +265,9 @@ def apply_day_rollup_batch(
     committed or is skipped whole — a crash can no longer strand the
     guard set with the increments half-applied (the at-most-once
     hazard of guard-first designs), and guard state is a single
-    watermark key instead of one key per batch forever.
+    watermark key instead of one key per batch forever. The delta's
+    null-``day`` group (rejected records) is one more increment,
+    ``REJECTED_KEY``'s ``total``, in the same atomic apply.
     """
     store = KVStore.instance(store_name)
     marker = f"{KEY_PREFIX}last-applied-batch:{scope}"
@@ -266,6 +278,9 @@ def apply_day_rollup_batch(
         return
     increments: list[tuple[str, str, int]] = []
     for row in agg_fn(batch_df).toLocalIterator():
+        if row["day"] is None:  # the rejected records' group
+            increments.append((REJECTED_KEY, "total", row["total"]))
+            continue
         key = KEY_PREFIX + row["day"]
         increments += [
             (key, "total", row["total"]),

@@ -171,8 +171,10 @@ def test_kafka_order_stream_end_to_end(spark, tmp_path):
 
     from steaminganalysis_spark.streaming.datagen import order_events_batch, to_kafka_json
     from steaminganalysis_spark.streaming.pipeline import (
+        classify_orders,
         day_rollup_delta,
         kafka_order_stream,
+        parse_order_json,
     )
     from steaminganalysis_spark.streaming.sinks import day_rollup_sink
 
@@ -195,7 +197,7 @@ def test_kafka_order_stream_end_to_end(spark, tmp_path):
         q.stop()
     store = KVStore.instance(store_name)
     expect = day_rollup_delta(
-        to_kafka_json(order_events_batch(spark, 200)).selectExpr("value")
+        classify_orders(parse_order_json(to_kafka_json(order_events_batch(spark, 200))))
     ).collect()
     for r in expect:
         assert store.hgetall(KEY_PREFIX + r["day"])["total"] == r["total"]

@@ -344,57 +344,92 @@ def test_console_sink_runs(spark):
         q.stop()
 
 
-def test_dead_letter_routing_quarantines_bad_json(spark, tmp_path):
-    """Malformed payloads must reach the dead-letter dir with their raw
-    bytes; well-formed ones must aggregate; nothing is lost: good + dead
-    == input."""
-    import glob
-    import shutil
-
-    from steaminganalysis_spark.streaming.pipeline import (
-        day_rollup_delta,
-        day_rollup_with_dead_letters,
+def _order(day: str, fee: str, flag: str, oid: str) -> str:
+    return (
+        f'{{"time":"{day} 10:00:00","userId":"1","courseId":"2",'
+        f'"fee":"{fee}","flag":"{flag}","orderId":"{oid}"}}'
     )
-    from steaminganalysis_spark.streaming.sinks import KEY_PREFIX, KVStore
 
-    good1 = '{"time":"2024-03-01 10:00:00","userId":"1","courseId":"2","fee":"100","flag":"1","orderId":"a"}'
-    good2 = '{"time":"2024-03-02 11:00:00","userId":"2","courseId":"3","fee":"50","flag":"0","orderId":"b"}'
-    bad_json = '{"time": "2024-03-01 10:'  # truncated
-    bad_fields = '{"whatever": 1}'  # parses, lacks mandatory fields
-    rows = [(v,) for v in [good1, bad_json, good2, bad_fields]]
+
+# One record of each kind ``classify_orders`` rejects.
+_BAD_RECORDS = [
+    '{"time": "2024-03-01 10:',  # truncated JSON
+    '{"whatever": 1}',  # parses, lacks every field
+    '{"time":null,"fee":"1","flag":"1","orderId":"t"}',
+    '{"time":"2024-03-01 10:00:00","fee":"abc","flag":"1","orderId":"f"}',
+    '{"time":"2024-03-01 10:00:00","fee":"1e30","flag":"1","orderId":"o"}',
+    '{"time":"2024-03-01 10:00:00","fee":"1","orderId":"m"}',  # no flag
+]
+
+
+def _drain_orders(spark, src, ckpt, store_name) -> None:
+    """Drain the text files in ``src`` through the order sink, as the
+    benchmark reads them, and require the query to end without error."""
+    stream = classify_orders(parse_order_json(spark.readStream.format("text").load(src)))
+    q = (
+        day_rollup_sink(stream, ckpt, day_rollup_delta, store_name=store_name)
+        .trigger(availableNow=True)
+        .start()
+    )
+    assert q.awaitTermination(120), "order sink did not drain"
+    assert q.exception() is None
+
+
+def test_dead_letter_routing_quarantines_bad_json(spark, tmp_path, miniredis):
+    """No record can wedge the order sink: one record of each rejected
+    kind passes through a real ``day_rollup_sink`` query on the wire
+    path without stopping it, the good days are exact, and the rejected
+    count lands in the same atomic apply."""
+    from steaminganalysis_spark.streaming.sinks import REJECTED_KEY
 
     src = tmp_path / "src"
     src.mkdir()
-    spark.createDataFrame(rows, "value string").coalesce(1).write.parquet(
-        str(tmp_path / "b1")
-    )
-    shutil.copy(
-        glob.glob(str(tmp_path / "b1" / "part-*.parquet"))[0], str(src / "b1.parquet")
-    )
+    lines = [_order("2024-03-01", "100", "1", "a"), *_BAD_RECORDS]
+    lines.append(_order("2024-03-02", "50", "0", "b"))
+    (src / "part-0.json").write_text("\n".join(lines) + "\n")
 
-    store_name = f"dlq-{uuid.uuid4().hex[:6]}"
-    stream = spark.readStream.schema("value string").parquet(str(src))
-    q = day_rollup_with_dead_letters(
-        stream,
-        str(tmp_path / "ckpt"),
-        str(tmp_path / "dead"),
-        day_rollup_delta,
-        store_name=store_name,
-    ).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    _drain_orders(spark, str(src), str(tmp_path / "ckpt"), miniredis)
 
-    dead = {r.raw_value for r in spark.read.parquet(str(tmp_path / "dead")).collect()}
-    assert dead == {bad_json, bad_fields}
+    store = KVStore.instance(miniredis)
+    assert {k: store.hgetall(k) for k in store.keys()} == {
+        KEY_PREFIX + "2024-03-01": {"total": 1, "success": 1, "fee_cents": 10000},
+        KEY_PREFIX + "2024-03-02": {"total": 1, "success": 0, "fee_cents": 0},
+        REJECTED_KEY: {"total": len(_BAD_RECORDS)},
+    }
 
-    store = KVStore.instance(store_name)
-    h1 = store.hgetall(KEY_PREFIX + "2024-03-01")
-    h2 = store.hgetall(KEY_PREFIX + "2024-03-02")
-    assert h1 == {"total": 1, "success": 1, "fee_cents": 10000}
-    assert h2 == {"total": 1, "success": 0, "fee_cents": 0}
-    KVStore.reset(store_name)
+
+def test_order_sink_restart_counts_rejects_once(spark, tmp_path, miniredis):
+    """Restart on the wire path: batch 0 (one rejected record) applies
+    and the query stops; a second file arrives and the query restarts
+    from the same checkpoint. Batch 0's commit-log entry is removed
+    first, as if the process died after the ``EVAL`` but before Spark
+    committed, so the restart replays batch 0 too. Every day total and
+    the rejected count are counted once."""
+    from steaminganalysis_spark.streaming.sinks import REJECTED_KEY
+
+    src, ckpt = tmp_path / "src", str(tmp_path / "ckpt")
+    src.mkdir()
+    first = [_order("2024-03-01", "100", "1", "a"), _BAD_RECORDS[0]]
+    (src / "part-0.json").write_text("\n".join(first) + "\n")
+    _drain_orders(spark, str(src), ckpt, miniredis)
+    for name in ("0", ".0.crc"):
+        os.remove(os.path.join(ckpt, "commits", name))
+    second = [
+        _order("2024-03-01", "2.50", "1", "b"),
+        _order("2024-03-02", "7", "0", "c"),
+        _BAD_RECORDS[3],
+    ]
+    (src / "part-1.json").write_text("\n".join(second) + "\n")
+    _drain_orders(spark, str(src), ckpt, miniredis)
+
+    store = KVStore.instance(miniredis)
+    assert {k: store.hgetall(k) for k in store.keys()} == {
+        KEY_PREFIX + "2024-03-01": {"total": 2, "success": 2, "fee_cents": 10250},
+        KEY_PREFIX + "2024-03-02": {"total": 1, "success": 0, "fee_cents": 0},
+        REJECTED_KEY: {"total": 2},
+    }
+    commits = os.listdir(os.path.join(ckpt, "commits"))
+    assert sorted(c for c in commits if not c.endswith(".crc")) == ["0", "1"]
 
 
 def test_streaming_metrics_listener_collects_batches(spark):
