@@ -85,9 +85,9 @@ def run_kafka(
     bootstrap_servers: str, topic: str, checkpoint: str, kv: str = "default"
 ) -> None:
     """Production wiring. ``kv`` selects the sink store by name: the
-    default in-process store, or a ``redis://host:port/db`` URL for the
-    real Redis deployment (the reference's target) — the Lua-scripted
-    atomic apply keeps the exactly-once guarantee there too."""
+    default in-process mini-Redis, or a ``redis://host:port/db`` URL for
+    the real Redis deployment (the reference's target) — both run the
+    same Lua-scripted atomic apply and its exactly-once guarantee."""
     spark = get_spark(app_name="sa-spark-kafka")
     classified = kafka_order_stream(spark, bootstrap_servers, topic)
     q = day_rollup_sink(
@@ -113,7 +113,7 @@ def main() -> None:
     ap.add_argument(
         "--kv",
         default="default",
-        help="sink store: in-process name or redis://host:port/db",
+        help="sink store: redis://host:port/db, or an in-process mini-Redis name",
     )
     ap.add_argument("-n", type=int, default=10, help="mock rows")
     args = ap.parse_args()

@@ -4,7 +4,7 @@ The reference deployment talks to a real Redis (CommonUtil.scala:39-49)
 and a Kafka broker. This container has neither, no network to fetch
 them, and no spark-sql-kafka connector jar (VERDICT r4 "what's
 missing" #1-2). What CAN be made real in-sandbox is the wire protocol:
-``miniredis`` is a pure-Python RESP2 server + client pair, so the
-Redis-backed KV sink executes its production Lua script over an
-actual TCP socket instead of an in-process method call.
+``miniredis`` is a pure-Python Redis with a RESP2 server and client, so
+the KV sink executes its production Lua script over an actual TCP
+socket — and, in the in-process store, the same script with no socket.
 """

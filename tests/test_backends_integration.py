@@ -3,8 +3,9 @@
 The container has neither a Redis server nor a Kafka broker, so the
 integration tests skip cleanly here and run wherever the backends exist
 (``SPARK_GRAFT_REDIS_URL`` / ``SPARK_GRAFT_KAFKA_BOOTSTRAP``). The
-contract tests on the in-process store always run — they pin the
-atomic apply-batch semantics both implementations share.
+contract tests on the in-process store and on the in-repo mini-Redis
+server over a socket always run — they pin the atomic apply-batch
+semantics of the one store implementation, whichever client it uses.
 """
 
 from __future__ import annotations
@@ -60,7 +61,7 @@ def test_guard_state_is_single_watermark_key():
     for bid in range(50):
         store.apply_batch(bid, [("h", "total", 1)], "last-applied")
     assert store.hgetall("h") == {"total": 50}
-    assert set(store.kv) == {"last-applied"}
+    assert set(store._r.scan_iter(_type="string")) == {"last-applied"}
 
 
 def test_failed_attempt_leaves_store_untouched_then_replay_applies(spark):
@@ -205,10 +206,10 @@ def test_kafka_order_stream_end_to_end(spark, tmp_path):
 
 def test_kvstore_instance_resolves_redis_urls_or_raises_cleanly(miniredis):
     """`KVStore.instance("redis://...")` must route to the Redis
-    adapter — NEVER silently fall back to the in-process dict store. A
+    adapter — NEVER silently fall back to the in-process store. A
     URL nothing listens on must therefore raise a connection error
     (redis-py is lazy, so force a ping; the miniredis fallback client
-    connects eagerly)."""
+    connects on the constructor's SCRIPT LOAD)."""
     url = "redis://localhost:1/9"  # nothing listens on port 1
     # Only genuine connection-error types count: a broad Exception
     # would let e.g. an AttributeError from a silently-substituted
@@ -230,4 +231,6 @@ def test_kvstore_instance_resolves_redis_urls_or_raises_cleanly(miniredis):
     # and a URL something DOES listen on routes to the Redis adapter
     from steaminganalysis_spark.streaming.sinks import RedisKVStore
 
-    assert isinstance(KVStore.instance(miniredis), RedisKVStore)
+    # (exact kind: the in-process store is a RedisKVStore subclass)
+    assert type(KVStore.instance(miniredis)) is RedisKVStore
+    assert type(KVStore.instance(f"inproc-{uuid.uuid4().hex[:6]}")) is KVStore

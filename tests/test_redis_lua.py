@@ -1,14 +1,15 @@
 """Execute the production Redis Lua apply-batch script: ``_APPLY_BATCH_LUA``
 runs through ``RedisKVStore`` against an in-process ``MiniRedisServer``,
-the same bytes and the same executor a ``redis://`` deployment and the
-benchmark use. The server's ``redis.call`` runs its own command
-dispatch, so the tests also pin that a command replies the same inside
-``EVAL`` as over the wire. The store passes the same assertions as the
-in-process Python twin
-(test_streaming.py::test_idempotent_sink_skips_replayed_batch) plus a
-twin-equivalence sweep. If the script drifts (a typo in HINCRBY
-marshalling, an off-by-one in the ARGV stride, a broken marker
-compare) these fail."""
+the same bytes and the same executor a ``redis://`` deployment, the
+benchmark and the in-process ``KVStore`` use. The server's
+``redis.call`` runs its own command dispatch, so the tests also pin
+that a command replies the same inside ``EVAL``, over the wire and
+through the socketless client of the in-process store. The store
+passes the same assertions as
+test_streaming.py::test_idempotent_sink_skips_replayed_batch plus an
+equivalence sweep against a plain dict-and-marker model written in the
+test. If the script drifts (a typo in HINCRBY marshalling, an
+off-by-one in the ARGV stride, a broken marker compare) these fail."""
 
 from __future__ import annotations
 
@@ -53,24 +54,30 @@ def test_lua_negative_deltas_and_multi_field(miniredis):
 
 
 def test_lua_script_equals_python_twin_on_random_sequence(miniredis):
-    """Twin equivalence: an arbitrary interleaving of applies, replays
-    and stale ids leaves the Lua-backed store and the in-process Python
-    store in identical final states (hashes AND marker)."""
+    """Model equivalence: an arbitrary interleaving of applies, replays
+    and stale ids leaves the Lua-backed store and a plain Python model
+    (hashes plus one marker) in identical final states."""
     import random
 
     rng = random.Random(42)
-    lua, py = KVStore.instance(miniredis), KVStore()
+    lua = KVStore.instance(miniredis)
+    hashes: dict[str, dict[str, int]] = {}
+    marker = -1
     for _ in range(60):
         bid = rng.randint(0, 12)
         inc = [
             (f"day-{rng.randint(0, 3)}", f, rng.randint(-5, 20))
             for f in ("total", "success", "fee_cents")
         ]
-        assert lua.apply_batch(bid, inc, MARKER) == py.apply_batch(bid, inc, MARKER)
-    assert {k: lua.hgetall(k) for k in sorted(lua.keys())} == {
-        k: py.hgetall(k) for k in sorted(py.keys())
-    }
-    assert lua.last_applied(MARKER) == py.last_applied(MARKER)
+        applied = bid > marker
+        if applied:
+            for key, field, delta in inc:
+                h = hashes.setdefault(key, {})
+                h[field] = h.get(field, 0) + delta
+            marker = bid
+        assert lua.apply_batch(bid, inc, MARKER) == applied
+    assert {k: lua.hgetall(k) for k in sorted(lua.keys())} == hashes
+    assert lua.last_applied(MARKER) == marker
 
 
 def test_lua_store_through_foreachbatch_body(spark, miniredis):
@@ -166,21 +173,31 @@ def _inside_eval(r, cmd):
     return r.execute_command("EVAL", f"return redis.call({call})", "0", *cmd)
 
 
-@pytest.mark.parametrize("path", [_over_wire, _inside_eval], ids=["wire", "eval"])
+# path: (client for the test's server URL, how the command is sent)
+_PATHS = {
+    "wire": (MiniRedisClient.from_url, _over_wire),
+    "eval": (MiniRedisClient.from_url, _inside_eval),
+    "in-process": (lambda url: KVStore()._r, _over_wire),
+}
+
+
+@pytest.mark.parametrize("path", list(_PATHS))
 @pytest.mark.parametrize("case", list(_CASES))
 def test_command_behaves_as_redis_over_wire_and_inside_eval(miniredis, case, path):
-    """One command implementation serves both paths, with Redis's
-    integer and type rules. The stored hash is compared rather than a
-    successful reply: a script sees an integer reply as a Lua double,
-    as in Redis."""
+    """One command implementation serves every path, with Redis's
+    integer and type rules: over the wire, inside ``EVAL``, and through
+    the in-process store's socketless client. The stored hash is
+    compared rather than a successful reply: a script sees an integer
+    reply as a Lua double, as in Redis."""
     setup, cmd, error, after = _CASES[case]
-    with closing(MiniRedisClient.from_url(miniredis)) as r:
+    connect, send = _PATHS[path]
+    with closing(connect(miniredis)) as r:
         for c in setup:
             r.execute_command(*c)
         if error is None:
-            path(r, cmd)
+            send(r, cmd)
         else:
             with pytest.raises(ResponseError) as e:
-                path(r, cmd)
+                send(r, cmd)
             assert str(e.value).startswith(error)
         assert r.hgetall("h") == after

@@ -432,6 +432,57 @@ def test_order_sink_restart_counts_rejects_once(spark, tmp_path, miniredis):
     assert sorted(c for c in commits if not c.endswith(".crc")) == ["0", "1"]
 
 
+def test_order_sink_survives_connection_dropped_after_eval(spark, tmp_path):
+    """The server applies batch 0's ``EVALSHA`` and then closes the
+    connection before it replies, so the query fails on that batch. A
+    restart from the same checkpoint, in the same process and with the
+    same store URL, reconnects: batch 0 replays and is skipped by the
+    marker, and batch 1 applies once."""
+    from pyspark.errors import StreamingQueryException
+
+    from steaminganalysis_spark.backends.miniredis import MiniRedisServer
+
+    class DropAfterFirstEval(MiniRedisServer):
+        dropped = False
+
+        def dispatch(self, argv):
+            reply = super().dispatch(argv)
+            if argv[0].upper() == "EVALSHA" and not self.dropped:
+                self.dropped = True
+                raise ConnectionAbortedError("closed before the reply")
+            return reply
+
+    srv = DropAfterFirstEval().start()
+    src, ckpt = tmp_path / "src", str(tmp_path / "ckpt")
+    src.mkdir()
+    try:
+        (src / "part-0.json").write_text(_order("2024-03-01", "100", "1", "a") + "\n")
+        stream = classify_orders(
+            parse_order_json(spark.readStream.format("text").load(str(src)))
+        )
+        q = (
+            day_rollup_sink(stream, ckpt, day_rollup_delta, store_name=srv.url)
+            .trigger(availableNow=True)
+            .start()
+        )
+        with pytest.raises(StreamingQueryException, match="closed the connection"):
+            q.awaitTermination(120)
+        assert srv.dropped
+
+        second = [_order("2024-03-01", "2.50", "1", "b"), _order("2024-03-02", "7", "0", "c")]
+        (src / "part-1.json").write_text("\n".join(second) + "\n")
+        _drain_orders(spark, str(src), ckpt, srv.url)
+
+        store = KVStore.instance(srv.url)
+        assert {k: store.hgetall(k) for k in store.keys()} == {
+            KEY_PREFIX + "2024-03-01": {"total": 2, "success": 2, "fee_cents": 10250},
+            KEY_PREFIX + "2024-03-02": {"total": 1, "success": 0, "fee_cents": 0},
+        }
+    finally:
+        KVStore.reset(srv.url)
+        srv.stop()
+
+
 def test_streaming_metrics_listener_collects_batches(spark):
     """The BatchMetricsListener must see query start, per-batch progress
     with the right row counts, and termination."""
@@ -2077,8 +2128,7 @@ def test_snapshot_sinks_commit_then_crash_replay(spark):
     versions = sorted(_snap_versions(table))
     n_data = len(os.listdir(os.path.join(table, "data")))
     # crash window: commit landed, watermark did not
-    with store._mu:
-        store.kv[marker] = "0"
+    store._r.set(marker, "0")
     sink(spark.range(150, 170).selectExpr("id", "id * 3 AS v"), 1)  # replay
     assert sorted(_snap_versions(table)) == versions  # no duplicate commit
     assert len(os.listdir(os.path.join(table, "data"))) == n_data
@@ -2106,8 +2156,7 @@ def test_snapshot_sinks_commit_then_crash_replay(spark):
     csink(batch, 0)
     assert _snap_read(spark, table2).count() == 105
     versions2 = sorted(_snap_versions(table2))
-    with store2._mu:
-        store2.kv[marker2] = "-1"
+    store2._r.set(marker2, "-1")
     csink(batch, 0)  # commit-then-crash replay
     assert sorted(_snap_versions(table2)) == versions2
     assert store2.last_applied(marker2) == 0
@@ -2337,8 +2386,7 @@ def test_snapshot_schema_sink_rejection_and_crash_replay(spark):
         1,
     )
     versions = sorted(_snap_versions(table))
-    with store._mu:
-        store.kv[marker] = "0"  # the crash window
+    store._r.set(marker, "0")  # the crash window
     sink(
         spark.range(80, 90).selectExpr(
             "id", "CAST(id AS DOUBLE) AS v", "'a' AS tag"
@@ -2410,8 +2458,7 @@ def test_snapshot_partitioned_sink_replay_and_tuple_carry(spark):
     assert len(doc2["files"]) == n_files
 
     # (c) commit-then-crash replay
-    with store._mu:
-        store.kv[marker] = "0"
+    store._r.set(marker, "0")
     sink(mk(90, 120), 1)
     assert sorted(_snap_versions(table)) == versions
     assert store.last_applied(marker) == 1
