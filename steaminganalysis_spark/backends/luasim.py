@@ -1,59 +1,98 @@
-"""Lua 5.1-subset interpreter for the mini-Redis server's EVAL.
+"""Lua 5.1-subset compiler for the mini-Redis server's EVAL.
 
 Neither ``redis`` + a server, nor ``fakeredis``, nor ``lupa`` is
-installable here, so ``MiniRedisServer`` runs scripts with this tiny
-tree-walking interpreter for the subset Redis scripts use: local
-assignment, if/then/return, numeric for, ``or`` fallback,
-``tonumber``, ``#``, arithmetic/comparison, string/number literals,
-and ``redis.call``. It holds no keyspace and takes no lock: the caller
-passes the ``redis.call`` function, and the server passes one that
-runs its own command dispatch under its command lock, so a command
-behaves the same inside a script as over the wire.
+installable here, so ``MiniRedisServer`` runs scripts compiled by this
+module, for the subset Redis scripts use: local assignment,
+if/then/return, numeric for, ``and``/``or``, ``tonumber``, ``#``,
+arithmetic/comparison, string/number literals, ``--`` comments and
+``redis.call``. ``compile_script`` parses a script in one pass in which
+each grammar rule returns a closure with its operands bound in (there
+is no syntax tree); the server compiles a script once and keeps the
+result by SHA. The compiled script holds no keyspace and takes no lock:
+the server passes a ``redis.call`` that runs its own command dispatch
+under its command lock, so a command behaves the same inside a script
+as over the wire.
 
 Faithful Redis-Lua details that matter to the production script:
 - all Lua numbers are doubles (Lua 5.1);
 - a number returned from the script is truncated to an integer reply.
 
 This is deliberately NOT general Lua: an unsupported construct raises
-instead of guessing, so if the script grows past the subset the tests
-fail loudly and this interpreter must be extended.
+a ``SyntaxError`` naming ``lua-sim`` instead of guessing, so if the
+script grows past the subset the tests fail loudly and this compiler
+must be extended.
 """
 
 from __future__ import annotations
 
+import operator
 import re
 
+__all__ = ["compile_script"]
+
+# Whitespace and ``--`` comments are skipped possessively, so a comment
+# ending the script is never re-read as ``-`` operators.
 _TOKEN = re.compile(
-    r"\s*(?:(?P<num>\d+\.?\d*)|(?P<name>[A-Za-z_][A-Za-z0-9_]*)"
+    r"(?:\s+|--[^\n]*)*+(?:(?P<num>\d+\.?\d*)|(?P<name>[A-Za-z_][A-Za-z0-9_]*)"
     r"|(?P<str>'(?:[^'\\]|\\.)*')"
-    r"|(?P<op><=|>=|==|~=|[#=<>+\-*(),.\[\]]))"
+    r"|(?P<op><=|>=|==|~=|[#=<>+\-*(),.\[\]])|(?P<eof>\Z))"
 )
-_KEYWORDS = {"local", "if", "then", "end", "for", "do", "return", "or", "and"}
+# all of Lua 5.1's reserved words, so one outside the subset (``else``,
+# ``while``, ``true``...) fails to compile instead of reading as a variable
+_KEYWORDS = set("and break do else elseif end false for function if in local nil not"
+                " or repeat return then true until while".split())
 
 
 def _tokenize(src: str) -> list[tuple[str, str]]:
     toks, i = [], 0
-    src = "\n".join(line.split("--")[0] for line in src.splitlines())
-    while i < len(src):
+    while True:
         m = _TOKEN.match(src, i)
         if not m:
-            if src[i:].strip():
-                raise SyntaxError(f"lua-sim: cannot tokenize at {src[i:i+20]!r}")
-            break
-        i = m.end()
-        if m.lastgroup == "num":
-            toks.append(("num", m.group("num")))
-        elif m.lastgroup == "name":
-            w = m.group("name")
-            toks.append(("kw" if w in _KEYWORDS else "name", w))
-        elif m.lastgroup == "str":
-            toks.append(("str", m.group("str")[1:-1]))
-        else:
-            toks.append(("op", m.group("op")))
-    return toks
+            raise SyntaxError(f"lua-sim: cannot tokenize at {src[i:i+20].strip()!r}")
+        kind, text, i = m.lastgroup, m.group(m.lastgroup), m.end()
+        if kind == "eof":
+            return toks
+        if kind == "name" and text in _KEYWORDS:
+            kind = "kw"
+        toks.append((kind, text[1:-1] if kind == "str" else text))
 
 
-class _Parser:
+def _const(v):
+    return lambda env: v
+
+
+def _eq(a, b):
+    # Lua: values of different types are never equal (1 == '1' is false)
+    return type(a) is type(b) and a == b
+
+
+def _num(v):
+    # Lua coerces a numeric string operand of arithmetic to a number
+    return float(v) if type(v) is str else v
+
+
+_CMP = {"<=": operator.le, "<": operator.lt, ">=": operator.ge, ">": operator.gt,
+        "==": _eq, "~=": lambda a, b: not _eq(a, b)}
+_ARITH = {"+": operator.add, "-": operator.sub, "*": operator.mul}
+
+
+def _truthy(v):
+    # Lua: only nil and false are falsy (0 and '' are truthy)
+    return not (v is None or v is False)
+
+
+def _tonumber(v):
+    try:
+        return float(v) if type(v) in (float, str) else None  # false / nil / table → nil
+    except ValueError:
+        return None
+
+
+class _Compiler:
+    """Recursive descent over the tokens. A statement compiles to
+    ``f(env)``, which returns None to go on or ``(value,)`` to return;
+    an expression compiles to ``f(env) -> value``."""
+
     def __init__(self, toks):
         self.toks, self.i = toks, 0
 
@@ -69,228 +108,177 @@ class _Parser:
         t = self.next()
         if t[0] != kind or (val is not None and t[1] != val):
             raise SyntaxError(f"lua-sim: expected {kind} {val}, got {t}")
-        return t
+        return t[1]
 
     def block(self, stop=("end",)):
-        stats = []
-        while True:
-            k, v = self.peek()
-            if k == "eof" or (k == "kw" and v in stop):
-                return ("block", stats)
+        stats, stops = [], [("eof", "")] + [("kw", s) for s in stop]
+        while self.peek() not in stops:
             stats.append(self.stat())
 
+        def run(env):
+            for s in stats:
+                r = s(env)
+                if r is not None:
+                    return r
+        return run
+
     def stat(self):
-        k, v = self.peek()
+        k, v = self.next()
         if (k, v) == ("kw", "local"):
-            self.next()
-            name = self.expect("name")[1]
+            name = self.expect("name")
             self.expect("op", "=")
-            return ("local", name, self.expr())
+            e = self.expr()
+            return lambda env: env.__setitem__(name, e(env))
         if (k, v) == ("kw", "if"):
-            self.next()
             cond = self.expr()
             self.expect("kw", "then")
             body = self.block()
             self.expect("kw", "end")
-            return ("if", cond, body)
+            return lambda env: body(env) if _truthy(cond(env)) else None
         if (k, v) == ("kw", "for"):
-            self.next()
-            var = self.expect("name")[1]
-            self.expect("op", "=")
-            lo = self.expr()
-            self.expect("op", ",")
-            hi = self.expr()
-            step = ("num", "1")
-            if self.peek() == ("op", ","):
-                self.next()
-                step = self.expr()
-            self.expect("kw", "do")
-            body = self.block()
-            self.expect("kw", "end")
-            return ("for", var, lo, hi, step, body)
+            return self.numeric_for()
         if (k, v) == ("kw", "return"):
+            e = self.expr()
+            return lambda env: (e(env),)
+        self.i -= 1
+        e = self.prefix()
+        if not self.called:  # as in Lua, only a call can be a statement
+            raise SyntaxError(f"lua-sim: unexpected statement at {k} {v}")
+
+        def run(env):
+            e(env)
+        return run
+
+    def numeric_for(self):
+        var = self.expect("name")
+        self.expect("op", "=")
+        lo = self.expr()
+        self.expect("op", ",")
+        hi = self.expr()
+        step = _const(1.0)
+        if self.peek() == ("op", ","):
             self.next()
-            return ("return", self.expr())
-        return ("exprstat", self.expr())
+            step = self.expr()
+        self.expect("kw", "do")
+        body = self.block()
+        self.expect("kw", "end")
+
+        def run(env):
+            i, stop, st = lo(env), hi(env), step(env)
+            while (st > 0 and i <= stop) or (st < 0 and i >= stop):
+                env[var] = i
+                r = body(env)
+                if r is not None:
+                    return r
+                i += st
+        return run
 
     def expr(self):
-        return self.or_()
+        return self.binary(0)
 
-    def or_(self):
-        left = self.and_()
-        while self.peek() == ("kw", "or"):
-            self.next()
-            left = ("or", left, self.and_())
-        return left
+    # one precedence level per entry, loosest first, as in Lua
+    _LEVELS = ({"or"}, {"and"}, set(_CMP), {"+", "-"}, {"*"})
 
-    def and_(self):
-        left = self.cmp()
-        while self.peek() == ("kw", "and"):
-            self.next()
-            left = ("and", left, self.cmp())
-        return left
-
-    def cmp(self):
-        left = self.add()
-        while self.peek()[0] == "op" and self.peek()[1] in ("<=", "<", ">=", ">", "==", "~="):
+    def binary(self, level):
+        if level == len(self._LEVELS):
+            return self.unary()
+        left = self.binary(level + 1)
+        while self.peek()[0] in ("op", "kw") and self.peek()[1] in self._LEVELS[level]:
             op = self.next()[1]
-            left = ("cmp", op, left, self.add())
-        return left
-
-    def add(self):
-        left = self.unary()
-        while self.peek()[0] == "op" and self.peek()[1] in ("+", "-", "*"):
-            op = self.next()[1]
-            left = ("arith", op, left, self.unary())
+            left = _binary(op, left, self.binary(level + 1))
         return left
 
     def unary(self):
         if self.peek() == ("op", "#"):
             self.next()
-            return ("len", self.unary())
+            e = self.unary()
+            return lambda env: float(len(e(env)))
         return self.prefix()
 
     def prefix(self):
+        """A prefix expression; ``self.called`` says whether it ends in a call."""
         k, v = self.next()
-        if k == "num":
-            node = ("num", v)
-            return node
-        if k == "str":
-            return ("str", v)
-        if k == "op" and v == "(":
+        self.called = False
+        if k in ("num", "str"):
+            return _const(float(v) if k == "num" else v)
+        if (k, v) == ("op", "("):
             node = self.expr()
             self.expect("op", ")")
+            self.called = False
         elif k == "name":
-            node = ("var", v)
+            node = _var(v)
         else:
             raise SyntaxError(f"lua-sim: unexpected {k} {v}")
-        while True:
-            nk, nv = self.peek()
-            if (nk, nv) == ("op", "."):
-                self.next()
-                node = ("attr", node, self.expect("name")[1])
-            elif (nk, nv) == ("op", "["):
-                self.next()
-                idx = self.expr()
+        while self.peek() in (("op", "."), ("op", "["), ("op", "(")):
+            op = self.next()[1]
+            if op == ".":
+                node = _attr(node, self.expect("name"))
+            elif op == "[":
+                node = _index(node, self.expr())
                 self.expect("op", "]")
-                node = ("index", node, idx)
-            elif (nk, nv) == ("op", "("):
-                self.next()
-                args = []
-                if self.peek() != ("op", ")"):
-                    args.append(self.expr())
-                    while self.peek() == ("op", ","):
-                        self.next()
-                        args.append(self.expr())
-                self.expect("op", ")")
-                node = ("call", node, args)
             else:
-                return node
+                node = _call(node, self.args())
+            self.called = op == "("
+        return node
+
+    def args(self):
+        args = []
+        if self.peek() != ("op", ")"):
+            args.append(self.expr())
+            while self.peek() == ("op", ","):
+                self.next()
+                args.append(self.expr())
+        self.expect("op", ")")
+        return args
 
 
-class _Return(Exception):
-    def __init__(self, value):
-        self.value = value
+# Closure factories: each binds its operands, the compiled sub-expressions.
+def _binary(op, a, b):
+    if op == "or":
+        return lambda env: x if _truthy(x := a(env)) else b(env)
+    if op == "and":
+        return lambda env: b(env) if _truthy(x := a(env)) else x
+    if op in _CMP:
+        f = _CMP[op]
+        return lambda env: f(a(env), b(env))
+    f = _ARITH[op]
+    return lambda env: f(_num(a(env)), _num(b(env)))
 
 
-def _truthy(v):
-    # Lua: only nil and false are falsy (0 and '' are truthy)
-    return not (v is None or v is False)
-
-
-class LuaScriptRunner:
-    """EVAL(script, KEYS, ARGV) with ``redis.call`` bound to ``call``."""
-
-    def eval(self, script: str, keys: list[str], argv: list[str], call):
-        ast = _Parser(_tokenize(script)).block(stop=())
-        env = {
-            "KEYS": keys,
-            "ARGV": argv,
-            "tonumber": self._tonumber,
-            "redis": {"call": call},
-        }
+def _var(name):
+    def get(env):
         try:
-            self._exec(ast, env)
-        except _Return as r:
-            v = r.value
-            # Redis truncates ANY Lua number to an integer in the EVAL
-            # reply (fractional parts are dropped, not an error).
-            return int(v) if isinstance(v, float) else v
-        return None
+            return env[name]
+        except KeyError:
+            raise NameError(f"lua-sim: undefined {name}") from None
+    return get
 
-    @staticmethod
-    def _tonumber(v):
-        if isinstance(v, (int, float)):
-            return float(v)
-        if isinstance(v, str):
-            try:
-                return float(v)
-            except ValueError:
-                return None
-        return None  # false / nil → nil
 
-    def _exec(self, node, env):
-        kind = node[0]
-        if kind == "block":
-            for s in node[1]:
-                self._exec(s, env)
-        elif kind == "local":
-            env[node[1]] = self._eval(node[2], env)
-        elif kind == "if":
-            if _truthy(self._eval(node[1], env)):
-                self._exec(node[2], env)
-        elif kind == "for":
-            i = self._eval(node[2], env)
-            hi = self._eval(node[3], env)
-            step = self._eval(node[4], env)
-            while (step > 0 and i <= hi) or (step < 0 and i >= hi):
-                env[node[1]] = i
-                self._exec(node[5], env)
-                i += step
-        elif kind == "return":
-            raise _Return(self._eval(node[1], env))
-        elif kind == "exprstat":
-            self._eval(node[1], env)
-        else:
-            raise NotImplementedError(f"lua-sim stat: {kind}")
+def _attr(obj, name):
+    return lambda env: obj(env)[name]
 
-    def _eval(self, node, env):
-        kind = node[0]
-        if kind == "num":
-            return float(node[1])
-        if kind == "str":
-            return node[1]
-        if kind == "var":
-            if node[1] not in env:
-                raise NameError(f"lua-sim: undefined {node[1]}")
-            return env[node[1]]
-        if kind == "attr":
-            return self._eval(node[1], env)[node[2]]
-        if kind == "index":
-            seq = self._eval(node[1], env)
-            idx = int(self._eval(node[2], env))
-            return seq[idx - 1]  # Lua is 1-indexed
-        if kind == "call":
-            fn = self._eval(node[1], env)
-            args = [self._eval(a, env) for a in node[2]]
-            return fn(*args)
-        if kind == "len":
-            return float(len(self._eval(node[1], env)))
-        if kind == "or":
-            left = self._eval(node[1], env)
-            return left if _truthy(left) else self._eval(node[2], env)
-        if kind == "and":
-            left = self._eval(node[1], env)
-            return self._eval(node[2], env) if _truthy(left) else left
-        if kind == "cmp":
-            a, b = self._eval(node[2], env), self._eval(node[3], env)
-            return {
-                "<=": a <= b, "<": a < b, ">=": a >= b, ">": a > b,
-                "==": a == b, "~=": a != b,
-            }[node[1]]
-        if kind == "arith":
-            a, b = self._eval(node[2], env), self._eval(node[3], env)
-            a = float(a) if isinstance(a, str) else a
-            b = float(b) if isinstance(b, str) else b
-            return {"+": a + b, "-": a - b, "*": a * b}[node[1]]
-        raise NotImplementedError(f"lua-sim expr: {kind}")
+
+def _index(seq, idx):
+    def get(env):
+        s, i = seq(env), int(idx(env)) - 1  # Lua is 1-indexed
+        return s[i] if 0 <= i < len(s) else None  # past either end → nil
+    return get
+
+
+def _call(fn, args):
+    return lambda env: fn(env)(*[a(env) for a in args])
+
+
+def compile_script(src: str):
+    """Compile ``src`` once; the result runs it as EVAL with KEYS, ARGV
+    and ``redis.call`` bound to ``call``. Raises ``SyntaxError`` on a
+    construct outside the subset."""
+    body = _Compiler(_tokenize(src)).block(stop=())
+
+    def run(keys: list[str], argv: list[str], call):
+        r = body({"KEYS": keys, "ARGV": argv, "tonumber": _tonumber, "redis": {"call": call}})
+        v = r[0] if r is not None else None
+        # Redis truncates ANY Lua number to an integer in the EVAL
+        # reply (fractional parts are dropped, not an error).
+        return int(v) if isinstance(v, float) else v
+    return run

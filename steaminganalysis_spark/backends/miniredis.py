@@ -10,10 +10,11 @@ module implements exactly the command surface the KV sink uses
     SCRIPT LOAD  EVALSHA  EVAL  FLUSHALL
 
 ``MiniRedisServer`` is the only place a command is implemented. It owns
-one keyspace (key -> string or hash) under one command lock. EVAL/EVALSHA
-run the script with the in-repo Lua-5.1-subset interpreter
-(``steaminganalysis_spark.backends.luasim``), whose ``redis.call``
-runs the server's own dispatch, so a command inside a script behaves
+one keyspace (key -> string or hash) under one command lock. As Redis
+does, it compiles a script once, at SCRIPT LOAD or its first EVAL, and
+keeps it by SHA; the compiler is the in-repo Lua-5.1-subset one
+(``steaminganalysis_spark.backends.luasim``), whose ``redis.call`` runs
+the server's own dispatch, so a command inside a script behaves
 exactly as it does over the wire. As in Redis, a nil reply reaches the
 script as ``false``, an integer reply as a Lua number, and an error
 reply aborts the script; holding the command lock for the whole script
@@ -23,9 +24,10 @@ The server binds its socket only in ``start()``. ``MiniRedisClient``
 talks RESP2 to a started one; ``LocalMiniRedisClient`` (the in-process
 ``KVStore``'s client) runs an unstarted one's dispatch with no socket.
 Both implement the slice of the ``redis.Redis`` API that
-``RedisKVStore`` consumes (``from_url``, ``ping``, ``get``, ``setnx``,
-``hincrby``, ``hgetall``, ``scan_iter``, ``register_script``), so the
-sink code is byte-identical whether it talks to a real server or this one.
+``RedisKVStore`` consumes (``from_url``, ``get``, ``hgetall``,
+``scan_iter``, ``register_script``; tests and the benchmark also use
+``ping``, ``set``, ``setnx``, ``hincrby``), so the sink code is
+byte-identical whether it talks to a real server or this one.
 
 Scale note: this is a test/sandbox backend. On a real deployment the
 same ``RedisKVStore`` binds to redis-py against a production server;
@@ -40,8 +42,9 @@ import hashlib
 import socket
 import socketserver
 import threading
+from collections.abc import Callable
 
-from steaminganalysis_spark.backends.luasim import LuaScriptRunner
+from steaminganalysis_spark.backends.luasim import compile_script
 
 __all__ = ["MiniRedisServer", "MiniRedisClient", "LocalMiniRedisClient"]
 
@@ -205,8 +208,7 @@ class MiniRedisServer:
 
     def __init__(self, host: str = "127.0.0.1", port: int = 0) -> None:
         self._data: dict[str, str | dict[str, int]] = {}  # string or hash
-        self._lua = LuaScriptRunner()
-        self._scripts: dict[str, str] = {}
+        self._scripts: dict[str, Callable] = {}  # SHA -> compiled script
         self._mu = threading.Lock()
         self.host, self.port = host, port
 
@@ -292,17 +294,15 @@ class MiniRedisServer:
             return self._scan(args)
         if cmd == "SCRIPT":
             if args and args[0].upper() == "LOAD":
-                sha = hashlib.sha1(args[1].encode()).hexdigest()
-                self._scripts[sha] = args[1]
-                return sha
+                return self._load(args[1])
             raise ResponseError(f"ERR Unknown SCRIPT subcommand {args[:1]}")
         if cmd == "EVALSHA":
             script = self._scripts.get(args[0].lower())
             if script is None:
                 raise ResponseError("NOSCRIPT No matching script")
-            return self._eval(script, args[1:])
+            return self._run(script, args[1:])
         if cmd == "EVAL":
-            return self._eval(args[0], args[1:])
+            return self._run(self._scripts[self._load(args[0])], args[1:])
         raise ResponseError(f"ERR unknown command '{cmd}'")
 
     def _scan(self, args: list[str]):
@@ -335,10 +335,20 @@ class MiniRedisServer:
         next_cursor = cursor + count
         return [str(next_cursor if next_cursor < len(pool) else 0), matched]
 
-    def _eval(self, script: str, args: list[str]):
+    def _load(self, src: str) -> str:
+        """Compile a script once and keep it by SHA, as Redis does."""
+        sha = hashlib.sha1(src.encode()).hexdigest()
+        if sha not in self._scripts:
+            try:
+                self._scripts[sha] = compile_script(src)
+            except SyntaxError as e:
+                raise ResponseError(f"ERR Error compiling script: {e}") from None
+        return sha
+
+    def _run(self, script: Callable, args: list[str]):
         nkeys = int(args[0])
         keys, argv = args[1 : 1 + nkeys], args[1 + nkeys :]
-        v = self._lua.eval(script, keys, argv, self._script_call)
+        v = script(keys, argv, self._script_call)
         if type(v) is bool:  # Lua true → 1, false → nil (Redis semantics)
             return 1 if v else None
         return v
@@ -346,7 +356,7 @@ class MiniRedisServer:
     def _script_call(self, *argv):
         """``redis.call``: the script's command runs the same dispatch a
         wire command does (the command lock is already held). An error
-        reply raises out of the interpreter, aborting the script."""
+        reply raises out of the compiled script, aborting it."""
         v = self._dispatch_locked([a if type(a) is str else _lua_arg(a) for a in argv])
         if v is None:
             return False  # nil bulk reply → Lua false

@@ -73,8 +73,8 @@ return 1
 
 
 class RedisKVStore:
-    """The KV store contract (hincrby / hgetall / keys / setnx /
-    last_applied / apply_batch) over a ``redis.Redis``-API client.
+    """The KV store contract (hgetall / keys / last_applied /
+    apply_batch) over a ``redis.Redis``-API client.
     Prefers the real redis-py client when the package is present;
     otherwise falls back to the in-repo RESP2 socket client
     (`steaminganalysis_spark.backends.miniredis.MiniRedisClient`), so
@@ -93,9 +93,6 @@ class RedisKVStore:
             self._r = MiniRedisClient.from_url(url, decode_responses=True)
         self._apply = self._r.register_script(_APPLY_BATCH_LUA)
 
-    def hincrby(self, key: str, field: str, delta: int) -> int:
-        return int(self._r.hincrby(key, field, int(delta)))
-
     def hgetall(self, key: str) -> dict[str, int]:
         return {f: int(v) for f, v in self._r.hgetall(key).items()}
 
@@ -105,9 +102,6 @@ class RedisKVStore:
         # SCAN is at-least-once under concurrent writes: dedupe, or a
         # twice-returned key double-counts in any caller that sums.
         return list(dict.fromkeys(self._r.scan_iter(match="*", _type="hash")))
-
-    def setnx(self, key: str, value: str) -> bool:
-        return bool(self._r.setnx(key, value))
 
     def last_applied(self, marker_key: str) -> int:
         """Last committed batch id at ``marker_key`` (-1 if none)."""
@@ -234,9 +228,10 @@ def apply_day_rollup_batch(
     """
     store = KVStore.instance(store_name)
     marker = f"{KEY_PREFIX}last-applied-batch:{scope}"
-    # cheap pre-check: a replayed COMMITTED batch skips the whole Spark
-    # aggregation job (restarts always replay the last batch id); the
-    # authoritative check stays inside the atomic apply_batch.
+    # cheap pre-check: a batch whose EVAL committed but whose Spark
+    # commit did not (a crash in between) is replayed on restart, and
+    # skips the whole Spark aggregation job here; the authoritative
+    # check stays inside the atomic apply_batch.
     if batch_id <= store.last_applied(marker):
         return
     increments: list[tuple[str, str, int]] = []

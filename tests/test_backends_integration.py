@@ -44,10 +44,10 @@ def _exercise_contract(store) -> None:
     assert store.apply_batch(1, [(k1, "total", 5), (k1, "success", 1)], marker)
     assert store.hgetall(k1) == {"total": 7, "success": 1}
     assert store.last_applied(marker) == 1
-    # plain hincrby / setnx still behave
-    assert store.hincrby(k2, "total", -1) == 2
-    assert store.setnx(f"t-{run}-nx", "a")
-    assert not store.setnx(f"t-{run}-nx", "b")
+    # plain hincrby / setnx still behave at the store's client
+    assert store._r.hincrby(k2, "total", -1) == 2
+    assert store._r.setnx(f"t-{run}-nx", "a")
+    assert not store._r.setnx(f"t-{run}-nx", "b")
 
 
 def test_inprocess_store_apply_batch_contract():

@@ -9,7 +9,10 @@ passes the same assertions as
 test_streaming.py::test_idempotent_sink_skips_replayed_batch plus an
 equivalence sweep against a plain dict-and-marker model written in the
 test. If the script drifts (a typo in HINCRBY marshalling, an
-off-by-one in the ARGV stride, a broken marker compare) these fail."""
+off-by-one in the ARGV stride, a broken marker compare) these fail.
+Other scripts pin the compiler's Lua rules (equality across types,
+comments, precedence, refusal at SCRIPT LOAD) and that the server
+compiles each script once."""
 
 from __future__ import annotations
 
@@ -109,13 +112,66 @@ def test_lua_store_through_foreachbatch_body(spark, miniredis):
 
 
 def test_lua_runner_rejects_unsupported_constructs(miniredis):
-    """The interpreter is deliberately partial: growth of the script
+    """The compiler is deliberately partial: growth of the script
     past the supported subset must fail loudly with an error reply, not
     silently no-op, and the server keeps serving."""
     with closing(MiniRedisClient.from_url(miniredis)) as r:
         with pytest.raises(ResponseError, match="lua-sim"):
             r.execute_command("EVAL", "while true do end", "0")
+        # a reserved word outside the subset is refused, not read as a
+        # variable (which silently skipped this `else` branch)
+        with pytest.raises(ResponseError, match="lua-sim"):
+            r.execute_command("EVAL", "if 1 == 2 then return 1 else return 2 end", "0")
+        # as in Lua, an expression that is not a call is no statement
+        with pytest.raises(ResponseError, match="lua-sim"):
+            r.execute_command("EVAL", "local x = 1 x return 2", "0")
+        # as in Redis, a script that does not compile is refused at load
+        with pytest.raises(ResponseError, match="Error compiling script.*lua-sim"):
+            r.execute_command("SCRIPT", "LOAD", "while true do end")
         assert r.ping()
+
+
+# name: (script, KEYS, ARGV, Redis's reply)
+_SCRIPTS = {
+    "eq-across-types-false": ("return 1 == 'a'", [], [], None),
+    "ne-across-types-true": ("return 1 ~= 'a'", [], [], 1),
+    "dashes-in-string": (
+        "redis.call('SET', KEYS[1], 'a--b') return redis.call('GET', KEYS[1])",
+        ["k"], [], "a--b",
+    ),
+    "comment-line": ("-- a comment\nreturn ARGV[1] -- trailing", [], ["v"], "v"),
+    "mul-binds-tighter-than-add": ("return 1 + 2 * 3", [], [], 7),
+    "index-out-of-range-nil": ("return ARGV[0]", [], ["v"], None),
+}
+
+
+@pytest.mark.parametrize("case", list(_SCRIPTS))
+def test_lua_script_replies_as_redis(miniredis, case):
+    """Scripts outside the production one still get Lua's and Redis's
+    answer: equality across types, ``--`` inside a string literal,
+    comments, operator precedence and an index past the end."""
+    script, keys, argv, reply = _SCRIPTS[case]
+    with closing(MiniRedisClient.from_url(miniredis)) as r:
+        assert r.execute_command("EVAL", script, str(len(keys)), *keys, *argv) == reply
+
+
+def test_each_script_is_compiled_once(monkeypatch):
+    """The server keeps a script compiled by SHA: the store's SCRIPT
+    LOAD tokenises the apply script once, no apply_batch does it again,
+    and a repeated EVAL compiles its script on the first call only."""
+    from steaminganalysis_spark.backends import luasim
+
+    calls = []
+    tokenize = luasim._tokenize
+    monkeypatch.setattr(luasim, "_tokenize", lambda src: calls.append(src) or tokenize(src))
+    store = KVStore()
+    for bid in range(3):
+        assert store.apply_batch(bid, [("d", "total", 1)], MARKER)
+    assert len(calls) == 1
+    assert store.hgetall("d") == {"total": 3}
+    for _ in range(2):
+        assert store._r.execute_command("EVAL", "return 1", "0") == 1
+    assert len(calls) == 2
 
 
 def test_lua_eval_truncates_fractional_number_replies(miniredis):
