@@ -97,28 +97,44 @@ class _Error:
 
 
 class _Reader:
-    """Incremental RESP2 parser over a socket (blocking)."""
+    """Incremental RESP2 parser over a socket (blocking), shared by the
+    server and the client.
+
+    Parsing is linear in the bytes received: the reader advances an
+    offset into its buffer and drops the consumed prefix only when it
+    ``recv``s more, so a command of 30 000 arguments is not re-copied
+    once per argument."""
 
     def __init__(self, sock: socket.socket) -> None:
         self._sock = sock
-        self._buf = b""
+        self._buf = bytearray()
+        self._pos = 0  # start of the unparsed bytes in _buf
 
-    def _read_line(self) -> bytes | None:
-        while b"\r\n" not in self._buf:
-            chunk = self._sock.recv(65536)
-            if not chunk:
+    def _fill(self) -> bool:
+        """Receive more bytes; False ⇔ the peer closed."""
+        chunk = self._sock.recv(65536)
+        if not chunk:
+            return False
+        # each recv copies at most the unconsumed tail once: parse stays linear
+        del self._buf[: self._pos]
+        self._pos = 0
+        self._buf += chunk
+        return True
+
+    def _read_line(self) -> bytearray | None:
+        while (end := self._buf.find(b"\r\n", self._pos)) < 0:
+            if not self._fill():
                 return None  # peer closed
-            self._buf += chunk
-        line, self._buf = self._buf.split(b"\r\n", 1)
+        line = self._buf[self._pos : end]
+        self._pos = end + 2
         return line
 
-    def _read_exact(self, n: int) -> bytes:
-        while len(self._buf) < n + 2:  # payload + trailing \r\n
-            chunk = self._sock.recv(65536)
-            if not chunk:
+    def _read_exact(self, n: int) -> bytearray:
+        while len(self._buf) - self._pos < n + 2:  # payload + trailing \r\n
+            if not self._fill():
                 raise ConnectionError("peer closed mid-bulk")
-            self._buf += chunk
-        data, self._buf = self._buf[:n], self._buf[n + 2 :]
+        data = self._buf[self._pos : self._pos + n]
+        self._pos += n + 2
         return data
 
     def read_value(self):
@@ -149,7 +165,7 @@ class _Reader:
                     raise ConnectionError("peer closed mid-array")
                 out.append(v)
             return out
-        raise ResponseError(f"protocol error: unknown type byte {kind!r}")
+        raise ResponseError(f"protocol error: unknown type byte {bytes(kind)!r}")
 
 
 class ResponseError(Exception):
@@ -182,10 +198,13 @@ class _Handler(socketserver.BaseRequestHandler):
                 return
             if cmd is None:
                 return
+            # the reader already decoded each bulk argument to str
             if not isinstance(cmd, list) or not cmd:
                 reply = _Error("ERR protocol error: expected command array")
+            elif not all(type(a) is str for a in cmd):
+                reply = _Error("ERR protocol error: expected bulk string arguments")
             else:
-                reply = server.dispatch([str(a) for a in cmd])
+                reply = server.dispatch(cmd)
             try:
                 self.request.sendall(_encode_reply(reply))
             except OSError:
@@ -395,7 +414,7 @@ class _Script:
         self.sha = hashlib.sha1(script.encode()).hexdigest()
 
     def __call__(self, keys=(), args=()):
-        keys, args = list(keys), [str(a) for a in args]
+        keys = list(keys)  # args become text once, in execute_command
         try:
             return self._client.execute_command(
                 "EVALSHA", self.sha, str(len(keys)), *keys, *args
@@ -473,10 +492,12 @@ class MiniRedisClient:
         flat = self.execute_command("HGETALL", key)
         return dict(zip(flat[::2], flat[1::2]))
 
-    def scan_iter(self, match: str = "*", _type: str | None = None):
+    def scan_iter(self, match: str = "*", count: int | None = None, _type: str | None = None):
         cursor = "0"
         while True:
             cmd = ["SCAN", cursor, "MATCH", match]
+            if count:
+                cmd += ["COUNT", str(count)]
             if _type:
                 cmd += ["TYPE", _type]
             cursor, keys = self.execute_command(*cmd)

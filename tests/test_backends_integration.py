@@ -6,11 +6,17 @@ integration tests skip cleanly here and run wherever the backends exist
 contract tests on the in-process store and on the in-repo mini-Redis
 server over a socket always run — they pin the atomic apply-batch
 semantics of the one store implementation, whichever client it uses.
+The mini-Redis RESP reader is driven at chosen ``recv`` boundaries and
+at a peer's close, the server refuses a command whose arguments are
+not bulk strings, and ``keys()`` is held to a few ``SCAN`` pages.
 """
 
 from __future__ import annotations
 
+import itertools
 import os
+import socket
+import threading
 import uuid
 
 import pytest
@@ -234,3 +240,114 @@ def test_kvstore_instance_resolves_redis_urls_or_raises_cleanly(miniredis):
     # (exact kind: the in-process store is a RedisKVStore subclass)
     assert type(KVStore.instance(miniredis)) is RedisKVStore
     assert type(KVStore.instance(f"inproc-{uuid.uuid4().hex[:6]}")) is KVStore
+
+
+class _Pieces:
+    """The read end of a socket pair, handing the reader at most one
+    scheduled piece per ``recv`` (and waiting for all of it), so every
+    cut between ``recv``s lands where the schedule puts it. ``ends``
+    records where each ``recv`` stopped."""
+
+    def __init__(self, sock, sizes) -> None:
+        self._sock, self._sizes, self._left = sock, sizes, 0
+        self.ends = [0]
+
+    def recv(self, n: int) -> bytes:
+        if not self._left:
+            self._left = next(self._sizes)
+        chunk = self._sock.recv(min(n, self._left), socket.MSG_WAITALL)
+        self._left -= len(chunk)
+        self.ends.append(self.ends[-1] + len(chunk))
+        return chunk
+
+
+def test_reader_parses_a_command_cut_at_uneven_recv_boundaries():
+    """A ~30 000-argument command arrives in pieces of 1, 7 and 65 537
+    bytes. The cuts split a ``\\r\\n`` across two ``recv``s and fall
+    inside a bulk that contains ``\\r\\n`` and inside an empty bulk;
+    the reader still returns the exact argument list."""
+    from steaminganalysis_spark.backends.miniredis import _encode_command, _Reader
+
+    args = ["EVAL", "a\r\nb\r\n", "", *(f"k{i}" for i in range(30_000))]
+    data = _encode_command(args)
+    a, b = socket.socketpair()
+    with a, b:
+        def send() -> None:
+            a.sendall(data)
+            a.shutdown(socket.SHUT_WR)  # the last piece may be short
+
+        sender = threading.Thread(target=send)
+        sender.start()
+        pieces = _Pieces(b, itertools.cycle([1, 7] * 8 + [65_537]))
+        assert _Reader(pieces).read_value() == args
+        sender.join()
+    cuts = pieces.ends[1:-1]
+    assert any(data[c - 1 : c + 1] == b"\r\n" for c in cuts)
+    for payload in (b"$6\r\na\r\nb\r\n\r\n", b"$0\r\n\r\n"):
+        start = data.index(payload)
+        assert any(start < c < start + len(payload) for c in cuts)
+    assert max(c2 - c1 for c1, c2 in zip(cuts, cuts[1:])) == 65_536  # recv's cap
+
+
+def test_reader_closed_connection_and_nil():
+    """A peer that closes mid-bulk raises ``ConnectionError``; one that
+    closes at a value boundary reads as ``None``; ``$-1`` and ``*-1``
+    read as nil, also inside an array."""
+    from steaminganalysis_spark.backends.miniredis import _NIL, _Reader
+
+    a, b = socket.socketpair()
+    with a, b:
+        a.sendall(b"$-1\r\n*-1\r\n*3\r\n$-1\r\n$0\r\n\r\n$1\r\nx\r\n+OK\r\n")
+        a.close()
+        r = _Reader(b)
+        assert [r.read_value() for _ in range(4)] == [_NIL, _NIL, [_NIL, "", "x"], "OK"]
+        assert r.read_value() is None
+    a, b = socket.socketpair()
+    with a, b:
+        a.sendall(b"*2\r\n$3\r\nfoo\r\n$5\r\nab")
+        a.close()
+        with pytest.raises(ConnectionError, match="mid-bulk"):
+            _Reader(b).read_value()
+
+
+
+def test_server_refuses_a_command_with_non_bulk_arguments():
+    """A command's arguments must be bulk strings, as in Redis: an
+    integer among them is a protocol error, and the connection goes on
+    serving the next command."""
+    from steaminganalysis_spark.backends.miniredis import (
+        MiniRedisServer,
+        ResponseError,
+        _Reader,
+    )
+
+    server = MiniRedisServer().start()
+    try:
+        with socket.create_connection((server.host, server.port)) as s:
+            s.sendall(b"*2\r\n$3\r\nGET\r\n:5\r\n*1\r\n$4\r\nPING\r\n")
+            r = _Reader(s)
+            with pytest.raises(ResponseError, match="expected bulk string arguments"):
+                r.read_value()
+            assert r.read_value() == "PONG"
+    finally:
+        server.stop()
+
+def test_keys_pages_a_large_keyspace_in_few_scans(monkeypatch):
+    """``keys()`` asks ``SCAN`` for 1 000 keys a page: over the
+    3 652-day keyspace of the scattered benchmark it sends at most 4
+    ``SCAN``s, counted at the server's dispatch, and returns each hash
+    key once (the marker, a string key, is not one)."""
+    store = KVStore()
+    want = [f"{KEY_PREFIX}{i:05d}" for i in range(3_652)]
+    assert store.apply_batch(0, [(k, "total", 1) for k in want], "scan-marker")
+    server = store._r._server
+    dispatch, scans = server.dispatch, []
+
+    def counting(argv):
+        if argv[0].upper() == "SCAN":
+            scans.append(argv)
+        return dispatch(argv)
+
+    monkeypatch.setattr(server, "dispatch", counting)
+    assert sorted(store.keys()) == want
+    assert 1 <= len(scans) <= 4

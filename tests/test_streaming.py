@@ -483,6 +483,45 @@ def test_order_sink_survives_connection_dropped_after_eval(spark, tmp_path):
         srv.stop()
 
 
+def test_order_sink_sends_increments_sorted_by_day(spark, monkeypatch):
+    """The sink collects the delta columnar and sends its increments
+    sorted by day, with the rejected group once and last, so one
+    micro-batch sends the same argument list however Spark partitions
+    it (a replay sends the same ``ARGV``). A zero-row micro-batch (an
+    empty Arrow table) still advances the marker and writes no key."""
+    from steaminganalysis_spark.streaming.sinks import REJECTED_KEY, RedisKVStore
+
+    sent = []
+    apply = RedisKVStore.apply_batch
+
+    def spy(self, batch_id, increments, marker_key):
+        sent.append(list(increments))
+        return apply(self, batch_id, increments, marker_key)
+
+    monkeypatch.setattr(RedisKVStore, "apply_batch", spy)
+    days = [f"2020-{m:02d}-{d:02d}" for m in (3, 1, 2) for d in (9, 1, 28, 15)]
+    lines = [_order(day, "1.5", str(i % 2), f"o{i}") for i, day in enumerate(days * 3)]
+    raw = spark.createDataFrame([(v,) for v in lines + _BAD_RECORDS], "value string")
+    for shape in (raw.repartition(4), raw.coalesce(1)):
+        batch = classify_orders(parse_order_json(shape))
+        store_name = f"order-{uuid.uuid4().hex[:6]}"
+        apply_day_rollup_batch(batch, 0, day_rollup_delta, store_name=store_name)
+    assert sent[0] == sent[1]
+    keys = [k for k, _, _ in sent[0]]
+    assert keys == sorted(keys)
+    assert len(sent[0]) == 3 * len(days) + 1
+    rejected = [i for i in sent[0] if i[0] == REJECTED_KEY]
+    assert rejected == [(REJECTED_KEY, "total", len(_BAD_RECORDS))]
+
+    store_name = f"order-{uuid.uuid4().hex[:6]}"
+    empty = classify_orders(parse_order_json(raw.limit(0)))
+    apply_day_rollup_batch(empty, 5, day_rollup_delta, store_name=store_name)
+    assert sent[2] == []
+    store = KVStore.instance(store_name)
+    assert store.last_applied(f"{KEY_PREFIX}last-applied-batch:default") == 5
+    assert store.keys() == []
+
+
 def test_streaming_metrics_listener_collects_batches(spark):
     """The BatchMetricsListener must see query start, per-batch progress
     with the right row counts, and termination."""
