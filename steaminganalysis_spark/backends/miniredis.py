@@ -325,14 +325,11 @@ class MiniRedisServer:
         raise ResponseError(f"ERR unknown command '{cmd}'")
 
     def _scan(self, args: list[str]):
-        # Positional cursor over the key pool re-derived per page. A
-        # real Redis cursor is a reverse-bit iterator with an
-        # at-least-once guarantee under concurrent mutation; this index
-        # cursor only guarantees full coverage when the keyspace is not
-        # mutated between pages — fine for the single-threaded
-        # drain-after-batch callers here.
-        cursor = int(args[0])
-        match, type_filter, count = "*", None, 10
+        # The whole iteration in one reply, cursor 0 next: COUNT is only
+        # a hint in Redis, and every caller loops until cursor 0. One
+        # pass over the keyspace under one hold of the lock also sees
+        # no mutation between pages, since there are none.
+        match, type_filter = "*", None
         i = 1
         while i < len(args):
             opt = args[i].upper()
@@ -340,19 +337,15 @@ class MiniRedisServer:
                 match, i = args[i + 1], i + 2
             elif opt == "TYPE":
                 type_filter, i = args[i + 1].lower(), i + 2
-            elif opt == "COUNT":
-                count, i = int(args[i + 1]), i + 2
+            elif opt == "COUNT" and args[i + 1].isdigit():  # a hint only
+                i += 2
             else:
                 raise ResponseError(f"ERR syntax error near '{args[i]}'")
-        if type_filter is None:
-            pool = list(self._data)
-        else:
-            want = dict if type_filter == "hash" else str
-            pool = [k for k, v in self._data.items() if isinstance(v, want)]
-        window = pool[cursor : cursor + count]
-        matched = [k for k in window if fnmatch.fnmatchcase(k, match)]
-        next_cursor = cursor + count
-        return [str(next_cursor if next_cursor < len(pool) else 0), matched]
+        want = {None: (dict, str), "hash": dict, "string": str}.get(type_filter, ())
+        return ["0", [
+            k for k, v in self._data.items()
+            if isinstance(v, want) and fnmatch.fnmatchcase(k, match)
+        ]]
 
     def _load(self, src: str) -> str:
         """Compile a script once and keep it by SHA, as Redis does."""

@@ -532,11 +532,11 @@ def cluster_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
 # build time, and append the batch as an immutable LSM-style delta run
 # partitioned by list_id. Readers union the base index with the
 # committed runs; q_compact_small_files is the compaction story when
-# runs accumulate. Exactly-once across crash-replays comes from the
-# same KVStore watermark discipline as the KV sink and the streaming MV
-# (streaming/mv.py): the delta run for batch b is (re)written BEFORE
-# the watermark advances, and a replayed committed id returns without
-# touching the index.
+# runs accumulate. Exactly-once across crash-replays comes from
+# ``sinks.exactly_once``, the protocol every foreachBatch body shares:
+# the delta run for batch b is (re)written BEFORE the watermark
+# advances, and a replayed committed id is skipped without touching
+# the index.
 
 IVF_STREAM_MARKER = "ann-last-applied"
 IVF_COMPACT_MARKER = "ann-compacted-through"
@@ -556,21 +556,18 @@ def append_ivf_batch(
     batch id is a no-op, and a crash between write and commit replays
     into an identical overwrite (the run is a pure function of
     (model, batch))."""
-    from steaminganalysis_spark.streaming.sinks import KEY_PREFIX, KVStore
+    from steaminganalysis_spark.streaming.sinks import KEY_PREFIX, exactly_once
 
-    spark = batch_df.sparkSession
-    store = KVStore.instance(store_name)
-    marker = f"{KEY_PREFIX}{IVF_STREAM_MARKER}:{scope}"
-    if batch_id <= store.last_applied(marker):
-        return
-    cdf = spark.read.parquet(f"{index_dir}/centroids")
-    assigned = _assign(batch_df, cdf, keep=1).select(
-        "vec_id", "v", "norm", F.col("cid").alias("list_id")
-    )
-    assigned.write.mode("overwrite").partitionBy("list_id").parquet(
-        f"{index_dir}/delta-v{batch_id}"
-    )
-    store.apply_batch(batch_id, [], marker)
+    def append() -> None:
+        cdf = batch_df.sparkSession.read.parquet(f"{index_dir}/centroids")
+        assigned = _assign(batch_df, cdf, keep=1).select(
+            "vec_id", "v", "norm", F.col("cid").alias("list_id")
+        )
+        assigned.write.mode("overwrite").partitionBy("list_id").parquet(
+            f"{index_dir}/delta-v{batch_id}"
+        )
+
+    exactly_once(store_name, f"{KEY_PREFIX}{IVF_STREAM_MARKER}:{scope}", batch_id, append)
 
 
 def committed_ivf_corpus(
@@ -591,27 +588,6 @@ def committed_ivf_corpus(
     for b in range(compacted + 1, cur + 1):
         out = out.unionByName(spark.read.parquet(f"{index_dir}/delta-v{b}"))
     return out
-
-
-def ivf_index_sink(
-    vec_stream: DataFrame,
-    index_dir: str,
-    checkpoint_dir: str,
-    store_name: str,
-):
-    """Attach streaming IVF maintenance to a vector stream."""
-    from steaminganalysis_spark.streaming.sinks import checkpoint_scope
-
-    scope = checkpoint_scope(checkpoint_dir)
-    return (
-        vec_stream.writeStream.outputMode("append")
-        .foreachBatch(
-            lambda df, bid: append_ivf_batch(
-                df, bid, index_dir, store_name, scope
-            )
-        )
-        .option("checkpointLocation", checkpoint_dir)
-    ), scope
 
 
 @query("q_stream_ann_index")  # rows-only: assignments depend on k-means floats
@@ -667,16 +643,19 @@ def stream_ann_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
     )
+    from steaminganalysis_spark.streaming.sinks import KVStore, exactly_once_sink
+
     store_name = f"stream_ann_{run}"
-    writer, scope = ivf_index_sink(
-        stream, index_dir, os.path.join(tmp, f"ckpt_{run}"), store_name
+    writer, scope = exactly_once_sink(
+        stream,
+        os.path.join(tmp, f"ckpt_{run}"),
+        lambda df, bid, scope: append_ivf_batch(df, bid, index_dir, store_name, scope),
     )
     q = writer.start()
     try:
         q.processAllAvailable()
     finally:
         q.stop()
-    from steaminganalysis_spark.streaming.sinks import KVStore
 
     out = (
         committed_ivf_corpus(spark, index_dir, store_name, scope)

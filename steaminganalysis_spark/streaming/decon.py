@@ -10,8 +10,8 @@ only the arriving micro-batch, probes it against the static
 benchmark-sized eval shingle set (broadcast — it never changes between
 benchmark releases), and appends the flagged pairs transactionally.
 
-Why this is exactly-once (the shared KV-sink discipline,
-streaming/mv.py / streaming/scd2.py):
+Why this is exactly-once (``sinks.exactly_once``, the protocol every
+foreachBatch body shares):
 
 - Containment is per (train doc, eval set) and documents never span
   micro-batches, so each batch's flags are a pure function of the
@@ -19,11 +19,11 @@ streaming/mv.py / streaming/scd2.py):
   over the union (the stream≡batch contract; the registered key's
   oracle IS q_decontaminate_fuzzy's oracle).
 - Each batch writes a self-contained ``b{batch_id}`` parquet dir and
-  THEN advances the watermark through ``KVStore.apply_batch``: a crash
-  between the two replays the batch, which rewrites an identical dir
-  (mode=overwrite, pure function); replayed ids at or below the
-  watermark return untouched; dirs above the watermark are invisible
-  to readers (torn writes excluded).
+  THEN the watermark advances: a crash between the two replays the
+  batch, which rewrites an identical dir (mode=overwrite, pure
+  function); replayed ids at or below the watermark are skipped
+  untouched; dirs above the watermark are invisible to readers (torn
+  writes excluded).
 
 Scale shape: per increment the corpus-side work is one shingle pass
 over the BATCH (8-byte xxhash64 keys — shingle strings never shuffle)
@@ -40,7 +40,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from steaminganalysis_spark.streaming.sinks import KEY_PREFIX, KVStore
+from steaminganalysis_spark.streaming.sinks import KEY_PREFIX, KVStore, exactly_once
 
 FLAGS_SCHEMA = (
     "train_doc long, eval_doc long, shared long,"
@@ -68,51 +68,26 @@ def flag_batch(
     from steaminganalysis_spark.functions.text import shingle_hashes
     from steaminganalysis_spark.operators.extras import DECON_FUZZY_PPM
 
-    store = KVStore.instance(store_name)
-    marker = f"{KEY_PREFIX}decon-last-applied:{scope}"
-    if batch_id <= store.last_applied(marker):
-        return  # replayed committed batch — dir already final
-    tr = shingle_hashes(batch_df, n=5).select(
-        F.col("doc_id").alias("train_doc"), "h"
-    )
-    flags = (
-        tr.join(F.broadcast(eval_sh), "h")
-        .groupBy("train_doc", "eval_doc")
-        .agg(F.count("*").alias("shared"))
-        .join(F.broadcast(evsz), "eval_doc")
-        .withColumn(
-            "containment_ppm", F.expr("(shared * 1000000) DIV eval_ngrams")
+    def flag() -> None:
+        tr = shingle_hashes(batch_df, n=5).select(
+            F.col("doc_id").alias("train_doc"), "h"
         )
-        .filter(F.col("containment_ppm") >= DECON_FUZZY_PPM)
-        .select(
-            "train_doc", "eval_doc", "shared", "eval_ngrams", "containment_ppm"
-        )
-    )
-    flags.write.mode("overwrite").parquet(_batch_dir(out_dir, batch_id))
-    store.apply_batch(batch_id, [], marker)
-
-
-def decon_sink(
-    doc_stream: DataFrame,
-    eval_sh: DataFrame,
-    evsz: DataFrame,
-    out_dir: str,
-    checkpoint_dir: str,
-    store_name: str,
-):
-    """Attach the incremental decon guard to a document stream."""
-    from steaminganalysis_spark.streaming.sinks import checkpoint_scope
-
-    scope = checkpoint_scope(checkpoint_dir)
-    return (
-        doc_stream.writeStream.outputMode("append")
-        .foreachBatch(
-            lambda df, bid: flag_batch(
-                df, bid, eval_sh, evsz, out_dir, store_name, scope
+        flags = (
+            tr.join(F.broadcast(eval_sh), "h")
+            .groupBy("train_doc", "eval_doc")
+            .agg(F.count("*").alias("shared"))
+            .join(F.broadcast(evsz), "eval_doc")
+            .withColumn(
+                "containment_ppm", F.expr("(shared * 1000000) DIV eval_ngrams")
+            )
+            .filter(F.col("containment_ppm") >= DECON_FUZZY_PPM)
+            .select(
+                "train_doc", "eval_doc", "shared", "eval_ngrams", "containment_ppm"
             )
         )
-        .option("checkpointLocation", checkpoint_dir)
-    ), scope
+        flags.write.mode("overwrite").parquet(_batch_dir(out_dir, batch_id))
+
+    exactly_once(store_name, f"{KEY_PREFIX}decon-last-applied:{scope}", batch_id, flag)
 
 
 def read_flags(

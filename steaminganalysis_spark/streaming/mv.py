@@ -7,9 +7,9 @@ maintained the other way: deltas arrive continuously and each
 micro-batch must fold into the stored view transactionally. This
 module is that operator: ``foreachBatch`` aggregates the batch to MV
 grain and merges it into the stored view by monoid addition, writing
-a new table version and committing the batch watermark through the
-same atomic ``KVStore.apply_batch`` step as the KV sink and the SCD2
-merge (streaming/scd2.py — the shared exactly-once discipline).
+a new table version and committing the batch watermark through
+``sinks.exactly_once``, the protocol the KV sink and the SCD2 merge
+(streaming/scd2.py) share.
 
 Scale shape (100 TB contract):
 
@@ -24,18 +24,25 @@ Scale shape (100 TB contract):
   identical version (the merge is a pure function of (previous
   version, batch)) — idempotent by construction.
 - Replayed batch ids at or below the watermark return without
-  touching the table (the idempotent-sink guard), so at-least-once
+  touching the table (``exactly_once`` skips them), so at-least-once
   delivery never double-counts a delta.
 """
 
 from __future__ import annotations
 
 import os
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from steaminganalysis_spark.streaming.sinks import KEY_PREFIX, KVStore
+from steaminganalysis_spark.streaming.sinks import (
+    KEY_PREFIX,
+    KVStore,
+    exactly_once,
+    read_version,
+    version_dir,
+)
 
 MV_SCHEMA = "day string, event_type string, n_events long, total_cents long"
 
@@ -76,10 +83,6 @@ def merge_mv(base: DataFrame, delta: DataFrame) -> DataFrame:
     )
 
 
-def _version_dir(table_dir: str, batch_id: int) -> str:
-    return os.path.join(table_dir, f"v{batch_id}")
-
-
 def read_mv(
     spark: SparkSession, table_dir: str, store_name: str, scope: str
 ) -> DataFrame:
@@ -91,23 +94,14 @@ def read_mv(
     d = (
         os.path.join(table_dir, "base")
         if cur < 0
-        else _version_dir(table_dir, cur)
+        else version_dir(table_dir, cur)
     )
     return spark.read.schema(MV_SCHEMA).parquet(d)
 
 
-def read_mv_at(spark: SparkSession, table_dir: str, batch_id: int) -> DataFrame:
-    """TIME TRAVEL: the view as of an earlier committed batch — every
-    merge writes a full self-contained version before advancing the
-    watermark, so any version at or below it is a consistent snapshot
-    (same contract as ``scd2.read_changes_at``; a retention sweep
-    would prune old versions on a real deployment). Versions above the
-    committed watermark may be torn writes from a crashed batch, so an
-    absent directory is an error, not an empty frame."""
-    d = _version_dir(table_dir, batch_id)
-    if not os.path.isdir(d):
-        raise FileNotFoundError(f"no committed version {batch_id} at {table_dir}")
-    return spark.read.schema(MV_SCHEMA).parquet(d)
+# TIME TRAVEL: the view as of an earlier committed batch
+# (``sinks.read_version``, as ``scd2.read_changes_at``).
+read_mv_at = partial(read_version, schema=MV_SCHEMA)
 
 
 def merge_mv_batch(
@@ -120,15 +114,13 @@ def merge_mv_batch(
     """foreachBatch body: aggregate the micro-batch to MV grain, merge
     into the committed view, write version ``v{batch_id}``, then
     advance the watermark (see module docstring for the crash story)."""
-    spark = batch_df.sparkSession
-    store = KVStore.instance(store_name)
-    marker = f"{KEY_PREFIX}mv-last-applied:{scope}"
-    if batch_id <= store.last_applied(marker):
-        return  # replayed committed batch — version dir already final
-    prior = read_mv(spark, table_dir, store_name, scope)
-    merged = merge_mv(prior, daily_rollup_mv(batch_df))
-    merged.write.mode("overwrite").parquet(_version_dir(table_dir, batch_id))
-    store.apply_batch(batch_id, [], marker)
+
+    def merge() -> None:
+        prior = read_mv(batch_df.sparkSession, table_dir, store_name, scope)
+        merged = merge_mv(prior, daily_rollup_mv(batch_df))
+        merged.write.mode("overwrite").parquet(version_dir(table_dir, batch_id))
+
+    exactly_once(store_name, f"{KEY_PREFIX}mv-last-applied:{scope}", batch_id, merge)
 
 
 def merge_mv_backfill_batch(
@@ -150,60 +142,17 @@ def merge_mv_backfill_batch(
     aggregate cardinality + a union — history is still never re-read.
     Same crash story as ``merge_mv_batch``: version write, then
     watermark."""
-    spark = batch_df.sparkSession
-    store = KVStore.instance(store_name)
-    marker = f"{KEY_PREFIX}mv-last-applied:{scope}"
-    if batch_id <= store.last_applied(marker):
-        return  # replayed committed batch — version dir already final
-    prior = read_mv(spark, table_dir, store_name, scope)
-    normal = batch_df.filter(F.col("backfill") == 0).drop("backfill")
-    bf = batch_df.filter(F.col("backfill") == 1).drop("backfill")
-    merged = merge_mv(prior, daily_rollup_mv(normal))
-    corrected = daily_rollup_mv(bf).localCheckpoint(eager=True)
-    days = corrected.select("day").distinct()
-    merged = merged.join(F.broadcast(days), "day", "anti").unionByName(
-        corrected
-    )
-    merged.write.mode("overwrite").parquet(_version_dir(table_dir, batch_id))
-    store.apply_batch(batch_id, [], marker)
 
-
-def mv_backfill_sink(
-    event_stream: DataFrame,
-    table_dir: str,
-    checkpoint_dir: str,
-    store_name: str,
-):
-    """Attach the delta+backfill merge to an event stream whose rows
-    carry the ``backfill`` flag column."""
-    from steaminganalysis_spark.streaming.sinks import checkpoint_scope
-
-    scope = checkpoint_scope(checkpoint_dir)
-    return (
-        event_stream.writeStream.outputMode("append")
-        .foreachBatch(
-            lambda df, bid: merge_mv_backfill_batch(
-                df, bid, table_dir, store_name, scope
-            )
+    def merge() -> None:
+        prior = read_mv(batch_df.sparkSession, table_dir, store_name, scope)
+        normal = batch_df.filter(F.col("backfill") == 0).drop("backfill")
+        bf = batch_df.filter(F.col("backfill") == 1).drop("backfill")
+        merged = merge_mv(prior, daily_rollup_mv(normal))
+        corrected = daily_rollup_mv(bf).localCheckpoint(eager=True)
+        days = corrected.select("day").distinct()
+        merged = merged.join(F.broadcast(days), "day", "anti").unionByName(
+            corrected
         )
-        .option("checkpointLocation", checkpoint_dir)
-    ), scope
+        merged.write.mode("overwrite").parquet(version_dir(table_dir, batch_id))
 
-
-def mv_sink(
-    event_stream: DataFrame,
-    table_dir: str,
-    checkpoint_dir: str,
-    store_name: str,
-):
-    """Attach the incremental MV merge to an event stream."""
-    from steaminganalysis_spark.streaming.sinks import checkpoint_scope
-
-    scope = checkpoint_scope(checkpoint_dir)
-    return (
-        event_stream.writeStream.outputMode("append")
-        .foreachBatch(
-            lambda df, bid: merge_mv_batch(df, bid, table_dir, store_name, scope)
-        )
-        .option("checkpointLocation", checkpoint_dir)
-    ), scope
+    exactly_once(store_name, f"{KEY_PREFIX}mv-last-applied:{scope}", batch_id, merge)

@@ -18,8 +18,9 @@ scale this would be a bucketed table (bucketBy(band, sig)) or a KV
 store so the probe is a shuffle-free lookup; the batch-partitioned
 parquet stand-in keeps the exact same dataflow. Replays are idempotent
 by construction: batch-id-scoped overwrite writes + a last-applied
-watermark committed only after the writes (same contract as the KV
-sink's atomic apply_batch).
+watermark committed only after the writes, through
+``sinks.exactly_once`` (the protocol every foreachBatch body shares),
+scoped to the stream's checkpoint.
 """
 
 from __future__ import annotations
@@ -30,7 +31,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from steaminganalysis_spark.functions import minhash_band_signatures
-from steaminganalysis_spark.streaming.sinks import KVStore
+from steaminganalysis_spark.streaming.sinks import (
+    KEY_PREFIX,
+    checkpoint_scope,
+    exactly_once,
+    exactly_once_sink,
+)
 
 __all__ = ["NearDupIndex", "near_dup_sink"]
 
@@ -38,26 +44,27 @@ __all__ = ["NearDupIndex", "near_dup_sink"]
 class NearDupIndex:
     """Persistent LSH signature index + match log for one stream."""
 
-    def __init__(self, state_dir: str, store_name: str):
+    def __init__(self, state_dir: str, store_name: str, scope: str):
         self.sig_dir = os.path.join(state_dir, "signatures")
         self.match_dir = os.path.join(state_dir, "matches")
         self.store_name = store_name  # batch-id guard store
-
-    _MARKER = "neardup-last-applied-batch"
+        self.marker = f"{KEY_PREFIX}neardup-last-applied:{scope}"
 
     def process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
-        """Index one micro-batch, replay-safe with no guard-first crash
-        window: both writes go to batch-id-scoped partitions with
-        overwrite (a crash-replay of an uncommitted batch rewrites the
-        same files — idempotent by construction), the prior-index probe
+        """Index one micro-batch through ``sinks.exactly_once``: both
+        writes go to batch-id-scoped partitions with overwrite (a
+        crash-replay of an uncommitted batch rewrites the same files —
+        idempotent by construction), the prior-index probe
         partition-prunes to batch_id < current (so a half-written
-        current partition can never self-match), and the last-applied
-        watermark advances only AFTER both writes land (the commit
-        point). A replay of a committed batch is skipped whole."""
+        current partition can never self-match), and the watermark
+        advances only AFTER both writes land (the commit point). A
+        replay of a committed batch is skipped whole."""
+        exactly_once(
+            self.store_name, self.marker, batch_id, lambda: self._index(batch_df, batch_id)
+        )
+
+    def _index(self, batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        store = KVStore.instance(self.store_name)
-        if batch_id <= store.last_applied(self._MARKER):
-            return  # replayed, already-committed batch: exactly-once effect
         sigs = minhash_band_signatures(batch_df).persist()
         try:
             # candidates within the arriving batch itself
@@ -105,7 +112,6 @@ class NearDupIndex:
             )
         finally:
             sigs.unpersist()
-        store.apply_batch(batch_id, [], self._MARKER)  # commit point
 
     def matches(self, spark: SparkSession) -> DataFrame:
         return spark.read.parquet(self.match_dir)
@@ -116,11 +122,15 @@ class NearDupIndex:
 
 def near_dup_sink(doc_stream: DataFrame, state_dir: str, checkpoint_dir: str):
     """Attach the incremental near-dup index to a streaming frame with
-    (doc_id, text) columns; returns (DataStreamWriter, NearDupIndex)."""
-    idx = NearDupIndex(state_dir, store_name=f"neardup-{os.path.basename(state_dir)}")
-    writer = (
-        doc_stream.writeStream.outputMode("append")
-        .foreachBatch(idx.process_batch)
-        .option("checkpointLocation", checkpoint_dir)
+    (doc_id, text) columns; returns (DataStreamWriter, NearDupIndex).
+    The index's marker is scoped to ``checkpoint_dir``, so streams whose
+    state dirs share a basename (and so a store) keep apart."""
+    idx = NearDupIndex(
+        state_dir,
+        f"neardup-{os.path.basename(state_dir)}",
+        checkpoint_scope(checkpoint_dir),
+    )
+    writer, _ = exactly_once_sink(
+        doc_stream, checkpoint_dir, lambda df, bid, _scope: idx.process_batch(df, bid)
     )
     return writer, idx

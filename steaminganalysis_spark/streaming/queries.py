@@ -391,13 +391,8 @@ def stream_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
     )
-    # state-dir basename doubles as the KV guard-store name — make it
-    # unique per invocation or a rerun in the same session would see
-    # the previous run's batch watermark and skip every batch.
     writer, idx = near_dup_sink(
-        stream,
-        os.path.join(tmp, f"state-{os.path.basename(tmp)}"),
-        os.path.join(tmp, "ckpt"),
+        stream, os.path.join(tmp, "state"), os.path.join(tmp, "ckpt")
     )
     q = writer.start()
     try:
@@ -620,10 +615,10 @@ def stream_cdc_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
     from steaminganalysis_spark.scratch import scratch_dir
     from steaminganalysis_spark.streaming.scd2 import (
         intervals_from_changes,
+        merge_cdc_batch,
         read_changes,
-        scd2_sink,
     )
-    from steaminganalysis_spark.streaming.sinks import KVStore
+    from steaminganalysis_spark.streaming.sinks import KVStore, exactly_once_sink
 
     run = uuid.uuid4().hex[:8]
     tmp = scratch_dir("cdc_scd2")
@@ -656,8 +651,10 @@ def stream_cdc_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     table_dir = os.path.join(tmp, "table")
     store_name = f"cdc_scd2_{run}"
-    writer, scope = scd2_sink(
-        stream, table_dir, os.path.join(tmp, f"ckpt_{run}"), store_name
+    writer, scope = exactly_once_sink(
+        stream,
+        os.path.join(tmp, f"ckpt_{run}"),
+        lambda df, bid, scope: merge_cdc_batch(df, bid, table_dir, store_name, scope),
     )
     q = writer.start()
     try:
@@ -1298,10 +1295,10 @@ def stream_mv_backfill(spark: SparkSession, sf_dir: str) -> DataFrame:
     from steaminganalysis_spark.scratch import scratch_dir
     from steaminganalysis_spark.streaming.mv import (
         daily_rollup_mv,
-        mv_backfill_sink,
+        merge_mv_backfill_batch,
         read_mv,
     )
-    from steaminganalysis_spark.streaming.sinks import KVStore
+    from steaminganalysis_spark.streaming.sinks import KVStore, exactly_once_sink
 
     run = uuid.uuid4().hex[:8]
     tmp = scratch_dir("stream_mv_backfill")
@@ -1338,8 +1335,12 @@ def stream_mv_backfill(spark: SparkSession, sf_dir: str) -> DataFrame:
         .parquet(src)
     )
     store_name = f"stream_mv_bf_{run}"
-    writer, scope = mv_backfill_sink(
-        stream, table_dir, os.path.join(tmp, f"ckpt_{run}"), store_name
+    writer, scope = exactly_once_sink(
+        stream,
+        os.path.join(tmp, f"ckpt_{run}"),
+        lambda df, bid, scope: merge_mv_backfill_batch(
+            df, bid, table_dir, store_name, scope
+        ),
     )
     q = writer.start()
     try:
@@ -1368,7 +1369,8 @@ def _run_mv_maintenance_stream(spark, sf_dir):
 
     from steaminganalysis_spark.operators.storage import MV_CUTOFF
     from steaminganalysis_spark.scratch import scratch_dir
-    from steaminganalysis_spark.streaming.mv import daily_rollup_mv, mv_sink
+    from steaminganalysis_spark.streaming.mv import daily_rollup_mv, merge_mv_batch
+    from steaminganalysis_spark.streaming.sinks import exactly_once_sink
 
     run = uuid.uuid4().hex[:8]
     tmp = scratch_dir("stream_mv")
@@ -1405,8 +1407,10 @@ def _run_mv_maintenance_stream(spark, sf_dir):
         .parquet(src)
     )
     store_name = f"stream_mv_{run}"
-    writer, scope = mv_sink(
-        stream, table_dir, os.path.join(tmp, f"ckpt_{run}"), store_name
+    writer, scope = exactly_once_sink(
+        stream,
+        os.path.join(tmp, f"ckpt_{run}"),
+        lambda df, bid, scope: merge_mv_batch(df, bid, table_dir, store_name, scope),
     )
     q = writer.start()
     try:
@@ -1492,11 +1496,8 @@ def stream_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     import time
 
     from steaminganalysis_spark.scratch import scratch_dir
-    from steaminganalysis_spark.streaming.reservoir import (
-        read_reservoir,
-        reservoir_sink,
-    )
-    from steaminganalysis_spark.streaming.sinks import KVStore
+    from steaminganalysis_spark.streaming.reservoir import merge_batch, read_reservoir
+    from steaminganalysis_spark.streaming.sinks import KVStore, exactly_once_sink
 
     run = uuid.uuid4().hex[:8]
     tmp = scratch_dir("stream_reservoir")
@@ -1517,8 +1518,12 @@ def stream_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     store_name = f"stream_reservoir_{run}"
     out_dir = os.path.join(tmp, "versions")
-    writer, scope = reservoir_sink(
-        stream, out_dir, os.path.join(tmp, f"ckpt_{run}"), store_name, SAMPLE_K
+    writer, scope = exactly_once_sink(
+        stream,
+        os.path.join(tmp, f"ckpt_{run}"),
+        lambda df, bid, scope: merge_batch(
+            df, bid, out_dir, store_name, scope, SAMPLE_K
+        ),
     )
     q = writer.start()
     try:
@@ -1563,8 +1568,8 @@ def stream_decon_guard(spark: SparkSession, sf_dir: str) -> DataFrame:
     from steaminganalysis_spark.functions.text import shingle_hashes
     from steaminganalysis_spark.operators.extras import _is_eval
     from steaminganalysis_spark.scratch import scratch_dir
-    from steaminganalysis_spark.streaming.decon import decon_sink, read_flags
-    from steaminganalysis_spark.streaming.sinks import KVStore
+    from steaminganalysis_spark.streaming.decon import flag_batch, read_flags
+    from steaminganalysis_spark.streaming.sinks import KVStore, exactly_once_sink
 
     run = uuid.uuid4().hex[:8]
     tmp = scratch_dir("stream_decon")
@@ -1595,8 +1600,12 @@ def stream_decon_guard(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     store_name = f"stream_decon_{run}"
     out_dir = os.path.join(tmp, "flags")
-    writer, scope = decon_sink(
-        stream, ev, evsz, out_dir, os.path.join(tmp, f"ckpt_{run}"), store_name
+    writer, scope = exactly_once_sink(
+        stream,
+        os.path.join(tmp, f"ckpt_{run}"),
+        lambda df, bid, scope: flag_batch(
+            df, bid, ev, evsz, out_dir, store_name, scope
+        ),
     )
     q = writer.start()
     try:
@@ -1710,32 +1719,29 @@ def stream_rate_source(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def snapshot_ingest_sink(table: str, store_name: str, marker: str):
     """foreachBatch sink appending each micro-batch to the atomic-
-    manifest snapshot table exactly once: (1) the replayed-batch guard
-    returns before writing anything; (2) new uuid data files land
-    invisible; (3) manifest v{batch+1} = previous committed list + the
-    new files commits via fsync + os.replace; (4) the KVStore batch
-    watermark advances LAST — a crash anywhere earlier leaves either
-    orphan files (invisible by the manifest contract) or a committed
-    manifest whose ``txn`` marker map already carries this batch id,
-    so the replay re-advances the watermark WITHOUT committing a
-    duplicate successor (the Delta txn appId/version pattern — ADVICE
-    r12: _snap_latest()+1 addressing alone made a commit-then-crash
-    replay re-append on top of its own committed result). Module-level
-    so the replay/crash pins in tests/test_streaming.py drive it
-    directly."""
+    manifest snapshot table through ``sinks.exactly_once``: (1) a
+    replayed batch is skipped before writing anything; (2) new uuid
+    data files land invisible; (3) manifest v{batch+1} = previous
+    committed list + the new files commits via fsync + os.replace; (4)
+    the KVStore batch watermark advances LAST — a crash anywhere
+    earlier leaves either orphan files (invisible by the manifest
+    contract) or a committed manifest whose ``txn`` marker map already
+    carries this batch id, so the replay only re-advances the
+    watermark WITHOUT committing a duplicate successor (the Delta txn
+    appId/version pattern — ADVICE r12: _snap_latest()+1 addressing
+    alone made a commit-then-crash replay re-append on top of its own
+    committed result). Module-level so the replay/crash pins in
+    tests/test_streaming.py drive it directly."""
     from steaminganalysis_spark.operators.storage import (
         _snap_add_files,
         _snap_commit,
         _snap_latest_doc,
     )
-    from steaminganalysis_spark.streaming.sinks import KVStore
+    from steaminganalysis_spark.streaming.sinks import exactly_once
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
+    def commit(batch_df: DataFrame, batch_id: int) -> None:
         from steaminganalysis_spark.operators.storage import _snap_commit_cas
 
-        store = KVStore.instance(store_name)
-        if batch_id <= store.last_applied(marker):
-            return  # replayed, already-committed batch: exactly-once
         # Commit via CAS with a retry loop (r13): the sink used plain
         # os.replace, which CLOBBERS (or is clobbered by) a concurrent
         # maintenance commit — an OPTIMIZE landing mid-batch would
@@ -1755,7 +1761,6 @@ def snapshot_ingest_sink(table: str, store_name: str, marker: str):
             if int(prev_txn.get(marker, -1)) >= batch_id:
                 # Crash landed between the manifest commit and the
                 # watermark advance: the table already holds this batch.
-                store.apply_batch(batch_id, [], marker)
                 return
             if new_files is None:
                 new_files = _snap_add_files(
@@ -1769,11 +1774,13 @@ def snapshot_ingest_sink(table: str, store_name: str, marker: str):
                 txn={**prev_txn, marker: batch_id},
                 dv=prev_doc.get("dv"),
             ):
-                store.apply_batch(batch_id, [], marker)
                 return
         raise RuntimeError(
             f"ingest sink lost 20 consecutive commit races on {table}"
         )
+
+    def sink(batch_df: DataFrame, batch_id: int) -> None:
+        exactly_once(store_name, marker, batch_id, lambda: commit(batch_df, batch_id))
 
     return sink
 
@@ -1900,11 +1907,11 @@ def stream_table_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 def snapshot_cdc_merge_sink(table: str, store_name: str, marker: str):
     """foreachBatch sink applying a CDC micro-batch (op = 'U' update /
     'I' insert) to the atomic-manifest snapshot table as a file-grain
-    copy-on-write MERGE, exactly once: (1) the replayed-batch guard
-    returns before writing; (2) matched-file classification reads the
-    MANIFEST STATS only — files whose recorded event_id span misses
-    the batch's update-key range are never opened (stats-less files
-    conservatively rewrite); (3) matched files rewrite with the
+    copy-on-write MERGE, through ``sinks.exactly_once``: (1) a
+    replayed batch is skipped before writing; (2) matched-file
+    classification reads the MANIFEST STATS only — files whose
+    recorded event_id span misses the batch's update-key range are
+    never opened (stats-less files conservatively rewrite); (3) matched files rewrite with the
     update applied via a broadcast of the MICRO-BATCH-sized update
     side (the table side streams); (4) inserts land as new files;
     (5) the successor manifest = untouched-by-name + rewritten +
@@ -1926,18 +1933,14 @@ def snapshot_cdc_merge_sink(table: str, store_name: str, marker: str):
         _snap_commit_cas,
         _snap_latest_doc,
     )
-    from steaminganalysis_spark.streaming.sinks import KVStore
+    from steaminganalysis_spark.streaming.sinks import exactly_once
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        store = KVStore.instance(store_name)
-        if batch_id <= store.last_applied(marker):
-            return  # replayed, already-committed batch: exactly-once
+    def commit(batch_df: DataFrame, batch_id: int) -> None:
         _pv, _pdoc = _snap_latest_doc(table)
         _ptxn = _pdoc.get("txn", {})
         if int(_ptxn.get(marker, -1)) >= batch_id:
             # commit-then-crash replay (ADVICE r12): the manifest txn
             # map shows this batch already merged — advance only.
-            store.apply_batch(batch_id, [], marker)
             return
         ups = batch_df.filter(F.col("op") == "U").select("event_id", "value")
         ins = batch_df.filter(F.col("op") == "I").select(
@@ -1997,7 +2000,9 @@ def snapshot_cdc_merge_sink(table: str, store_name: str, marker: str):
             txn={**_ptxn, marker: batch_id},
         ):
             raise RuntimeError("single-writer CDC merge lost a CAS race")
-        store.apply_batch(batch_id, [], marker)
+
+    def sink(batch_df: DataFrame, batch_id: int) -> None:
+        exactly_once(store_name, marker, batch_id, lambda: commit(batch_df, batch_id))
 
     return sink
 
@@ -2178,18 +2183,14 @@ def snapshot_ingest_schema_sink(table: str, store_name: str, marker: str):
         _snap_commit_schema,
         _snap_latest_doc,
     )
-    from steaminganalysis_spark.streaming.sinks import KVStore
+    from steaminganalysis_spark.streaming.sinks import exactly_once
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        store = KVStore.instance(store_name)
-        if batch_id <= store.last_applied(marker):
-            return  # replayed, already-committed batch: exactly-once
+    def commit(batch_df: DataFrame, batch_id: int) -> None:
         prev_v, prev_doc = _snap_latest_doc(table)
         prev_txn = prev_doc.get("txn", {})
         if int(prev_txn.get(marker, -1)) >= batch_id:
             # commit-then-crash replay: the table already holds this
             # batch — re-advance the watermark only
-            store.apply_batch(batch_id, [], marker)
             return
         schema = [tuple(p) for p in prev_doc["schema"]]
         new_files = _snap_add_files(batch_df, table, f"evoing_b{batch_id}")
@@ -2201,7 +2202,9 @@ def snapshot_ingest_schema_sink(table: str, store_name: str, marker: str):
             new_files=new_files,
             txn={**prev_txn, marker: batch_id},
         )
-        store.apply_batch(batch_id, [], marker)
+
+    def sink(batch_df: DataFrame, batch_id: int) -> None:
+        exactly_once(store_name, marker, batch_id, lambda: commit(batch_df, batch_id))
 
     return sink
 
@@ -2425,16 +2428,12 @@ def snapshot_ingest_partitioned_sink(
         _snap_commit_partitioned,
         _snap_latest_doc,
     )
-    from steaminganalysis_spark.streaming.sinks import KVStore
+    from steaminganalysis_spark.streaming.sinks import exactly_once
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        store = KVStore.instance(store_name)
-        if batch_id <= store.last_applied(marker):
-            return  # replayed, already-committed batch: exactly-once
+    def commit(batch_df: DataFrame, batch_id: int) -> None:
         prev_v, prev_doc = _snap_latest_doc(table)
         prev_txn = prev_doc.get("txn", {})
         if int(prev_txn.get(marker, -1)) >= batch_id:
-            store.apply_batch(batch_id, [], marker)
             return
         new_files, new_parts = _snap_add_files_partitioned(
             batch_df, table, f"pingest_b{batch_id}", spec
@@ -2447,7 +2446,9 @@ def snapshot_ingest_partitioned_sink(
             {**prev_doc.get("partitions", {}), **new_parts},
             txn={**prev_txn, marker: batch_id},
         )
-        store.apply_batch(batch_id, [], marker)
+
+    def sink(batch_df: DataFrame, batch_id: int) -> None:
+        exactly_once(store_name, marker, batch_id, lambda: commit(batch_df, batch_id))
 
     return sink
 
@@ -2618,16 +2619,12 @@ def snapshot_cdc_dv_sink(table: str, store_name: str, marker: str):
         _snap_commit_cas,
         _snap_latest_doc,
     )
-    from steaminganalysis_spark.streaming.sinks import KVStore
+    from steaminganalysis_spark.streaming.sinks import exactly_once
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        store = KVStore.instance(store_name)
-        if batch_id <= store.last_applied(marker):
-            return  # replayed, already-committed batch: exactly-once
+    def commit(batch_df: DataFrame, batch_id: int) -> None:
         prev_v, doc = _snap_latest_doc(table)
         prev_txn = doc.get("txn", {})
         if int(prev_txn.get(marker, -1)) >= batch_id:
-            store.apply_batch(batch_id, [], marker)
             return
         files = doc["files"]
         stats = doc.get("stats", {})
@@ -2743,7 +2740,9 @@ def snapshot_cdc_dv_sink(table: str, store_name: str, marker: str):
             dv=dv_map,
         ):
             raise RuntimeError("single-writer CDC-DV merge lost a CAS race")
-        store.apply_batch(batch_id, [], marker)
+
+    def sink(batch_df: DataFrame, batch_id: int) -> None:
+        exactly_once(store_name, marker, batch_id, lambda: commit(batch_df, batch_id))
 
     return sink
 

@@ -13,17 +13,17 @@ O(K) stored reservoir with the batch's own top-K, and the final
 reservoir EQUALS the batch A-ES over everything that streamed
 (stream≡batch; the registered key's oracle IS q_sample_weighted's).
 
-Exactly-once (the shared KV-sink discipline, streaming/mv.py /
-streaming/decon.py):
+Exactly-once (``sinks.exactly_once``, the protocol every foreachBatch
+body shares):
 
 - each merge reads the reservoir AT THE WATERMARK (``v{last}``), never
   "the latest dir", writes a self-contained ``v{batch_id}`` parquet
-  dir, and THEN advances the watermark through ``KVStore.apply_batch``
-  — a crash between the two replays the batch against the same
-  committed predecessor and rewrites an identical version;
-- replayed ids at or below the watermark return untouched; version
-  dirs above the watermark are invisible to readers (torn writes
-  excluded).
+  dir, and THEN the watermark advances — a crash between the two
+  replays the batch against the same committed predecessor and
+  rewrites an identical version;
+- replayed ids at or below the watermark are skipped untouched;
+  version dirs above the watermark are invisible to readers (torn
+  writes excluded).
 
 Scale shape: per batch the corpus side is one map-side priority
 projection ending in a top-K (TakeOrderedAndProject per-task heaps —
@@ -39,13 +39,14 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from steaminganalysis_spark.streaming.sinks import KEY_PREFIX, KVStore
+from steaminganalysis_spark.streaming.sinks import (
+    KEY_PREFIX,
+    KVStore,
+    exactly_once,
+    version_dir,
+)
 
 RES_SCHEMA = "doc_id long, n_chars long, priority double"
-
-
-def _version_dir(out_dir: str, batch_id: int) -> str:
-    return os.path.join(out_dir, f"v{batch_id}")
 
 
 def _marker(scope: str) -> str:
@@ -58,7 +59,7 @@ def _committed(
     """The reservoir at the watermark — empty before the first commit."""
     store = KVStore.instance(store_name)
     cur = store.last_applied(_marker(scope))
-    d = _version_dir(out_dir, cur)
+    d = version_dir(out_dir, cur)
     if cur < 0 or not os.path.isdir(d):
         return spark.createDataFrame([], RES_SCHEMA)
     return spark.read.schema(RES_SCHEMA).parquet(d)
@@ -77,44 +78,20 @@ def merge_batch(
     committed reservoir, keep the top-k, commit a new version."""
     from steaminganalysis_spark.operators.curation import _uniform_sql
 
-    spark = batch_df.sparkSession
-    store = KVStore.instance(store_name)
-    if batch_id <= store.last_applied(_marker(scope)):
-        return  # replayed committed batch — dir already final
-    pri = f"ln({_uniform_sql('doc_id', 'wsamp')}) / CAST(n_chars AS DOUBLE)"
-    scored = batch_df.selectExpr(
-        "doc_id", "n_chars", f"{pri} AS priority"
-    ).orderBy(F.col("priority").desc(), "doc_id").limit(k)
-    merged = (
-        _committed(spark, out_dir, store_name, scope)
-        .unionByName(scored)
-        .orderBy(F.col("priority").desc(), "doc_id")
-        .limit(k)
-    )
-    merged.write.mode("overwrite").parquet(_version_dir(out_dir, batch_id))
-    store.apply_batch(batch_id, [], _marker(scope))
-
-
-def reservoir_sink(
-    doc_stream: DataFrame,
-    out_dir: str,
-    checkpoint_dir: str,
-    store_name: str,
-    k: int,
-):
-    """Attach the weighted-reservoir maintainer to a document stream."""
-    from steaminganalysis_spark.streaming.sinks import checkpoint_scope
-
-    scope = checkpoint_scope(checkpoint_dir)
-    return (
-        doc_stream.writeStream.outputMode("append")
-        .foreachBatch(
-            lambda df, bid: merge_batch(
-                df, bid, out_dir, store_name, scope, k
-            )
+    def merge() -> None:
+        pri = f"ln({_uniform_sql('doc_id', 'wsamp')}) / CAST(n_chars AS DOUBLE)"
+        scored = batch_df.selectExpr(
+            "doc_id", "n_chars", f"{pri} AS priority"
+        ).orderBy(F.col("priority").desc(), "doc_id").limit(k)
+        merged = (
+            _committed(batch_df.sparkSession, out_dir, store_name, scope)
+            .unionByName(scored)
+            .orderBy(F.col("priority").desc(), "doc_id")
+            .limit(k)
         )
-        .option("checkpointLocation", checkpoint_dir)
-    ), scope
+        merged.write.mode("overwrite").parquet(version_dir(out_dir, batch_id))
+
+    exactly_once(store_name, _marker(scope), batch_id, merge)
 
 
 def read_reservoir(

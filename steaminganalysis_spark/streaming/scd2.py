@@ -26,13 +26,13 @@ Scale shape (100 TB contract):
   sandbox filesystem-atomic). On a lakehouse table format this is the
   transactional MERGE / partition-overwrite; the versioning below is
   the same MVCC idea with the commit marker as the transaction log.
-- Exactly-once: the version directory is written FIRST, then the
-  batch-id watermark commits through the same ``KVStore.apply_batch``
-  atomic step the KV sink uses (streaming/sinks.py) — a crash between
-  the two replays the batch, which rewrites the identical version
-  directory (the merge is a pure function of (previous version,
-  batch)), so replays are idempotent by construction rather than by
-  guard-first luck.
+- Exactly-once: the merge runs through ``sinks.exactly_once``, the
+  protocol every foreachBatch body shares — the version directory is
+  written FIRST, then the batch-id watermark commits in one
+  ``apply_batch``; a crash between the two replays the batch, which
+  rewrites the identical version directory (the merge is a pure
+  function of (previous version, batch)), so replays are idempotent
+  by construction rather than by guard-first luck.
 - In-order contract: the stream must deliver a user's changes in
   (ts, event_id) order across batches (the registered replay splits on
   ts boundaries, so this holds). Out-of-order arrivals would need the
@@ -44,19 +44,21 @@ Scale shape (100 TB contract):
 
 from __future__ import annotations
 
-import os
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from steaminganalysis_spark.streaming.sinks import KEY_PREFIX, KVStore
+from steaminganalysis_spark.streaming.sinks import (
+    KEY_PREFIX,
+    KVStore,
+    exactly_once,
+    read_version,
+    version_dir,
+)
 
 CHANGES_SCHEMA = "user_id long, status string, ts timestamp, event_id long"
-
-
-def _version_dir(table_dir: str, batch_id: int) -> str:
-    return os.path.join(table_dir, f"v{batch_id}")
 
 
 def read_changes(
@@ -69,25 +71,12 @@ def read_changes(
     cur = store.last_applied(f"{KEY_PREFIX}scd2-last-applied:{scope}")
     if cur < 0:
         return spark.createDataFrame([], CHANGES_SCHEMA)
-    return spark.read.schema(CHANGES_SCHEMA).parquet(_version_dir(table_dir, cur))
+    return spark.read.schema(CHANGES_SCHEMA).parquet(version_dir(table_dir, cur))
 
 
-def read_changes_at(
-    spark: SparkSession, table_dir: str, batch_id: int
-) -> DataFrame:
-    """TIME TRAVEL: the change table as of an earlier committed batch.
-    Every merge writes a full self-contained version directory before
-    advancing the watermark, so any version ≤ the current watermark is
-    a consistent historical snapshot — the query-the-dimension-as-it-
-    was capability lakehouse formats expose as ``VERSION AS OF``,
-    available here because versions are never destroyed in place (a
-    retention sweep would prune old ``v<k>`` dirs on a real
-    deployment). Reading a version ABOVE the committed watermark is
-    refused: it may be a torn write from a crashed batch."""
-    d = _version_dir(table_dir, batch_id)
-    if not os.path.isdir(d):
-        raise FileNotFoundError(f"no committed version {batch_id} at {table_dir}")
-    return spark.read.schema(CHANGES_SCHEMA).parquet(d)
+# TIME TRAVEL: the change table as of an earlier committed batch
+# (``sinks.read_version``) — the dimension as it was.
+read_changes_at = partial(read_version, schema=CHANGES_SCHEMA)
 
 
 def merge_cdc_batch(
@@ -105,67 +94,45 @@ def merge_cdc_batch(
     batch rows, and keeps exactly the batch rows that change status
     relative to their predecessor — the same lag-filter the batch
     operator uses, restricted to the affected keys. Writes the merged
-    table as version ``v{batch_id}`` and only then commits the
-    watermark (see module docstring for the crash story)."""
-    spark = batch_df.sparkSession
-    store = KVStore.instance(store_name)
-    marker = f"{KEY_PREFIX}scd2-last-applied:{scope}"
-    if batch_id <= store.last_applied(marker):
-        return  # replayed committed batch — version dir already final
+    table as version ``v{batch_id}``; ``sinks.exactly_once`` then
+    commits the watermark (see module docstring for the crash story)."""
 
-    prior = read_changes(spark, table_dir, store_name, scope)
-    batch_rows = batch_df.select(
-        "user_id",
-        F.col("event_type").alias("status"),
-        "ts",
-        "event_id",
-        F.lit(False).alias("is_seed"),
-    )
-    affected = batch_rows.select("user_id").distinct()
-    w_last = Window.partitionBy("user_id").orderBy(
-        F.desc("ts"), F.desc("event_id")
-    )
-    seeds = (
-        prior.join(affected, "user_id")
-        .withColumn("rn", F.row_number().over(w_last))
-        .filter(F.col("rn") == 1)
-        .select("user_id", "status", "ts", "event_id", F.lit(True).alias("is_seed"))
-    )
-    w_ord = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    new_changes = (
-        seeds.unionByName(batch_rows)
-        .withColumn("prev_status", F.lag("status").over(w_ord))
-        .filter(
-            (~F.col("is_seed"))
-            & (
-                F.col("prev_status").isNull()
-                | (F.col("status") != F.col("prev_status"))
+    def merge() -> None:
+        prior = read_changes(batch_df.sparkSession, table_dir, store_name, scope)
+        batch_rows = batch_df.select(
+            "user_id",
+            F.col("event_type").alias("status"),
+            "ts",
+            "event_id",
+            F.lit(False).alias("is_seed"),
+        )
+        affected = batch_rows.select("user_id").distinct()
+        w_last = Window.partitionBy("user_id").orderBy(
+            F.desc("ts"), F.desc("event_id")
+        )
+        seeds = (
+            prior.join(affected, "user_id")
+            .withColumn("rn", F.row_number().over(w_last))
+            .filter(F.col("rn") == 1)
+            .select("user_id", "status", "ts", "event_id", F.lit(True).alias("is_seed"))
+        )
+        w_ord = Window.partitionBy("user_id").orderBy("ts", "event_id")
+        new_changes = (
+            seeds.unionByName(batch_rows)
+            .withColumn("prev_status", F.lag("status").over(w_ord))
+            .filter(
+                (~F.col("is_seed"))
+                & (
+                    F.col("prev_status").isNull()
+                    | (F.col("status") != F.col("prev_status"))
+                )
             )
+            .select("user_id", "status", "ts", "event_id")
         )
-        .select("user_id", "status", "ts", "event_id")
-    )
-    merged = prior.unionByName(new_changes)
-    merged.write.mode("overwrite").parquet(_version_dir(table_dir, batch_id))
-    store.apply_batch(batch_id, [], marker)
+        merged = prior.unionByName(new_changes)
+        merged.write.mode("overwrite").parquet(version_dir(table_dir, batch_id))
 
-
-def scd2_sink(
-    change_stream: DataFrame,
-    table_dir: str,
-    checkpoint_dir: str,
-    store_name: str,
-):
-    """Attach the incremental SCD2 merge to a change-event stream."""
-    from steaminganalysis_spark.streaming.sinks import checkpoint_scope
-
-    scope = checkpoint_scope(checkpoint_dir)
-    return (
-        change_stream.writeStream.outputMode("append")
-        .foreachBatch(
-            lambda df, bid: merge_cdc_batch(df, bid, table_dir, store_name, scope)
-        )
-        .option("checkpointLocation", checkpoint_dir)
-    ), scope
+    exactly_once(store_name, f"{KEY_PREFIX}scd2-last-applied:{scope}", batch_id, merge)
 
 
 def intervals_from_changes(changes: DataFrame) -> DataFrame:

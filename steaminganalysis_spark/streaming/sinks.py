@@ -32,14 +32,22 @@ leaked per-call JedisPool, CommonUtil.scala:44-48). The increments go
 out sorted by day, with the rejected group last, so a batch sends the
 same ``ARGV`` however Spark partitions it, and a replayed batch sends
 the same ``ARGV`` again.
+
+The skip / run / advance-marker protocol is `exactly_once`, the one
+place it is written: this sink, the version-store and file sinks
+(``scd2``, ``mv``, ``reservoir``, ``decon``, ``neardup``,
+``operators/ann.py``) and the snapshot-table sinks in ``queries`` all
+run their foreachBatch bodies through it, and `exactly_once_sink`
+attaches a body to a stream with its checkpoint's scope.
 """
 
 from __future__ import annotations
 
+import os
 import threading
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 
 from steaminganalysis_spark.backends.miniredis import LocalMiniRedisClient, MiniRedisClient
 
@@ -50,6 +58,8 @@ __all__ = [
     "REJECTED_KEY",
     "apply_day_rollup_batch",
     "day_rollup_sink",
+    "exactly_once",
+    "exactly_once_sink",
 ]
 
 try:  # pragma: no cover - redis is absent in this environment
@@ -105,7 +115,8 @@ class RedisKVStore:
         # filter — never KEYS *, which blocks a production keyspace.
         # SCAN is at-least-once under concurrent writes: dedupe, or a
         # twice-returned key double-counts in any caller that sums.
-        # COUNT 1000 pages a 3 652-day keyspace in 4 round trips, not 366.
+        # COUNT 1000 pages a 3 652-day keyspace in 4 round trips on a real
+        # Redis, not 366 (the mini-Redis answers any SCAN in one).
         return list(dict.fromkeys(self._r.scan_iter(match="*", count=1000, _type="hash")))
 
     def last_applied(self, marker_key: str) -> int:
@@ -187,15 +198,83 @@ def checkpoint_scope(checkpoint_dir: str) -> str:
     one-batch replay — acceptable because that marker guarded a weaker
     contract to begin with.)"""
     import hashlib
-    import os as _os
 
     p = checkpoint_dir
     for scheme in ("file://", "file:"):
         if p.startswith(scheme):
             p = p[len(scheme):]
             break
-    p = _os.path.abspath(p).rstrip("/") or "/"
+    p = os.path.abspath(p).rstrip("/") or "/"
     return hashlib.md5(p.encode()).hexdigest()[:12]
+
+
+def exactly_once(
+    store_name: str,
+    marker: str,
+    batch_id: int,
+    body: Callable[[], list[tuple[str, str, int]] | None],
+) -> bool:
+    """The exactly-once protocol of every foreachBatch body: skip a
+    batch id at or below the last-applied id at ``marker`` without
+    running ``body``; otherwise run ``body`` and commit the increments
+    it returns (None for none — a body that writes files sends none)
+    together with the new marker in ONE ``store.apply_batch``.
+
+    foreachBatch ids are monotonic per checkpoint and Spark re-runs
+    the last uncommitted batch with the same id, so one watermark key
+    replaces a per-batch guard key. A body that raises leaves the
+    marker and the keyspace unmoved and the retry runs it again; a
+    body whose files land before a crash is rewritten identically by
+    the replay (each body is a pure function of its committed input
+    and the batch). The check inside ``apply_batch``'s script is the
+    authoritative one; the ``last_applied`` read up front spares a
+    replayed batch its Spark work. Returns True iff the batch
+    applied."""
+    store = KVStore.instance(store_name)
+    if batch_id <= store.last_applied(marker):
+        return False
+    return store.apply_batch(batch_id, body() or [], marker)
+
+
+def exactly_once_sink(
+    stream: DataFrame,
+    checkpoint_dir: str,
+    body: Callable[[DataFrame, int, str], None],
+):
+    """Attach ``body(batch_df, batch_id, scope)`` to ``stream`` as its
+    foreachBatch, checkpointed at ``checkpoint_dir``; returns
+    ``(writer, scope)``. ``scope`` is `checkpoint_scope` of that dir:
+    batch ids are monotonic per checkpoint, so a body's marker is
+    scoped per checkpoint too, and streams sharing one store never
+    drop each other's batches."""
+    scope = checkpoint_scope(checkpoint_dir)
+    writer = (
+        stream.writeStream.outputMode("append")
+        .foreachBatch(lambda df, bid: body(df, bid, scope))
+        .option("checkpointLocation", checkpoint_dir)
+    )
+    return writer, scope
+
+
+def version_dir(table_dir: str, batch_id: int) -> str:
+    """Directory of the self-contained table version batch
+    ``batch_id`` writes before its marker advances."""
+    return os.path.join(table_dir, f"v{batch_id}")
+
+
+def read_version(
+    spark: SparkSession, table_dir: str, batch_id: int, schema: str
+) -> DataFrame:
+    """TIME TRAVEL: a version store as of an earlier committed batch.
+    Every merge writes a full self-contained version directory before
+    advancing its marker, so any version at or below the marker is a
+    consistent snapshot (``VERSION AS OF``; a retention sweep would
+    prune old ``v<k>`` dirs on a real deployment). An absent version
+    is an error, not an empty frame."""
+    d = version_dir(table_dir, batch_id)
+    if not os.path.isdir(d):
+        raise FileNotFoundError(f"no committed version {batch_id} at {table_dir}")
+    return spark.read.schema(schema).parquet(d)
 
 
 def apply_day_rollup_batch(
@@ -207,7 +286,7 @@ def apply_day_rollup_batch(
 ) -> None:
     """foreachBatch body: aggregate THIS micro-batch's raw events to a
     per-day delta (stateless — state lives in the KV store, exactly the
-    reference's model) and apply it with an idempotence guard.
+    reference's model) and apply it through `exactly_once`.
 
     ``scope`` namespaces the last-applied watermark. foreachBatch batch
     ids are monotonic PER CHECKPOINT, so the watermark must be scoped
@@ -226,39 +305,34 @@ def apply_day_rollup_batch(
     per partition and built a ``Row`` per day), and its increments are
     built sorted by day: the partitioning of the micro-batch then
     cannot change the order, so a replay sends the same ``ARGV``.
-    Spark retries foreachBatch on failure and restarts re-run
-    the last uncommitted batch with the same monotonically increasing
-    batch_id, so a replay either re-applies a batch that never
-    committed or is skipped whole — a crash can no longer strand the
-    guard set with the increments half-applied (the at-most-once
-    hazard of guard-first designs), and guard state is a single
-    watermark key instead of one key per batch forever. The delta's
-    null-``day`` group (rejected records) is one more increment,
-    ``REJECTED_KEY``'s ``total``, last, in the same atomic apply.
+    A replay either re-applies a batch that never committed or is
+    skipped whole — a crash can no longer strand the guard set with
+    the increments half-applied (the at-most-once hazard of
+    guard-first designs). A replay whose EVAL committed but whose
+    Spark commit did not skips the whole Spark aggregation job. The
+    delta's null-``day`` group (rejected records) is one more
+    increment, ``REJECTED_KEY``'s ``total``, last, in the same atomic
+    apply.
     """
-    store = KVStore.instance(store_name)
-    marker = f"{KEY_PREFIX}last-applied-batch:{scope}"
-    # cheap pre-check: a batch whose EVAL committed but whose Spark
-    # commit did not (a crash in between) is replayed on restart, and
-    # skips the whole Spark aggregation job here; the authoritative
-    # check stays inside the atomic apply_batch.
-    if batch_id <= store.last_applied(marker):
-        return
-    delta = agg_fn(batch_df).toArrow().sort_by("day")  # null day sorts last
-    increments: list[tuple[str, str, int]] = []
-    for day, total, success, fee_cents in zip(
-        *(delta.column(c).to_pylist() for c in ("day", "total", "success", "fee_cents"))
-    ):
-        if day is None:  # the rejected records' group
-            increments.append((REJECTED_KEY, "total", total))
-            continue
-        key = KEY_PREFIX + day
-        increments += [
-            (key, "total", total),
-            (key, "success", success),
-            (key, "fee_cents", fee_cents),
-        ]
-    store.apply_batch(batch_id, increments, marker)
+
+    def increments() -> list[tuple[str, str, int]]:
+        delta = agg_fn(batch_df).toArrow().sort_by("day")  # null day sorts last
+        out: list[tuple[str, str, int]] = []
+        for day, total, success, fee_cents in zip(
+            *(delta.column(c).to_pylist() for c in ("day", "total", "success", "fee_cents"))
+        ):
+            if day is None:  # the rejected records' group
+                out.append((REJECTED_KEY, "total", total))
+                continue
+            key = KEY_PREFIX + day
+            out += [
+                (key, "total", total),
+                (key, "success", success),
+                (key, "fee_cents", fee_cents),
+            ]
+        return out
+
+    exactly_once(store_name, f"{KEY_PREFIX}last-applied-batch:{scope}", batch_id, increments)
 
 
 def day_rollup_sink(
@@ -272,13 +346,11 @@ def day_rollup_sink(
     commitAsync, ZkApp.scala:114-116 ZK znodes). The idempotence
     watermark is scoped to this checkpoint (batch ids are monotonic per
     checkpoint), so streams sharing one store never collide."""
-    scope = checkpoint_scope(checkpoint_dir)
-    return (
-        raw_stream.writeStream.outputMode("append")
-        .foreachBatch(
-            lambda df, bid: apply_day_rollup_batch(
-                df, bid, agg_fn, store_name=store_name, scope=scope
-            )
-        )
-        .option("checkpointLocation", checkpoint_dir)
+    writer, _ = exactly_once_sink(
+        raw_stream,
+        checkpoint_dir,
+        lambda df, bid, scope: apply_day_rollup_batch(
+            df, bid, agg_fn, store_name=store_name, scope=scope
+        ),
     )
+    return writer

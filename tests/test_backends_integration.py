@@ -9,6 +9,10 @@ semantics of the one store implementation, whichever client it uses.
 The mini-Redis RESP reader is driven at chosen ``recv`` boundaries and
 at a peer's close, the server refuses a command whose arguments are
 not bulk strings, and ``keys()`` is held to a few ``SCAN`` pages.
+``exactly_once``, the protocol every foreachBatch body runs through,
+is tested here once: a committed id skips its body, a failed body
+moves nothing, and a body's increments commit with the marker in one
+``EVALSHA``.
 """
 
 from __future__ import annotations
@@ -25,6 +29,7 @@ from steaminganalysis_spark.streaming.sinks import (
     KEY_PREFIX,
     KVStore,
     apply_day_rollup_batch,
+    exactly_once,
 )
 
 
@@ -70,6 +75,54 @@ def test_guard_state_is_single_watermark_key():
     assert set(store._r.scan_iter(_type="string")) == {"last-applied"}
 
 
+def test_exactly_once_skips_a_committed_id_without_running_the_body():
+    name = f"once-skip-{uuid.uuid4().hex[:6]}"
+    ran = []
+    assert exactly_once(name, "m", 4, lambda: ran.append(4) or [("h", "n", 1)])
+    for bid in (4, 3):  # a replay, and a stale lower id
+        assert not exactly_once(name, "m", bid, lambda: ran.append(bid))
+    assert ran == [4]
+    store = KVStore.instance(name)
+    assert store.hgetall("h") == {"n": 1} and store.last_applied("m") == 4
+
+
+def test_exactly_once_failed_body_moves_nothing_and_the_retry_applies_once():
+    name = f"once-fail-{uuid.uuid4().hex[:6]}"
+    store = KVStore.instance(name)
+    assert exactly_once(name, "m", 0, lambda: [("h", "n", 1)])
+
+    def dies():
+        raise RuntimeError("executor lost mid-batch")
+
+    with pytest.raises(RuntimeError):
+        exactly_once(name, "m", 1, dies)
+    assert store.last_applied("m") == 0 and store.keys() == ["h"]
+    assert store.hgetall("h") == {"n": 1}
+    assert exactly_once(name, "m", 1, lambda: [("h", "n", 2), ("g", "n", 5)])
+    assert not exactly_once(name, "m", 1, lambda: [("h", "n", 2)])
+    assert store.hgetall("h") == {"n": 3} and store.hgetall("g") == {"n": 5}
+    assert store.last_applied("m") == 1
+
+
+def test_exactly_once_commits_increments_and_marker_in_one_evalsha(monkeypatch):
+    """Counted at the server's dispatch: the marker read, then one
+    ``EVALSHA`` carrying every increment and the marker advance."""
+    name = f"once-eval-{uuid.uuid4().hex[:6]}"
+    store = KVStore.instance(name)
+    server = store._r._server
+    dispatch, seen = server.dispatch, []
+
+    def counting(argv):
+        seen.append(argv[0].upper())
+        return dispatch(argv)
+
+    monkeypatch.setattr(server, "dispatch", counting)
+    assert exactly_once(name, "m", 7, lambda: [("a", "n", 1), ("b", "n", 2)])
+    assert seen == ["GET", "EVALSHA"]
+    assert store.hgetall("a") == {"n": 1} and store.hgetall("b") == {"n": 2}
+    assert store.last_applied("m") == 7
+
+
 def test_failed_attempt_leaves_store_untouched_then_replay_applies(spark):
     """The guard-first crash window is closed: an attempt that dies
     BEFORE the atomic commit leaves no trace (marker unmoved, counts
@@ -96,7 +149,8 @@ def test_failed_attempt_leaves_store_untouched_then_replay_applies(spark):
 
     with pytest.raises(RuntimeError):
         apply_day_rollup_batch(df, batch_id=3, agg_fn=flaky_agg, store_name=store_name)
-    assert store.keys() == [] and store.last_applied(f"{KEY_PREFIX}last-applied-batch") == -1
+    assert store.keys() == []
+    assert store.last_applied(f"{KEY_PREFIX}last-applied-batch:default") == -1
 
     # Spark replays batch 3 after the failure — it must apply, once.
     apply_day_rollup_batch(df, batch_id=3, agg_fn=flaky_agg, store_name=store_name)
@@ -336,7 +390,9 @@ def test_keys_pages_a_large_keyspace_in_few_scans(monkeypatch):
     """``keys()`` asks ``SCAN`` for 1 000 keys a page: over the
     3 652-day keyspace of the scattered benchmark it sends at most 4
     ``SCAN``s, counted at the server's dispatch, and returns each hash
-    key once (the marker, a string key, is not one)."""
+    key once (the marker, a string key, is not one). The mini-Redis
+    answers a whole iteration at once, so even ``scan_iter()`` at the
+    default COUNT of 10 sends one ``SCAN``."""
     store = KVStore()
     want = [f"{KEY_PREFIX}{i:05d}" for i in range(3_652)]
     assert store.apply_batch(0, [(k, "total", 1) for k in want], "scan-marker")
@@ -351,3 +407,6 @@ def test_keys_pages_a_large_keyspace_in_few_scans(monkeypatch):
     monkeypatch.setattr(server, "dispatch", counting)
     assert sorted(store.keys()) == want
     assert 1 <= len(scans) <= 4
+    scans.clear()
+    assert sorted(store._r.scan_iter()) == sorted(want + ["scan-marker"])
+    assert len(scans) == 1

@@ -125,3 +125,25 @@ def test_stream_neardup_query_matches_batch_candidates(spark):
     }
     normalized = {(max(a, b), min(a, b)) for a, b in got}
     assert normalized == batch
+
+
+def test_streams_sharing_a_state_dir_basename_keep_their_batches(spark, tmp_path):
+    """Two streams whose state dirs share a basename share one guard
+    store; their markers are scoped by checkpoint, so stream B's batch 0
+    runs after stream A committed batches 0 and 1."""
+    schema = "doc_id long, text string"
+    src = tmp_path / "src"
+    src.mkdir()
+    stream = spark.readStream.schema(schema).parquet(str(src))
+    batch = spark.createDataFrame(
+        _docs(0, [BASE, _perturb(BASE, "meadow"), "an unrelated short text"]), schema
+    )
+    _, idx_a = near_dup_sink(stream, str(tmp_path / "a" / "state"), str(tmp_path / "a" / "ckpt"))
+    _, idx_b = near_dup_sink(stream, str(tmp_path / "b" / "state"), str(tmp_path / "b" / "ckpt"))
+    assert idx_a.store_name == idx_b.store_name
+    idx_a.process_batch(batch, 0)
+    idx_a.process_batch(batch, 1)
+    idx_b.process_batch(batch, 0)
+    got_b = {(r.new_doc, r.dup_of) for r in idx_b.matches(spark).collect()}
+    assert got_b == {(0, 1)}
+    assert {(r.new_doc, r.dup_of) for r in idx_a.matches(spark).collect()} >= got_b

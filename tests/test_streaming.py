@@ -1907,12 +1907,8 @@ def test_weighted_reservoir_replay_torn_write_and_monoid(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from steaminganalysis_spark.operators.curation import SAMPLE_K
-    from steaminganalysis_spark.streaming.reservoir import (
-        _version_dir,
-        merge_batch,
-        read_reservoir,
-    )
-    from steaminganalysis_spark.streaming.sinks import KVStore
+    from steaminganalysis_spark.streaming.reservoir import merge_batch, read_reservoir
+    from steaminganalysis_spark.streaming.sinks import KVStore, version_dir
 
     docs = (
         spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
@@ -1939,7 +1935,7 @@ def test_weighted_reservoir_replay_torn_write_and_monoid(spark, tmp_path):
         # (b) torn version dir above the watermark is invisible
         b1.limit(0).selectExpr(
             "doc_id", "n_chars", "CAST(0.0 AS DOUBLE) AS priority"
-        ).write.mode("overwrite").parquet(_version_dir(out, 7))
+        ).write.mode("overwrite").parquet(version_dir(out, 7))
         got = sorted(map(tuple, read_reservoir(spark, out, store, "s").collect()))
         assert got == after_b0
         # (c)+(d) two-batch ingestion == one-batch ingestion
@@ -1967,12 +1963,11 @@ def test_mv_backfill_restates_replays_and_excludes_torn_writes(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from steaminganalysis_spark.streaming.mv import (
-        _version_dir,
         daily_rollup_mv,
         merge_mv_backfill_batch,
         read_mv,
     )
-    from steaminganalysis_spark.streaming.sinks import KVStore
+    from steaminganalysis_spark.streaming.sinks import KVStore, version_dir
 
     ev = (
         spark.read.parquet("/root/testdata/sf0.001/events.parquet")
@@ -2031,7 +2026,7 @@ def test_mv_backfill_restates_replays_and_excludes_torn_writes(spark, tmp_path):
 
         # (d) torn version above the watermark is invisible
         daily_rollup_mv(ev.limit(3)).write.mode("overwrite").parquet(
-            _version_dir(out, 9)
+            version_dir(out, 9)
         )
         assert {
             (r.day, r.event_type): (r.n_events, r.total_cents)
