@@ -53,6 +53,41 @@ def test_load_fails_fast_on_non_utc_session(spark):
         spark.conf.set("spark.sql.session.timeZone", "UTC")
 
 
+def test_checkpoint_manager_refuses_a_second_writer_of_a_batch(spark, tmp_path):
+    """``HDFSMetadataLog`` writes batch N with ``createAtomic(path,
+    false)`` and relies on the close failing when another writer got
+    there first. The session's checkpoint manager is the FileSystem-based
+    one, also after ``get_spark`` reuses the session, and it keeps that
+    refusal: the second close raises and the first writer's bytes stay."""
+    from py4j.protocol import Py4JJavaError
+
+    from steaminganalysis_spark.session import get_spark
+
+    def manager(session, path):
+        jvm = session._jvm
+        hadoop_conf = session._jsparkSession.sessionState().newHadoopConf()
+        cfm = jvm.org.apache.spark.sql.execution.streaming.checkpointing
+        return cfm.CheckpointFileManager.create(path, hadoop_conf)
+
+    log_file = tmp_path / "offsets" / "0"
+    path = spark._jvm.org.apache.hadoop.fs.Path(log_file.as_uri())
+    reused = get_spark(app_name="sa-spark-tests", shuffle_partitions=8)
+    for session in (spark, reused):
+        assert manager(session, path).getClass().getSimpleName() == (
+            "FileSystemBasedCheckpointFileManager"
+        )
+
+    fm = manager(reused, path)
+    first = fm.createAtomic(path, False)
+    first.write(bytearray(b"v1\nfirst writer"))
+    first.close()
+    second = fm.createAtomic(path, False)
+    second.write(bytearray(b"v1\nsecond writer"))
+    with pytest.raises(Py4JJavaError, match="already exists"):
+        second.close()
+    assert log_file.read_bytes() == b"v1\nfirst writer"
+
+
 def test_demo_app_accumulates_day_totals(spark):
     """The runnable end-to-end demo (datagen → JSON → parse → classify →
     rollup → idempotent KV sink) accumulates consistent per-day hashes:

@@ -398,31 +398,21 @@ def test_dead_letter_routing_quarantines_bad_json(spark, tmp_path, miniredis):
     }
 
 
-def test_order_sink_restart_counts_rejects_once(spark, tmp_path, miniredis):
-    """Restart on the wire path: batch 0 (one rejected record) applies
-    and the query stops; a second file arrives and the query restarts
-    from the same checkpoint. Batch 0's commit-log entry is removed
-    first, as if the process died after the ``EVAL`` but before Spark
-    committed, so the restart replays batch 0 too. Every day total and
-    the rejected count are counted once."""
+def _restart_with_a_second_file(spark, src, ckpt, store_name) -> None:
+    """Add a second file with one rejected record to the first one's
+    ``src``, restart the order sink from ``ckpt`` and require every day
+    total and the rejected count of both files exactly once."""
     from steaminganalysis_spark.streaming.sinks import REJECTED_KEY
 
-    src, ckpt = tmp_path / "src", str(tmp_path / "ckpt")
-    src.mkdir()
-    first = [_order("2024-03-01", "100", "1", "a"), _BAD_RECORDS[0]]
-    (src / "part-0.json").write_text("\n".join(first) + "\n")
-    _drain_orders(spark, str(src), ckpt, miniredis)
-    for name in ("0", ".0.crc"):
-        os.remove(os.path.join(ckpt, "commits", name))
     second = [
         _order("2024-03-01", "2.50", "1", "b"),
         _order("2024-03-02", "7", "0", "c"),
         _BAD_RECORDS[3],
     ]
     (src / "part-1.json").write_text("\n".join(second) + "\n")
-    _drain_orders(spark, str(src), ckpt, miniredis)
+    _drain_orders(spark, str(src), ckpt, store_name)
 
-    store = KVStore.instance(miniredis)
+    store = KVStore.instance(store_name)
     assert {k: store.hgetall(k) for k in store.keys()} == {
         KEY_PREFIX + "2024-03-01": {"total": 2, "success": 2, "fee_cents": 10250},
         KEY_PREFIX + "2024-03-02": {"total": 1, "success": 0, "fee_cents": 0},
@@ -430,6 +420,48 @@ def test_order_sink_restart_counts_rejects_once(spark, tmp_path, miniredis):
     }
     commits = os.listdir(os.path.join(ckpt, "commits"))
     assert sorted(c for c in commits if not c.endswith(".crc")) == ["0", "1"]
+
+
+def test_order_sink_restart_counts_rejects_once(spark, tmp_path, miniredis):
+    """Restart on the wire path: batch 0 (one rejected record) applies
+    and the query stops; a second file arrives and the query restarts
+    from the same checkpoint. Batch 0's commit-log entry is removed
+    first, as if the process died after the ``EVAL`` but before Spark
+    committed, so the restart replays batch 0 too. Every day total and
+    the rejected count are counted once."""
+    src, ckpt = tmp_path / "src", str(tmp_path / "ckpt")
+    src.mkdir()
+    first = [_order("2024-03-01", "100", "1", "a"), _BAD_RECORDS[0]]
+    (src / "part-0.json").write_text("\n".join(first) + "\n")
+    _drain_orders(spark, str(src), ckpt, miniredis)
+    for name in ("0", ".0.crc"):
+        os.remove(os.path.join(ckpt, "commits", name))
+    _restart_with_a_second_file(spark, src, ckpt, miniredis)
+
+
+def test_order_sink_restarts_a_checkpoint_written_by_the_filecontext_manager(
+    spark, tmp_path, miniredis
+):
+    """A checkpoint written under Spark's default
+    ``FileContextBasedCheckpointFileManager`` restarts exactly under the
+    session's FileSystem-based manager: batch 0 drains under the old
+    default, a second file arrives, and the restart applies only it."""
+    key = "spark.sql.streaming.checkpointFileManagerClass"
+    src, ckpt = tmp_path / "src", str(tmp_path / "ckpt")
+    src.mkdir()
+    first = [_order("2024-03-01", "100", "1", "a"), _BAD_RECORDS[0]]
+    (src / "part-0.json").write_text("\n".join(first) + "\n")
+    session_manager = spark.conf.get(key)
+    spark.conf.set(
+        key,
+        "org.apache.spark.sql.execution.streaming.checkpointing."
+        "FileContextBasedCheckpointFileManager",
+    )
+    try:
+        _drain_orders(spark, str(src), ckpt, miniredis)
+    finally:
+        spark.conf.set(key, session_manager)
+    _restart_with_a_second_file(spark, src, ckpt, miniredis)
 
 
 def test_order_sink_survives_connection_dropped_after_eval(spark, tmp_path):
