@@ -6,7 +6,7 @@ network to fetch either — but the *protocol* needs no install. This
 module implements exactly the command surface the KV sink uses
 (reference parity: CommonUtil.scala:39-49's Jedis calls):
 
-    PING GET SET SETNX DEL HINCRBY HGETALL TYPE SCAN
+    PING SELECT GET SET SETNX HINCRBY HGETALL SCAN
     SCRIPT LOAD  EVALSHA  EVAL  FLUSHALL
 
 ``MiniRedisServer`` is the only place a command is implemented. It owns
@@ -287,8 +287,6 @@ class MiniRedisServer:
                 return 0
             data[args[0]] = args[1]
             return 1
-        if cmd == "DEL":
-            return sum(data.pop(k, None) is not None for k in args)
         if cmd == "HGETALL":
             h = data.get(args[0], {})
             if isinstance(h, str):
@@ -297,11 +295,6 @@ class MiniRedisServer:
             for f, v in h.items():
                 out += [f, str(v)]
             return out
-        if cmd == "TYPE":
-            v = data.get(args[0])
-            if v is None:
-                return _Simple("none")
-            return _Simple("hash" if isinstance(v, dict) else "string")
         if cmd == "PING":
             return _Simple("PONG")
         if cmd == "SELECT":  # single logical db; accept and ignore index

@@ -1027,22 +1027,6 @@ def _snap_latest_doc(table: str) -> tuple[int, dict]:
     return v, doc
 
 
-def _snap_latest_with_stats(table: str) -> tuple[int, list[str], dict]:
-    """(latest committed version, file list, per-file stats dict) —
-    the lookup stats-aware writers (CDC merge) use: classification by
-    manifest stats needs the bounds alongside the names, and the
-    successor commit must CARRY surviving files' stats forward or
-    pruning degrades to full rewrites after one commit."""
-    import json
-
-    committed = _snap_versions(table)
-    v = max(committed)
-    manifest = json.loads(
-        open(os.path.join(table, "manifests", committed[v])).read()
-    )
-    return v, manifest["files"], manifest.get("stats", {})
-
-
 def _snap_read(spark: SparkSession, table: str, version: int | None = None):
     """Read the table AS OF a committed snapshot (default: latest
     committed). Only files listed in the resolved manifest are read —

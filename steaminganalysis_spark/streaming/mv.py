@@ -31,7 +31,6 @@ Scale shape (100 TB contract):
 from __future__ import annotations
 
 import os
-from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -83,14 +82,17 @@ def merge_mv(base: DataFrame, delta: DataFrame) -> DataFrame:
     )
 
 
+def _marker(scope: str) -> str:
+    return f"{KEY_PREFIX}mv-last-applied:{scope}"
+
+
 def read_mv(
     spark: SparkSession, table_dir: str, store_name: str, scope: str
 ) -> DataFrame:
     """The committed state of the view: the version directory named by
     the last-applied watermark, or the pre-materialized base (written
     once at ``table_dir/base``) before any streaming commit."""
-    store = KVStore.instance(store_name)
-    cur = store.last_applied(f"{KEY_PREFIX}mv-last-applied:{scope}")
+    cur = KVStore.instance(store_name).last_applied(_marker(scope))
     d = (
         os.path.join(table_dir, "base")
         if cur < 0
@@ -99,9 +101,12 @@ def read_mv(
     return spark.read.schema(MV_SCHEMA).parquet(d)
 
 
-# TIME TRAVEL: the view as of an earlier committed batch
-# (``sinks.read_version``, as ``scd2.read_changes_at``).
-read_mv_at = partial(read_version, schema=MV_SCHEMA)
+def read_mv_at(
+    spark: SparkSession, table_dir: str, store_name: str, scope: str, batch_id: int
+) -> DataFrame:
+    """TIME TRAVEL: the view as of an earlier committed batch
+    (``sinks.read_version``, as ``scd2.read_changes_at``)."""
+    return read_version(spark, table_dir, store_name, _marker(scope), batch_id, MV_SCHEMA)
 
 
 def merge_mv_batch(
@@ -120,7 +125,7 @@ def merge_mv_batch(
         merged = merge_mv(prior, daily_rollup_mv(batch_df))
         merged.write.mode("overwrite").parquet(version_dir(table_dir, batch_id))
 
-    exactly_once(store_name, f"{KEY_PREFIX}mv-last-applied:{scope}", batch_id, merge)
+    exactly_once(store_name, _marker(scope), batch_id, merge)
 
 
 def merge_mv_backfill_batch(
@@ -155,4 +160,4 @@ def merge_mv_backfill_batch(
         )
         merged.write.mode("overwrite").parquet(version_dir(table_dir, batch_id))
 
-    exactly_once(store_name, f"{KEY_PREFIX}mv-last-applied:{scope}", batch_id, merge)
+    exactly_once(store_name, _marker(scope), batch_id, merge)

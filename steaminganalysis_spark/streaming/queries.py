@@ -1434,7 +1434,7 @@ def _run_mv_maintenance_stream(spark, sf_dir):
     """,
 )
 def stream_mv_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TIME TRAVEL over the streaming MV store (streaming/mv.py:99):
+    """TIME TRAVEL over the streaming MV store (mv.read_mv_at):
     run the same two-batch maintenance stream as
     q_stream_mv_maintenance, then read the view AS OF version 0 — the
     snapshot committed after the first micro-batch, i.e. base history
@@ -1451,8 +1451,10 @@ def stream_mv_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     from steaminganalysis_spark.streaming.mv import read_mv_at
     from steaminganalysis_spark.streaming.sinks import KVStore
 
-    table_dir, store_name, _scope = _run_mv_maintenance_stream(spark, sf_dir)
-    out = read_mv_at(spark, table_dir, 0).localCheckpoint(eager=True)
+    table_dir, store_name, scope = _run_mv_maintenance_stream(spark, sf_dir)
+    out = read_mv_at(spark, table_dir, store_name, scope, 0).localCheckpoint(
+        eager=True
+    )
     KVStore.reset(store_name)
     return out
 
@@ -2917,67 +2919,60 @@ def stream_table_cdc_dv(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------- the snapshot table as a STREAMING SOURCE (CDF, r13)
 
 
-def table_cdf_consumer_step(
+def _table_cdf_commit(
     spark: SparkSession,
-    src_table: str,
     mv_table: str,
-    version: int,
-    key_col: str,
-    store_name: str,
+    store,
     marker: str,
-    crash_before_watermark: bool = False,
-) -> str:
-    """Consume ONE committed source version as one micro-batch — the
-    Delta/Iceberg "table as streaming source" contract (one batch per
-    commit, offsets = snapshot versions) — applying its change-data
-    -feed to a downstream MV table exactly once. The consumer-side
-    crash algebra mirrors snapshot_ingest_sink's (ADVICE r12), one
-    level up the pipeline: (1) the KVStore watermark guard skips
-    versions already fully consumed; (2) the MV table's own manifest
-    ``txn`` marker detects a crash that landed BETWEEN the MV commit
-    and the watermark advance — the replay re-advances the watermark
-    WITHOUT committing a duplicate MV successor (double-applying a
-    signed delta is silent data corruption, not just extra rows);
-    (3) the signed-delta application itself is the q_table_mv_from_cdf
-    refresh (insert/update_postimage add, delete/update_preimage
-    subtract — integer-cent monoids, exact); (4) the watermark
-    advances LAST. Returns which arm ran ('applied' /
-    'skipped-watermark' / 'skipped-txn') so harnesses and pins can
-    assert the exact path. ``crash_before_watermark`` injects the
-    crash window.
+    start: int,
+    stop: int,
+    rows_of,
+    crash_before_watermark: bool,
+) -> tuple[str, int]:
+    """The exactly-once commit both table-CDF consumers share: fold
+    the source entries at offsets (start, stop] into the MV table as
+    ONE successor commit. An offset is the consumer's own (a source
+    version for table_cdf_consumer_step, an index into the signed
+    file log for table_cdf_signed_step); ``store``'s watermark at
+    ``marker`` holds the last one consumed, and the MV manifest's
+    ``txn`` map carries the same offset inside the MV commit.
 
-    Scale shape: each step reads O(changed files) via snap_diff's
-    manifest-grain cancellation, aggregates O(changed rows) deltas
-    with map-side combine, and commits an O(groups) MV — a 100 TB
-    source table whose commit touched 0.1% of files costs the
-    consumer 0.1% of a scan, forever, with no change journal written
-    by the producer."""
+    (1) A txn marker strictly inside (start, stop) clamps ``stop`` to
+    it: a restart with a larger batch after a crash-before-watermark
+    must not re-apply the entries the MV already absorbed. (2) A
+    marker at or past ``stop`` means the crash landed between the MV
+    commit and the watermark advance: the MV already holds this batch
+    (the log is deterministic), so only the watermark advances
+    ('skipped-txn'). (3) Otherwise ``rows_of(stop)`` gives the batch's
+    rows as (event_type, value, sign ±1); their signed count and cent
+    sum full-outer merge into the MV (integer-cent monoids, exact), a
+    group left with no rows drops, and the result commits by CAS with
+    ``txn[marker] = stop``. (4) The watermark advances LAST, unless
+    ``crash_before_watermark`` injects the crash. Returns (arm, stop).
+
+    Dropping a group at zero rows is exact: the signed log lists a
+    commit's removed files before its added ones, so after any slice
+    the MV is the aggregate of a real set of files, and a group with
+    no rows has no cents."""
     from steaminganalysis_spark.operators.storage import (
         _snap_add_files,
         _snap_commit_cas,
         _snap_latest_doc,
         _snap_read,
-        snap_diff,
     )
     from steaminganalysis_spark.registry import to_cents
-    from steaminganalysis_spark.streaming.sinks import KVStore
 
-    store = KVStore.instance(store_name)
-    if version <= store.last_applied(marker):
-        return "skipped-watermark"
     mv_v, mv_doc = _snap_latest_doc(mv_table)
     mv_txn = mv_doc.get("txn", {})
-    if int(mv_txn.get(marker, -1)) >= version:
-        # crash landed between the MV commit and the watermark
-        # advance: the MV already holds this version's delta
-        store.apply_batch(version, [], marker)
-        return "skipped-txn"
+    m = int(mv_txn.get(marker, -1))
+    if start < m < stop:
+        stop = m
+    if m >= stop:
+        store.apply_batch(stop, [], marker)
+        return "skipped-txn", stop
 
-    diff = snap_diff(spark, src_table, version - 1, version, key_col)
-    sign = F.when(
-        F.col("_change_type").isin("insert", "update_postimage"), F.lit(1)
-    ).otherwise(F.lit(-1))
-    delta = diff.groupBy("event_type").agg(
+    sign = F.col("sign")
+    delta = rows_of(stop).groupBy("event_type").agg(
         F.sum(sign).cast("long").alias("d_rows"),
         F.sum(sign * to_cents(F.col("value"))).cast("long").alias("d_cents"),
     )
@@ -2994,20 +2989,72 @@ def table_cdf_consumer_step(
         .filter(F.col("n_rows") > 0)
         .coalesce(1)
     )
-    files = _snap_add_files(mv1, mv_table, f"cdf_v{version}")
+    files = _snap_add_files(mv1, mv_table, f"cdfmv_{stop}")
     # CAS, not os.replace: the MV table has exactly one writer (this
     # consumer), so a lost race means a misconfigured second consumer
     # — fail loudly rather than clobber its commit.
     if not _snap_commit_cas(
-        mv_table, files, mv_v + 1, txn={**mv_txn, marker: version}
+        mv_table, files, mv_v + 1, txn={**mv_txn, marker: stop}
     ):
         raise RuntimeError(
             f"MV table {mv_table} has a concurrent writer (CAS lost)"
         )
-    if crash_before_watermark:
-        return "applied"  # harness-injected crash: watermark NOT advanced
-    store.apply_batch(version, [], marker)
-    return "applied"
+    if not crash_before_watermark:
+        store.apply_batch(stop, [], marker)
+    return "applied", stop
+
+
+def table_cdf_consumer_step(
+    spark: SparkSession,
+    src_table: str,
+    mv_table: str,
+    version: int,
+    key_col: str,
+    store_name: str,
+    marker: str,
+    crash_before_watermark: bool = False,
+) -> str:
+    """Consume ONE committed source version as one micro-batch — the
+    Delta/Iceberg "table as streaming source" contract (one batch per
+    commit, offsets = snapshot versions) — applying its change-data
+    -feed to a downstream MV table exactly once. A version at or below
+    the KVStore watermark is skipped outright; the rest is
+    `_table_cdf_commit`'s: the MV manifest's ``txn`` marker catches a
+    crash between the MV commit and the watermark advance (a replay
+    re-advances the watermark WITHOUT a duplicate MV successor —
+    double-applying a signed delta is silent data corruption, not
+    just extra rows), and the delta is the q_table_mv_from_cdf
+    refresh (insert/update_postimage add, delete/update_preimage
+    subtract). Returns which arm ran ('applied' / 'skipped-watermark'
+    / 'skipped-txn') so harnesses and pins can assert the exact path.
+    ``crash_before_watermark`` injects the crash window.
+
+    Scale shape: each step reads O(changed files) via snap_diff's
+    manifest-grain cancellation, aggregates O(changed rows) deltas
+    with map-side combine, and commits an O(groups) MV — a 100 TB
+    source table whose commit touched 0.1% of files costs the
+    consumer 0.1% of a scan, forever, with no change journal written
+    by the producer."""
+    from steaminganalysis_spark.operators.storage import snap_diff
+    from steaminganalysis_spark.streaming.sinks import KVStore
+
+    store = KVStore.instance(store_name)
+    if version <= store.last_applied(marker):
+        return "skipped-watermark"
+
+    def rows_of(_stop: int) -> DataFrame:
+        added = F.col("_change_type").isin("insert", "update_postimage")
+        return snap_diff(spark, src_table, version - 1, version, key_col).select(
+            "event_type",
+            "value",
+            F.when(added, F.lit(1)).otherwise(F.lit(-1)).alias("sign"),
+        )
+
+    arm, _ = _table_cdf_commit(
+        spark, mv_table, store, marker, version - 1, version, rows_of,
+        crash_before_watermark,
+    )
+    return arm
 
 
 @query(
@@ -3750,7 +3797,7 @@ def stream_table_epoch_tags(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------- rate-limited CDF source (r15, VERDICT r14 order #6)
 
 
-def table_cdf_backfill_step(
+def table_cdf_signed_step(
     spark: SparkSession,
     src_table: str,
     mv_table: str,
@@ -3759,36 +3806,40 @@ def table_cdf_backfill_step(
     marker: str,
     crash_before_watermark: bool = False,
 ) -> dict:
-    """Consume the NEXT ≤ ``max_files`` pending appended files of the
-    source table as ONE micro-batch — the maxFilesPerTrigger bound on
-    the table-as-streaming-source contract (q_stream_from_table_cdf
-    consumes one COMMIT per batch; a large backfill commit then lands
-    as one giant batch, exactly the failure Delta's
-    maxFilesPerTrigger exists for). Offsets are an INDEX into the
-    deterministic append-file log ((version, file) pairs in commit
-    order, files sorted within a commit — Delta's
-    (reservoirVersion, index) offset shape), persisted as the KVStore
-    watermark; the MV manifest's txn marker carries the same index so
-    a crash BETWEEN the MV commit and the watermark advance replays
-    into the skipped-txn arm and re-advances without double-applying.
-    Non-append commits in range REFUSE (a rewrite mixes copied and
-    changed rows — file-grain sub-batching is unsound; the unbounded
-    consumer's diff path owns that case). Returns the decision record
-    {"arm", "consumed", "offset"}.
+    """Consume the next ≤ ``max_files`` entries of the SIGNED file log
+    of the source table as ONE micro-batch — the maxFilesPerTrigger
+    bound on the table-as-streaming-source contract
+    (table_cdf_consumer_step consumes one COMMIT per batch, so a large
+    backfill or rewrite commit lands as one giant batch, exactly the
+    failure Delta's maxFilesPerTrigger exists for). Each commit
+    classifies into signed file entries — removed files (prev − cur)
+    as −1, added files (cur − prev) as +1, removed first, sorted
+    within each side — and a micro-batch applies Σ sign·agg(file) for
+    its slice. Sound because the MV is ADDITIVE (counts and cent-sums
+    under full-outer merge): a rewrite's net delta decomposes per file
+    and the slices commute within the drain, so a 3-entry MERGE
+    rewrite lands across two bounded batches whose intermediate states
+    are transient partial sums that converge exactly at the slice
+    boundary. An append-only log has +1 entries only. Offsets are an
+    index into the deterministic log ((file, sign) entries in commit
+    order — Delta's (reservoirVersion, index) shape), persisted as the
+    KVStore watermark; the MV commit, its txn marker and the clamp at
+    it are `_table_cdf_commit`'s, so a crash between the MV commit and
+    the watermark advance replays into the skipped-txn arm with
+    nothing re-applied. Removed files are read from their OLDER
+    manifests' storage — retention must cover the drain (the same
+    contract Delta's CDF reads have with VACUUM). Returns
+    {"arm", "consumed": [(file, sign), ...], "offset"}.
 
-    Scale: a 10k-file backfill into a 100 TB table drains as 10k/N
-    bounded batches, each O(max_files) reads + one O(groups) MV
-    commit, restartable at file grain with nothing replayed."""
+    Scale: a backfill, compaction or MERGE touching 10k files of a
+    100 TB table drains as 10k/N bounded batches, each O(max_files)
+    file reads + one O(groups) MV commit, restartable at entry
+    grain."""
     import json
     import os
+    from functools import reduce
 
-    from steaminganalysis_spark.operators.storage import (
-        _snap_add_files,
-        _snap_commit_cas,
-        _snap_latest_doc,
-        _snap_versions,
-    )
-    from steaminganalysis_spark.registry import to_cents
+    from steaminganalysis_spark.operators.storage import _snap_versions
     from steaminganalysis_spark.streaming.sinks import KVStore
 
     committed = _snap_versions(src_table)
@@ -3799,88 +3850,39 @@ def table_cdf_backfill_step(
         for v in sorted(committed)
     }
     vs = sorted(docs)
-    log: list[tuple[int, str]] = []
+    log: list[tuple[str, int]] = []
     prev = set(docs[vs[0]]["files"])
     for v in vs[1:]:
         cur = set(docs[v]["files"])
-        if not cur >= prev:
-            raise ValueError(
-                f"commit v{v} is not append-shaped: rate-limited "
-                "consumption is append-only (rewrites need the diff path)"
-            )
-        log.extend((v, f) for f in sorted(cur - prev))
+        log.extend((f, -1) for f in sorted(prev - cur))
+        log.extend((f, 1) for f in sorted(cur - prev))
         prev = cur
 
     store = KVStore.instance(store_name)
     offset = max(store.last_applied(marker), 0)
-    pending = log[offset:]
+    pending = log[offset : offset + max_files]
     if not pending:
         return {"arm": "idle", "consumed": [], "offset": offset}
 
-    mv_v, mv_doc = _snap_latest_doc(mv_table)
-    mv_txn = mv_doc.get("txn", {})
-    # Exactly-once across restarts with a DIFFERENT max_files (r16
-    # ADVICE): after a crash-before-watermark the MV's txn marker can
-    # sit strictly between offset and offset+max_files; an unclamped
-    # slice would pass the skipped-txn guard below and re-apply entries
-    # [offset, marker) the MV already absorbed. Clamp the batch so
-    # new_offset never crosses a marker ahead of the watermark — the
-    # skipped-txn arm then catches the store up to the marker first.
-    _m = int(mv_txn.get(marker, -1))
-    take = (_m - offset) if offset < _m < offset + max_files else max_files
-    batch = pending[:take]
-    new_offset = offset + len(batch)
-    if _m >= new_offset:
-        # crash landed between the MV commit and the watermark advance:
-        # the MV already holds exactly this slice (the log is
-        # deterministic, so the replayed batch IS the committed batch)
-        store.apply_batch(new_offset, [], marker)
-        return {
-            "arm": "skipped-txn",
-            "consumed": [f for _v, f in batch],
-            "offset": new_offset,
-        }
-
     ddir = os.path.join(src_table, "data")
-    delta = (
-        spark.read.parquet(*[os.path.join(ddir, f) for _v, f in batch])
-        .groupBy("event_type")
-        .agg(
-            F.count("*").cast("long").alias("d_rows"),
-            F.sum(to_cents(F.col("value"))).cast("long").alias("d_cents"),
-        )
-    )
-    from steaminganalysis_spark.operators.storage import _snap_read
 
-    mv1 = (
-        _snap_read(spark, mv_table, mv_v)
-        .join(delta, "event_type", "full_outer")
-        .select(
-            "event_type",
-            (F.coalesce("n_rows", F.lit(0)) + F.coalesce("d_rows", F.lit(0)))
-            .alias("n_rows"),
-            (F.coalesce("cents", F.lit(0)) + F.coalesce("d_cents", F.lit(0)))
-            .alias("cents"),
-        )
-        .coalesce(1)
+    def rows_of(stop: int) -> DataFrame:
+        batch = pending[: stop - offset]
+        parts = [
+            spark.read.parquet(
+                *[os.path.join(ddir, f) for f, s in batch if s == sign]
+            ).select("event_type", "value", F.lit(sign).alias("sign"))
+            for sign in {s for _f, s in batch}
+        ]
+        return reduce(DataFrame.unionByName, parts)
+
+    arm, new_offset = _table_cdf_commit(
+        spark, mv_table, store, marker, offset, offset + len(pending), rows_of,
+        crash_before_watermark,
     )
-    files = _snap_add_files(mv1, mv_table, f"cdfrl_{new_offset}")
-    if not _snap_commit_cas(
-        mv_table, files, mv_v + 1, txn={**mv_txn, marker: new_offset}
-    ):
-        raise RuntimeError(
-            f"MV table {mv_table} has a concurrent writer (CAS lost)"
-        )
-    if crash_before_watermark:
-        return {
-            "arm": "applied",
-            "consumed": [f for _v, f in batch],
-            "offset": new_offset,
-        }
-    store.apply_batch(new_offset, [], marker)
     return {
-        "arm": "applied",
-        "consumed": [f for _v, f in batch],
+        "arm": arm,
+        "consumed": pending[: new_offset - offset],
         "offset": new_offset,
     }
 
@@ -3906,17 +3908,18 @@ def stream_from_table_cdf_ratelimited(
     """RATE-LIMITED TABLE-AS-STREAMING-SOURCE (VERDICT r14 order #6)
     — the maxFilesPerTrigger refinement of q_stream_from_table_cdf:
     the producer commits v0 (history) then ONE large backfill append
-    of FIVE files (v1); the consumer drains it with max_files=2, so
-    the single commit splits across THREE micro-batches (asserted —
-    the batch plan is [2, 2, 1] by file count). Exactly-once across a
-    MID-BACKFILL crash, asserted live: batch 2 crashes between its MV
-    commit and the watermark advance; the restart replays the SAME
-    log slice (offsets are indexes into the deterministic append-file
-    log — the (reservoirVersion, index) shape), takes the
-    manifest-txn skip arm, re-advances the watermark, and the MV
-    commit count is unchanged — NOTHING re-applied. A non-append
-    (rewrite) commit then refuses loudly (asserted). Final gates: the
-    MV equals the re-aggregated source head (exceptAll both ways) and
+    of FIVE files (v1); table_cdf_signed_step drains it with
+    max_files=2, so the single commit splits across THREE
+    micro-batches (asserted — the batch plan is [2, 2, 1] by file
+    count, every entry +1). Exactly-once across a MID-BACKFILL crash,
+    asserted live: batch 2 crashes between its MV commit and the
+    watermark advance; the restart replays the SAME log slice
+    (offsets are indexes into the deterministic signed file log — the
+    (reservoirVersion, index) shape), takes the manifest-txn skip arm,
+    re-advances the watermark, and the MV commit count is unchanged —
+    NOTHING re-applied. Rewrite commits drain through the same step
+    (q_stream_from_table_rewrite_ratelimited). Final gates: the MV
+    equals the re-aggregated source head (exceptAll both ways) and
     hash-checks against raw events with the backfill stated in SQL.
 
     Scale: the whole point — a backfill writing 10k files into a
@@ -3928,11 +3931,9 @@ def stream_from_table_cdf_ratelimited(
         _snap_add_files,
         _snap_add_files_with_stats,
         _snap_commit,
-        _snap_latest_doc,
         _snap_read,
         _snap_versions,
         snap_append_optimistic,
-        snap_compact_optimistic,
     )
     from steaminganalysis_spark.registry import to_cents
     from steaminganalysis_spark.scratch import scratch_dir
@@ -3981,7 +3982,7 @@ def stream_from_table_cdf_ratelimited(
     _snap_commit(mv, _snap_add_files(mv0, mv, "cdfrl_mv0"), 0, txn={marker: 0})
     KVStore.instance(store_name).apply_batch(0, [], marker)
 
-    step = lambda **kw: table_cdf_backfill_step(  # noqa: E731
+    step = lambda **kw: table_cdf_signed_step(  # noqa: E731
         spark, src, mv, 2, store_name, marker, **kw
     )
     recs = [step(), step(crash_before_watermark=True)]
@@ -3997,26 +3998,13 @@ def stream_from_table_cdf_ratelimited(
     if recs[2]["consumed"] != recs[1]["consumed"]:
         raise RuntimeError("replay consumed a different slice")
     if sorted(
-        f for r in recs if r["arm"] == "applied" for f in r["consumed"]
-    ) != sorted(backfill):
+        e for r in recs if r["arm"] == "applied" for e in r["consumed"]
+    ) != sorted((f, 1) for f in backfill):
         raise RuntimeError("applied batches do not tile the backfill exactly")
     if sorted(_snap_versions(mv)) != [0, 1, 2, 3]:
         raise RuntimeError("duplicate or missing MV commit after replay")
     if KVStore.instance(store_name).last_applied(marker) != 5:
         raise RuntimeError("watermark did not reach the log end")
-
-    # a rewrite commit makes the range non-append: must refuse
-    rw = _snap_add_files(
-        spark.read.parquet(os.path.join(src, "data", base[0])),
-        src,
-        "cdfrl_rw",
-    )
-    snap_compact_optimistic(src, [base[0]], rw)
-    try:
-        step()
-        raise RuntimeError("rate-limited step consumed a rewrite commit")
-    except ValueError:
-        pass
 
     final = _snap_read(spark, mv, 3).localCheckpoint(eager=True)
     reagg = (
@@ -4043,145 +4031,6 @@ def stream_from_table_cdf_ratelimited(
     return out
 
 
-def table_cdf_signed_step(
-    spark: SparkSession,
-    src_table: str,
-    mv_table: str,
-    max_files: int,
-    store_name: str,
-    marker: str,
-    crash_before_watermark: bool = False,
-) -> dict:
-    """Consume the next ≤ ``max_files`` entries of the SIGNED
-    append-file log — the r16 completion of table_cdf_backfill_step
-    (VERDICT r15 order #6): that consumer REFUSES non-append commits
-    and hands them to the unbounded diff path, which then lands a
-    whole rewrite as one batch. This one bounds that arm too. Each
-    commit classifies into signed file entries — removed files
-    (prev − cur) as −1, added files (cur − prev) as +1, removed
-    first, sorted within each side — and a micro-batch applies
-    Σ sign·agg(file) for its slice. Sound because the MV is ADDITIVE
-    (counts and cent-sums under full-outer merge): a rewrite's net
-    delta decomposes per file and the slices commute within the
-    drain, so a 3-entry MERGE rewrite lands across two bounded
-    batches whose intermediate states are transient partial sums that
-    converge exactly at the slice boundary. Appends degenerate to the
-    backfill consumer's behavior (adds only). Offsets stay an index
-    into the deterministic signed log ((version, file, sign) in
-    commit order — the (reservoirVersion, index) shape); the MV
-    manifest's txn marker carries the same index, so a crash between
-    the MV commit and the watermark advance replays into the
-    skipped-txn arm with nothing re-applied. Removed files are read
-    from their OLDER manifests' storage — retention must cover the
-    drain (the same contract Delta's CDF reads have with VACUUM).
-    Returns {"arm", "consumed", "offset"}.
-
-    Scale: a compaction or MERGE touching 10k files of a 100 TB
-    table drains as 10k/N bounded batches, each O(max_files) file
-    reads + one O(groups) MV commit, restartable at entry grain."""
-    import json
-    import os
-
-    from steaminganalysis_spark.operators.storage import (
-        _snap_add_files,
-        _snap_commit_cas,
-        _snap_latest_doc,
-        _snap_read,
-        _snap_versions,
-    )
-    from steaminganalysis_spark.registry import to_cents
-    from steaminganalysis_spark.streaming.sinks import KVStore
-
-    committed = _snap_versions(src_table)
-    docs = {
-        v: json.loads(
-            open(os.path.join(src_table, "manifests", committed[v])).read()
-        )
-        for v in sorted(committed)
-    }
-    vs = sorted(docs)
-    log: list[tuple[int, str, int]] = []
-    prev = set(docs[vs[0]]["files"])
-    for v in vs[1:]:
-        cur = set(docs[v]["files"])
-        log.extend((v, f, -1) for f in sorted(prev - cur))
-        log.extend((v, f, 1) for f in sorted(cur - prev))
-        prev = cur
-
-    store = KVStore.instance(store_name)
-    offset = max(store.last_applied(marker), 0)
-    pending = log[offset:]
-    if not pending:
-        return {"arm": "idle", "consumed": [], "offset": offset}
-
-    mv_v, mv_doc = _snap_latest_doc(mv_table)
-    mv_txn = mv_doc.get("txn", {})
-    # clamp the slice at a txn marker ahead of the watermark (r16
-    # ADVICE, low — see table_cdf_backfill_step): a restart with a
-    # larger max_files after a crash-before-watermark must not re-apply
-    # entries [offset, marker) the MV already absorbed.
-    _m = int(mv_txn.get(marker, -1))
-    take = (_m - offset) if offset < _m < offset + max_files else max_files
-    batch = pending[:take]
-    new_offset = offset + len(batch)
-    if _m >= new_offset:
-        store.apply_batch(new_offset, [], marker)
-        return {
-            "arm": "skipped-txn",
-            "consumed": [(f, s) for _v, f, s in batch],
-            "offset": new_offset,
-        }
-
-    ddir = os.path.join(src_table, "data")
-    parts = []
-    for sign in (1, -1):
-        fl = [f for _v, f, s in batch if s == sign]
-        if fl:
-            parts.append(
-                spark.read.parquet(*[os.path.join(ddir, f) for f in fl])
-                .groupBy("event_type")
-                .agg(
-                    (F.count("*") * sign).cast("long").alias("d_rows"),
-                    (F.sum(to_cents(F.col("value"))) * sign)
-                    .cast("long")
-                    .alias("d_cents"),
-                )
-            )
-    delta = parts[0]
-    for p in parts[1:]:
-        delta = delta.unionByName(p)
-    delta = delta.groupBy("event_type").agg(
-        F.sum("d_rows").cast("long").alias("d_rows"),
-        F.sum("d_cents").cast("long").alias("d_cents"),
-    )
-    mv1 = (
-        _snap_read(spark, mv_table, mv_v)
-        .join(delta, "event_type", "full_outer")
-        .select(
-            "event_type",
-            (F.coalesce("n_rows", F.lit(0)) + F.coalesce("d_rows", F.lit(0)))
-            .alias("n_rows"),
-            (F.coalesce("cents", F.lit(0)) + F.coalesce("d_cents", F.lit(0)))
-            .alias("cents"),
-        )
-        .coalesce(1)
-    )
-    files = _snap_add_files(mv1, mv_table, f"cdfsg_{new_offset}")
-    if not _snap_commit_cas(
-        mv_table, files, mv_v + 1, txn={**mv_txn, marker: new_offset}
-    ):
-        raise RuntimeError(
-            f"MV table {mv_table} has a concurrent writer (CAS lost)"
-        )
-    if not crash_before_watermark:
-        store.apply_batch(new_offset, [], marker)
-    return {
-        "arm": "applied",
-        "consumed": [(f, s) for _v, f, s in batch],
-        "offset": new_offset,
-    }
-
-
 @query(
     "q_stream_from_table_rewrite_ratelimited",
     oracle=f"""
@@ -4206,8 +4055,8 @@ def stream_from_table_rewrite_ratelimited(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """RATE-LIMITED CONSUMPTION OF REWRITE COMMITS (r16, VERDICT r15
-    order #6) — the arm q_stream_from_table_cdf_ratelimited refuses,
-    bounded: the source commits v0 (two explicit-range history
+    order #6) — the arm q_stream_from_table_cdf_ratelimited's
+    append-only log never exercises, bounded: the source commits v0 (two explicit-range history
     files), v1 (a four-file backfill append), v2 (a MERGE-shaped
     rewrite — the lower-range file rewritten into TWO files with
     value doubled where event_id % 50 = 3), and v3 (a pure compaction
@@ -4234,7 +4083,6 @@ def stream_from_table_rewrite_ratelimited(
     from steaminganalysis_spark.operators.storage import (
         _snap_add_files,
         _snap_commit,
-        _snap_latest_doc,
         _snap_read,
         _snap_versions,
         snap_append_optimistic,

@@ -44,8 +44,6 @@ Scale shape (100 TB contract):
 
 from __future__ import annotations
 
-from functools import partial
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -61,22 +59,30 @@ from steaminganalysis_spark.streaming.sinks import (
 CHANGES_SCHEMA = "user_id long, status string, ts timestamp, event_id long"
 
 
+def _marker(scope: str) -> str:
+    return f"{KEY_PREFIX}scd2-last-applied:{scope}"
+
+
 def read_changes(
     spark: SparkSession, table_dir: str, store_name: str, scope: str
 ) -> DataFrame:
     """The committed state of the change table: the version directory
     named by the last-applied watermark (empty frame before any
     commit)."""
-    store = KVStore.instance(store_name)
-    cur = store.last_applied(f"{KEY_PREFIX}scd2-last-applied:{scope}")
+    cur = KVStore.instance(store_name).last_applied(_marker(scope))
     if cur < 0:
         return spark.createDataFrame([], CHANGES_SCHEMA)
     return spark.read.schema(CHANGES_SCHEMA).parquet(version_dir(table_dir, cur))
 
 
-# TIME TRAVEL: the change table as of an earlier committed batch
-# (``sinks.read_version``) — the dimension as it was.
-read_changes_at = partial(read_version, schema=CHANGES_SCHEMA)
+def read_changes_at(
+    spark: SparkSession, table_dir: str, store_name: str, scope: str, batch_id: int
+) -> DataFrame:
+    """TIME TRAVEL: the change table as of an earlier committed batch
+    (``sinks.read_version``) — the dimension as it was."""
+    return read_version(
+        spark, table_dir, store_name, _marker(scope), batch_id, CHANGES_SCHEMA
+    )
 
 
 def merge_cdc_batch(
@@ -132,7 +138,7 @@ def merge_cdc_batch(
         merged = prior.unionByName(new_changes)
         merged.write.mode("overwrite").parquet(version_dir(table_dir, batch_id))
 
-    exactly_once(store_name, f"{KEY_PREFIX}scd2-last-applied:{scope}", batch_id, merge)
+    exactly_once(store_name, _marker(scope), batch_id, merge)
 
 
 def intervals_from_changes(changes: DataFrame) -> DataFrame:

@@ -263,16 +263,23 @@ def version_dir(table_dir: str, batch_id: int) -> str:
 
 
 def read_version(
-    spark: SparkSession, table_dir: str, batch_id: int, schema: str
+    spark: SparkSession,
+    table_dir: str,
+    store_name: str,
+    marker: str,
+    batch_id: int,
+    schema: str,
 ) -> DataFrame:
     """TIME TRAVEL: a version store as of an earlier committed batch.
     Every merge writes a full self-contained version directory before
     advancing its marker, so any version at or below the marker is a
     consistent snapshot (``VERSION AS OF``; a retention sweep would
-    prune old ``v<k>`` dirs on a real deployment). An absent version
-    is an error, not an empty frame."""
+    prune old ``v<k>`` dirs on a real deployment). A version above the
+    last-applied id at ``marker`` in ``store_name`` — one a crash left
+    written but never committed — is refused like an absent one: an
+    error, not an empty frame."""
     d = version_dir(table_dir, batch_id)
-    if not os.path.isdir(d):
+    if batch_id > KVStore.instance(store_name).last_applied(marker) or not os.path.isdir(d):
         raise FileNotFoundError(f"no committed version {batch_id} at {table_dir}")
     return spark.read.schema(schema).parquet(d)
 

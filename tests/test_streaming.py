@@ -1266,16 +1266,21 @@ def test_scd2_time_travel_reads_historical_version(spark, tmp_path):
     store = f"scd2_tt_{os.getpid()}"
     tdir = str(tmp_path / "table")
     merge_cdc_batch(df(b0), 0, tdir, store, "s")
-    after_b0 = {tuple(r) for r in read_changes_at(spark, tdir, 0).collect()}
+    after_b0 = {tuple(r) for r in read_changes_at(spark, tdir, store, "s", 0).collect()}
     merge_cdc_batch(df(b1), 1, tdir, store, "s")
 
     # version 0 is untouched by batch 1's merge
-    assert {tuple(r) for r in read_changes_at(spark, tdir, 0).collect()} == after_b0
+    assert {tuple(r) for r in read_changes_at(spark, tdir, store, "s", 0).collect()} == after_b0
     head = {tuple(r) for r in read_changes(spark, tdir, store, "s").collect()}
     assert after_b0 < head  # strictly grew: user 1 gained the 'b' change
     assert len(after_b0) == 2 and len(head) == 3  # duplicate x dropped
     with _pytest.raises(FileNotFoundError):
-        read_changes_at(spark, tdir, 7)
+        read_changes_at(spark, tdir, store, "s", 7)
+    # a version dir above the watermark (a crash before the marker
+    # advanced) is refused like an absent one
+    df(b0).write.parquet(os.path.join(tdir, "v9"))
+    with _pytest.raises(FileNotFoundError):
+        read_changes_at(spark, tdir, store, "s", 9)
     KVStore.reset(store)
 
 
@@ -1673,12 +1678,17 @@ def test_mv_time_travel_reads_historical_version(spark, tmp_path):
     merge_mv_batch(df(b0), 0, tdir, store, "s")
     merge_mv_batch(df(b1), 1, tdir, store, "s")
 
-    v0 = sorted(map(tuple, read_mv_at(spark, tdir, 0).collect()))
+    v0 = sorted(map(tuple, read_mv_at(spark, tdir, store, "s", 0).collect()))
     assert v0 == sorted(map(tuple, daily_rollup_mv(df(base + b0)).collect()))
-    v1 = sorted(map(tuple, read_mv_at(spark, tdir, 1).collect()))
+    v1 = sorted(map(tuple, read_mv_at(spark, tdir, store, "s", 1).collect()))
     assert v1 == sorted(map(tuple, daily_rollup_mv(df(base + b0 + b1)).collect()))
     with pytest.raises(FileNotFoundError):
-        read_mv_at(spark, tdir, 7)
+        read_mv_at(spark, tdir, store, "s", 7)
+    # a version dir above the watermark (a crash before the marker
+    # advanced) is refused like an absent one
+    daily_rollup_mv(df(b1)).write.parquet(os.path.join(tdir, "v9"))
+    with pytest.raises(FileNotFoundError):
+        read_mv_at(spark, tdir, store, "s", 9)
     KVStore.reset(store)
 
 
@@ -2301,7 +2311,7 @@ def test_cdc_merge_sink_replay_pruning_and_stats_carry(spark):
         _snap_add_files_with_stats,
         _snap_commit_stats,
         _snap_latest,
-        _snap_latest_with_stats,
+        _snap_latest_doc,
         _snap_read,
     )
     from steaminganalysis_spark.scratch import scratch_dir
@@ -2343,7 +2353,8 @@ def test_cdc_merge_sink_replay_pruning_and_stats_carry(spark):
 
     # (a) batch 0 updates keys 0..49 — inside the FIRST file's span only
     sink(batch(0, 49, 1000.0, 10_000, 5), 0)
-    v1, files1, stats1 = _snap_latest_with_stats(table)
+    v1, doc1 = _snap_latest_doc(table)
+    files1, stats1 = doc1["files"], doc1.get("stats", {})
     assert v1 == 1
     survivors = [f for f in files if f in files1]
     assert len(survivors) == 3, "exactly one span-matched file rewritten"
@@ -2370,7 +2381,8 @@ def test_cdc_merge_sink_replay_pruning_and_stats_carry(spark):
     )
     assert _snap_read(spark, table).count() == 405  # orphans invisible
     sink(b1, 1)  # replay after the crash
-    v2, files2, stats2 = _snap_latest_with_stats(table)
+    v2, doc2 = _snap_latest_doc(table)
+    files2 = doc2["files"]
     assert v2 == 2
     got = _snap_read(spark, table)
     assert got.count() == 408  # 405 + 3 inserts, despite orphans
@@ -2632,7 +2644,9 @@ def test_table_cdf_consumer_crash_arms_and_group_lifecycle(spark):
     commit-then-crash replay (applied -> skipped-txn -> skipped-
     watermark), with exactly one MV commit for the crashed version;
     (2) a group deleted to zero rows DROPS from the MV (never lingers
-    at 0); (3) a group born in a later version appears."""
+    at 0); (3) a group born in a later version appears. (2) and (3)
+    hold for table_cdf_signed_step too, draining the same two-version
+    source into a second MV."""
     from steaminganalysis_spark.operators.storage import (
         _snap_add_files,
         _snap_commit,
@@ -2643,11 +2657,12 @@ def test_table_cdf_consumer_crash_arms_and_group_lifecycle(spark):
     from steaminganalysis_spark.scratch import scratch_dir
     from steaminganalysis_spark.streaming.queries import (
         table_cdf_consumer_step,
+        table_cdf_signed_step,
     )
     from steaminganalysis_spark.streaming.sinks import KEY_PREFIX, KVStore
 
-    src = f"{scratch_dir('cdfpin')}/src"
-    mv = f"{scratch_dir('cdfpin')}/mv"
+    root = scratch_dir("cdfpin")
+    src, mv, mv_sg = f"{root}/src", f"{root}/mv", f"{root}/mv_sg"
     v0 = spark.createDataFrame(
         [(1, "a", 1.0), (2, "a", 2.0), (3, "b", 3.0)],
         "event_id long, event_type string, value double",
@@ -2666,8 +2681,10 @@ def test_table_cdf_consumer_crash_arms_and_group_lifecycle(spark):
         F.count("*").cast("long").alias("n_rows"),
         F.sum(to_cents(F.col("value"))).cast("long").alias("cents"),
     )
-    _snap_commit(mv, _snap_add_files(mv0, mv, "m0"), 0, txn={marker: 0})
+    for table in (mv, mv_sg):
+        _snap_commit(table, _snap_add_files(mv0, table, "m0"), 0, txn={marker: 0})
     KVStore.instance(store_name).apply_batch(0, [], marker)
+    KVStore.instance(f"{store_name}_sg").apply_batch(0, [], marker)
 
     arms = [
         table_cdf_consumer_step(
@@ -2683,12 +2700,24 @@ def test_table_cdf_consumer_crash_arms_and_group_lifecycle(spark):
     ]
     assert arms == ["applied", "skipped-txn", "skipped-watermark"]
     assert sorted(_snap_versions(mv)) == [0, 1]  # exactly one v1 commit
-    got = {
-        r.event_type: (r.n_rows, r.cents)
-        for r in _snap_read(spark, mv).collect()
-    }
-    assert got == {"a": (2, 300), "c": (1, 900)}  # b dropped, c born
+    # the signed consumer drains v1's rewrite (v0's files removed,
+    # v1's added): one batch, or two when the frames wrote more than
+    # five files between them
+    sg = [
+        table_cdf_signed_step(spark, src, mv_sg, 5, f"{store_name}_sg", marker)
+        for _ in range(4)
+    ]
+    n = [r["arm"] for r in sg].count("applied")
+    assert n >= 1 and [r["arm"] for r in sg] == ["applied"] * n + ["idle"] * (4 - n)
+    assert {s for r in sg for _f, s in r["consumed"]} == {-1, 1}
+    for table in (mv, mv_sg):
+        got = {
+            r.event_type: (r.n_rows, r.cents)
+            for r in _snap_read(spark, table).collect()
+        }
+        assert got == {"a": (2, 300), "c": (1, 900)}, (table, got)  # b dropped, c born
     KVStore.reset(store_name)
+    KVStore.reset(f"{store_name}_sg")
 
 
 def test_ingest_sink_commutes_with_concurrent_compaction(spark):
@@ -2810,68 +2839,63 @@ def test_cdf_step_restart_with_larger_max_files_clamps_at_marker(spark):
     strictly between offset and offset+max_files. The consumer must
     clamp its slice at the marker (skipped-txn catch-up first), never
     re-apply entries [offset, marker) the MV already absorbed — an
-    unclamped slice double-counts the additive MV. Pinned for BOTH
-    bounded consumers (backfill and signed)."""
+    unclamped slice double-counts the additive MV. Pinned on
+    table_cdf_signed_step, the one bounded consumer, over an
+    append-only source: its log has +1 entries only, the backfill
+    shape q_stream_from_table_cdf_ratelimited drains."""
     from steaminganalysis_spark.operators.storage import (
         _snap_add_files,
         _snap_commit,
+        _snap_latest_doc,
         _snap_read,
     )
     from steaminganalysis_spark.registry import to_cents
     from steaminganalysis_spark.scratch import scratch_dir
-    from steaminganalysis_spark.streaming.queries import (
-        table_cdf_backfill_step,
-        table_cdf_signed_step,
-    )
+    from steaminganalysis_spark.streaming.queries import table_cdf_signed_step as step
     from steaminganalysis_spark.streaming.sinks import KEY_PREFIX, KVStore
 
-    for tag, step in (
-        ("clampbf", table_cdf_backfill_step),
-        ("clampsg", table_cdf_signed_step),
-    ):
-        src = f"{scratch_dir(tag)}/src"
-        mv = f"{scratch_dir(tag)}/mv"
-        v0 = spark.createDataFrame(
-            [(1, "a", 1.0)], "event_id long, event_type string, value double"
+    tag = "clampsg"
+    root = scratch_dir(tag)
+    src, mv = f"{root}/src", f"{root}/mv"
+    v0 = spark.createDataFrame(
+        [(1, "a", 1.0)], "event_id long, event_type string, value double"
+    )
+    _snap_commit(src, _snap_add_files(v0, src, "c0"), 0)
+    # three append commits -> a 3-entry (+1) log past the MV base
+    rows = [(2, "a", 2.0), (3, "b", 3.0), (4, "b", 4.0)]
+    for i, row in enumerate(rows):
+        inc = spark.createDataFrame(
+            [row], "event_id long, event_type string, value double"
+        ).coalesce(1)  # exactly ONE file per commit -> a 3-entry log
+        v, doc = _snap_latest_doc(src)
+        _snap_commit(
+            src, doc["files"] + _snap_add_files(inc, src, f"c{i+1}"), v + 1
         )
-        _snap_commit(src, _snap_add_files(v0, src, "c0"), 0)
-        # three append commits -> a 3-entry (+1) log past the MV base
-        rows = [(2, "a", 2.0), (3, "b", 3.0), (4, "b", 4.0)]
-        for i, row in enumerate(rows):
-            inc = spark.createDataFrame(
-                [row], "event_id long, event_type string, value double"
-            ).coalesce(1)  # exactly ONE file per commit -> a 3-entry log
-            from steaminganalysis_spark.operators.storage import _snap_latest_doc
 
-            v, doc = _snap_latest_doc(src)
-            _snap_commit(
-                src, doc["files"] + _snap_add_files(inc, src, f"c{i+1}"), v + 1
-            )
+    marker = f"{KEY_PREFIX}{tag}:x"
+    store_name = f"{tag}_store"
+    mv0 = v0.groupBy("event_type").agg(
+        F.count("*").cast("long").alias("n_rows"),
+        F.sum(to_cents(F.col("value"))).cast("long").alias("cents"),
+    )
+    _snap_commit(mv, _snap_add_files(mv0, mv, "m0"), 0, txn={marker: 0})
+    KVStore.instance(store_name).apply_batch(0, [], marker)
 
-        marker = f"{KEY_PREFIX}{tag}:x"
-        store_name = f"{tag}_store"
-        mv0 = v0.groupBy("event_type").agg(
-            F.count("*").cast("long").alias("n_rows"),
-            F.sum(to_cents(F.col("value"))).cast("long").alias("cents"),
-        )
-        _snap_commit(mv, _snap_add_files(mv0, mv, "m0"), 0, txn={marker: 0})
-        KVStore.instance(store_name).apply_batch(0, [], marker)
-
-        # crash: MV commits marker=1, watermark stays 0
-        r = step(
-            spark, src, mv, 1, store_name, marker, crash_before_watermark=True
-        )
-        assert r["arm"] == "applied" and r["offset"] == 1
-        # restart with LARGER max_files: must clamp at the marker and
-        # catch the store up WITHOUT re-applying entry 0
-        r2 = step(spark, src, mv, 3, store_name, marker)
-        assert r2["arm"] == "skipped-txn" and r2["offset"] == 1
-        # drain the rest; MV must equal the full aggregate exactly once
-        r3 = step(spark, src, mv, 3, store_name, marker)
-        assert r3["arm"] == "applied" and r3["offset"] == 3
-        got = {
-            r.event_type: (r.n_rows, r.cents)
-            for r in _snap_read(spark, mv).collect()
-        }
-        assert got == {"a": (2, 300), "b": (2, 700)}, (tag, got)
-        KVStore.reset(store_name)
+    # crash: MV commits marker=1, watermark stays 0
+    r = step(
+        spark, src, mv, 1, store_name, marker, crash_before_watermark=True
+    )
+    assert r["arm"] == "applied" and r["offset"] == 1
+    # restart with LARGER max_files: must clamp at the marker and
+    # catch the store up WITHOUT re-applying entry 0
+    r2 = step(spark, src, mv, 3, store_name, marker)
+    assert r2["arm"] == "skipped-txn" and r2["offset"] == 1
+    # drain the rest; MV must equal the full aggregate exactly once
+    r3 = step(spark, src, mv, 3, store_name, marker)
+    assert r3["arm"] == "applied" and r3["offset"] == 3
+    got = {
+        r.event_type: (r.n_rows, r.cents)
+        for r in _snap_read(spark, mv).collect()
+    }
+    assert got == {"a": (2, 300), "b": (2, 700)}, (tag, got)
+    KVStore.reset(store_name)
