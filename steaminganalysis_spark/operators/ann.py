@@ -961,13 +961,13 @@ def snap_ann_index_update(
     from steaminganalysis_spark.operators.storage import (
         _snap_add_files,
         _snap_commit_cas,
-        _snap_latest_doc,
+        _snap_doc,
         _snap_versions,
         snap_read_incremental,
     )
 
     corpus_latest = max(_snap_versions(corpus_table))
-    iv, idoc = _snap_latest_doc(index_table)
+    iv, idoc = _snap_doc(index_table)
     covered = idoc["covers_corpus_version"]
     if corpus_latest == covered:
         return {
@@ -1001,7 +1001,7 @@ def snap_ann_index_update(
     assigned = _frozen_assign(spark, index_dir, delta)
     shards = _snap_add_files(assigned.coalesce(1), index_table, "annix_shard")
     for _ in range(max_retries):
-        v, doc = _snap_latest_doc(index_table)
+        v, doc = _snap_doc(index_table)
         if doc["covers_corpus_version"] >= corpus_latest:
             return {  # a concurrent updater already covered it
                 "strategy": "lost-race",
@@ -1066,7 +1066,7 @@ def table_ann_index_commits(spark: SparkSession, sf_dir: str) -> DataFrame:
     from steaminganalysis_spark.operators.storage import (
         _snap_add_files,
         _snap_commit_cas,
-        _snap_latest_doc,
+        _snap_doc,
         _snap_read,
         snap_append_optimistic,
     )
@@ -1126,7 +1126,7 @@ def table_ann_index_commits(spark: SparkSession, sf_dir: str) -> DataFrame:
     if ix.count() != full.count() or ix.exceptAll(full).count() != 0:
         raise RuntimeError("incremental index diverged from full rebuild")
 
-    _, idoc = _snap_latest_doc(index_table)
+    _, idoc = _snap_doc(index_table)
     if idoc["covers_corpus_version"] != 1:
         raise RuntimeError("index manifest marker did not advance")
 

@@ -16,6 +16,7 @@ few directories.
 
 from __future__ import annotations
 
+import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -955,32 +956,18 @@ def _snap_commit(
     version: int,
     stats: dict | None = None,
     txn: dict | None = None,
+    extra: dict | None = None,
 ) -> None:
-    """Atomic manifest commit: write the complete file list to a temp
-    path, fsync, then os.replace to manifests/v{N}.json — readers
-    either see the whole snapshot or the previous one, never a torn
-    list. This is the Iceberg/Delta commit primitive reduced to its
-    load-bearing core (one atomic rename of a self-contained
-    manifest). ``txn`` is the Delta txn appId→version pattern: a
-    {writer_marker: last_batch_id} map riding the manifest so a
-    streaming sink that crashed AFTER the commit but BEFORE its
-    external watermark advance can detect its own committed batch on
-    replay (see snapshot_ingest_sink)."""
-    import json
-
-    mdir = os.path.join(table, "manifests")
-    os.makedirs(mdir, exist_ok=True)
-    tmp = os.path.join(mdir, f".v{version}.json.inprogress")
-    doc: dict = {"version": version, "files": sorted(files)}
-    if stats is not None:
-        doc["stats"] = stats
-    if txn is not None:
-        doc["txn"] = txn
-    with open(tmp, "w") as f:
-        json.dump(doc, f)
-        f.flush()
-        os.fsync(f.fileno())
-    os.replace(tmp, os.path.join(mdir, f"v{version}.json"))
+    """Atomic manifest commit that must create manifests/v{N}.json:
+    _snap_commit_cas publishes the complete document or nothing, and
+    a version that is already committed raises FileExistsError
+    instead of being overwritten. ``txn`` is the Delta txn
+    appId→version pattern: a {writer_marker: last_batch_id} map riding
+    the manifest so a streaming sink that crashed AFTER the commit but
+    BEFORE its external watermark advance can detect its own committed
+    batch on replay (see snapshot_ingest_sink)."""
+    if not _snap_commit_cas(table, files, version, stats, txn, extra=extra):
+        raise FileExistsError(f"snapshot v{version} of {table} is already committed")
 
 
 def _snap_versions(table: str) -> dict[int, str]:
@@ -997,34 +984,33 @@ def _snap_versions(table: str) -> dict[int, str]:
     }
 
 
-def _snap_latest(table: str) -> tuple[int, list[str]]:
-    """(latest committed version, its file list) — the lookup writers
-    use to build the successor manifest. Decouples manifest versions
-    from any external counter (e.g. a streaming sink's batch id, which
-    restarts at 0 on a fresh checkpoint against an old table)."""
-    import json
+def _snap_doc(table: str, version: int | None = None) -> tuple[int, dict]:
+    """(version, FULL manifest doc) of a committed snapshot — the one
+    place a manifest is opened. ``version=None`` resolves the latest
+    committed version, which decouples manifest versions from any
+    external counter (e.g. a streaming sink's batch id, which restarts
+    at 0 on a fresh checkpoint against an old table). Keys absent from
+    older manifests read as missing, never as errors."""
+    v = max(_snap_versions(table)) if version is None else version
+    try:
+        with open(os.path.join(table, "manifests", f"v{v}.json")) as f:
+            return v, json.load(f)
+    except FileNotFoundError:
+        raise ValueError(
+            f"snapshot v{v} is not committed (have {sorted(_snap_versions(table))})"
+        ) from None
 
-    committed = _snap_versions(table)
-    v = max(committed)
-    manifest = json.loads(
-        open(os.path.join(table, "manifests", committed[v])).read()
-    )
-    return v, manifest["files"]
 
-
-def _snap_latest_doc(table: str) -> tuple[int, dict]:
-    """(latest committed version, FULL manifest doc) — the lookup for
-    writers that need more than the file list: the ``txn`` marker map
-    (idempotent streaming commits) and/or the ``stats`` bounds. Keys
-    absent from older manifests read as missing, never as errors."""
-    import json
-
-    committed = _snap_versions(table)
-    v = max(committed)
-    doc = json.loads(
-        open(os.path.join(table, "manifests", committed[v])).read()
-    )
-    return v, doc
+def _snap_carried(doc: dict) -> dict:
+    """The manifest keys a successor carries forward as ``extra``
+    (ndv, bloom, nulls, refs, ...): everything except the keys every
+    commit restates (version, files, stats, txn, dv) and the
+    commit-scoped ``commit_ts``."""
+    return {
+        k: val
+        for k, val in doc.items()
+        if k not in ("version", "files", "stats", "txn", "dv", "commit_ts")
+    }
 
 
 def _snap_read(spark: SparkSession, table: str, version: int | None = None):
@@ -1032,15 +1018,7 @@ def _snap_read(spark: SparkSession, table: str, version: int | None = None):
     committed). Only files listed in the resolved manifest are read —
     orphan data files (crashed writers) and in-progress manifests are
     invisible by construction."""
-    import json
-
-    committed = _snap_versions(table)
-    v = max(committed) if version is None else version
-    if v not in committed:
-        raise ValueError(f"snapshot v{v} is not committed (have {sorted(committed)})")
-    manifest = json.loads(
-        open(os.path.join(table, "manifests", committed[v])).read()
-    )
+    manifest = _snap_doc(table, version)[1]
     paths = [os.path.join(table, "data", f) for f in manifest["files"]]
     return spark.read.parquet(*paths)
 
@@ -1086,7 +1064,7 @@ def table_snapshot_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     row-level deletes, q_cluster_incremental the layout; this key is
     the committed-file-list contract itself. Harness: snapshot v0 =
     events with event_id % 10 < 8 (committed via temp-write + fsync +
-    os.replace of manifests/v0.json), v1 = v0's files plus the
+    os.link of manifests/v0.json), v1 = v0's files plus the
     remaining rows' files (manifests never rewrite data). Two fault
     injections sit on disk when the reads run: an ORPHAN data file (a
     crashed writer's duplicate rows, present in data/ but in no
@@ -1099,7 +1077,7 @@ def table_snapshot_read(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: a snapshot read plans exactly the listed parquet
     files (no directory listing, no filtering of dead files at scan
-    time); commits are O(1) manifest renames regardless of table
+    time); commits are O(1) manifest links regardless of table
     size; history retention = keeping old manifests (data files are
     shared across snapshots). Invariants (orphan/torn invisibility,
     uncommitted-version raise, snapshot immutability across appends)
@@ -1174,10 +1152,11 @@ def _snap_commit_cas(
     is already taken, atomically — so exactly one of two racing
     committers wins and the loser learns it lost without ever making
     a torn or clobbered manifest visible. Returns True iff this
-    committer created v{N}. ``extra`` carries any further manifest
-    keys (ndv, bloom, nulls, refs, ...) a metadata-only successor
-    must preserve or publish; the explicit params win on collision."""
-    import json
+    committer created v{N}. This is the only code that publishes a
+    manifest version; _snap_commit is its raising form. ``extra``
+    carries any further manifest keys (ndv, bloom, nulls, refs, ...)
+    a metadata-only successor must preserve or publish; the explicit
+    params win on collision."""
     import uuid as _uuid
 
     mdir = os.path.join(table, "manifests")
@@ -1234,7 +1213,7 @@ def snap_append_optimistic(
     writers that want timestamp reachability use
     snap_commit_ts_append, which stamps a fresh monotonic ts."""
     for _ in range(max_retries):
-        v, doc = _snap_latest_doc(table)
+        v, doc = _snap_doc(table)
         if _snap_commit_cas(
             table,
             doc["files"] + new_files,
@@ -1242,11 +1221,7 @@ def snap_append_optimistic(
             stats=doc.get("stats"),
             txn=doc.get("txn"),
             dv=doc.get("dv"),
-            extra={
-                k: val
-                for k, val in doc.items()
-                if k not in ("version", "files", "stats", "txn", "dv", "commit_ts")
-            },
+            extra=_snap_carried(doc),
         ):
             return v + 1
     raise RuntimeError(
@@ -1283,7 +1258,6 @@ def snap_expire(
        successor committed after the caller chose ``retain`` is the
        current table, not history.
     """
-    import json
     import time
 
     committed = _snap_versions(table)
@@ -1315,8 +1289,8 @@ def snap_expire(
     # writer committed since the listing above.
     keep_files: set[str] = set()
     keep_refs: set[str] = set()
-    for _v, fname in _snap_versions(table).items():
-        manifest = json.loads(open(os.path.join(table, "manifests", fname)).read())
+    for v in _snap_versions(table):
+        manifest = _snap_doc(table, v)[1]
         keep_files |= set(manifest["files"])
         # merge-on-read delete files are referenced state too: a DV
         # swept while its manifest lives would resurrect deleted rows
@@ -1415,9 +1389,9 @@ def table_concurrent_commit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # the race: both writers observe the same latest snapshot and
     # build their successor manifest from it
-    v, prev = _snap_latest(table)
-    won_a = _snap_commit_cas(table, prev + files_a, v + 1)
-    won_b = _snap_commit_cas(table, prev + files_b, v + 1)
+    v, prev = _snap_doc(table)
+    won_a = _snap_commit_cas(table, prev["files"] + files_a, v + 1)
+    won_b = _snap_commit_cas(table, prev["files"] + files_b, v + 1)
     if not won_a or won_b:
         raise RuntimeError(
             f"CAS contract violated: won_a={won_a} won_b={won_b}"
@@ -1745,27 +1719,6 @@ def _snap_add_files_with_stats(
     return kept, stats
 
 
-def _snap_commit_stats(
-    table: str, files: list[str], version: int, stats: dict
-) -> None:
-    """Manifest commit carrying per-file column stats — same atomic
-    temp+fsync+os.replace protocol; ``files`` stays the plain name
-    list so every existing reader (_snap_read/_snap_latest) keeps
-    working, stats ride under a separate key."""
-    import json
-
-    mdir = os.path.join(table, "manifests")
-    os.makedirs(mdir, exist_ok=True)
-    tmp = os.path.join(mdir, f".v{version}.json.inprogress")
-    with open(tmp, "w") as f:
-        json.dump(
-            {"version": version, "files": sorted(files), "stats": stats}, f
-        )
-        f.flush()
-        os.fsync(f.fileno())
-    os.replace(tmp, os.path.join(mdir, f"v{version}.json"))
-
-
 def snap_read_pruned(
     spark: SparkSession,
     table: str,
@@ -1781,15 +1734,7 @@ def snap_read_pruned(
     (frame, planned file names, total files) so callers can assert
     skipping actually happened. The frame still needs the row-level
     predicate applied — stats prune at FILE grain."""
-    import json
-
-    committed = _snap_versions(table)
-    v = max(committed) if version is None else version
-    if v not in committed:
-        raise ValueError(f"snapshot v{v} is not committed (have {sorted(committed)})")
-    manifest = json.loads(
-        open(os.path.join(table, "manifests", committed[v])).read()
-    )
+    manifest = _snap_doc(table, version)[1]
     stats = manifest.get("stats", {})
     planned = [
         f
@@ -1852,7 +1797,7 @@ def table_pruned_read(spark: SparkSession, sf_dir: str) -> DataFrame:
         "prune_base",
         ["event_id"],
     )
-    _snap_commit_stats(table, files, 0, stats)
+    _snap_commit(table, files, 0, stats=stats)
     m = int(ev.agg(F.max("event_id")).first()[0])
     lo, hi = m // 2, m * 3 // 4
     frame, planned, total = snap_read_pruned(spark, table, "event_id", lo, hi)
@@ -1909,9 +1854,8 @@ def _snap_commit_schema(
     TIME from its footer: unknown columns and type conflicts are
     rejected BEFORE they become a torn read hours later (the
     mergeSchema-blowup failure mode). Missing columns are fine —
-    that IS evolution."""
-    import json
-
+    that IS evolution. Committed through _snap_commit, so a version
+    another writer already took raises FileExistsError."""
     declared = dict(schema)
     for n in new_files or []:
         got = _parquet_file_schema(os.path.join(table, "data", n))
@@ -1928,21 +1872,9 @@ def _snap_commit_schema(
                 f"file {n} type-conflicts with the table schema on: "
                 f"{conflicts} ({[(c, got[c], declared[c]) for c in conflicts]})"
             )
-    mdir = os.path.join(table, "manifests")
-    os.makedirs(mdir, exist_ok=True)
-    tmp = os.path.join(mdir, f".v{version}.json.inprogress")
-    with open(tmp, "w") as f:
-        doc = {
-            "version": version,
-            "files": sorted(files),
-            "schema": [list(p) for p in schema],
-        }
-        if txn is not None:
-            doc["txn"] = txn  # writer-marker -> batch id (idempotent replay)
-        json.dump(doc, f)
-        f.flush()
-        os.fsync(f.fileno())
-    os.replace(tmp, os.path.join(mdir, f"v{version}.json"))
+    _snap_commit(
+        table, files, version, txn=txn, extra={"schema": [list(p) for p in schema]}
+    )
 
 
 def _snap_read_schema(
@@ -1954,15 +1886,7 @@ def _snap_read_schema(
     files). The projection is the manifest's, never the files' — a
     rogue column in a data file cannot leak into the table surface,
     and a time-travel read serves the OLD schema."""
-    import json
-
-    committed = _snap_versions(table)
-    v = max(committed) if version is None else version
-    if v not in committed:
-        raise ValueError(f"snapshot v{v} is not committed (have {sorted(committed)})")
-    manifest = json.loads(
-        open(os.path.join(table, "manifests", committed[v])).read()
-    )
+    manifest = _snap_doc(table, version)[1]
     paths = [os.path.join(table, "data", f) for f in manifest["files"]]
     df = spark.read.option("mergeSchema", "true").parquet(*paths)
     cols = []
@@ -2164,38 +2088,20 @@ def _snap_commit_partitioned(
     transforms: dict | None = None,
 ) -> None:
     """Manifest commit carrying the partition SPEC (ordered partition
-    columns) and per-file partition tuples — same atomic
-    temp+fsync+os.replace protocol; ``files`` stays the plain name
-    list so every existing reader keeps working. Carried-forward
-    files keep whatever tuple (possibly from an OLDER spec) they were
-    committed under: spec evolution is metadata-only and never
-    rewrites or re-tags existing files (the Iceberg spec-evolution
-    contract). ``transforms`` (r14) records HIDDEN-partitioning
+    columns) and per-file partition tuples through _snap_commit;
+    ``files`` stays the plain name list so every existing reader
+    keeps working. Carried-forward files keep whatever tuple
+    (possibly from an OLDER spec) they were committed under: spec
+    evolution is metadata-only and never rewrites or re-tags
+    existing files (the Iceberg spec-evolution contract).
+    ``transforms`` (r14) records HIDDEN-partitioning
     derivations {partition_field: {"kind", "source", "arg"}} so the
     planner can convert source-column predicates to partition values
     itself — queries never mention the partition fields."""
-    import json
-
-    mdir = os.path.join(table, "manifests")
-    os.makedirs(mdir, exist_ok=True)
-    tmp = os.path.join(mdir, f".v{version}.json.inprogress")
-    with open(tmp, "w") as f:
-        doc = {
-            "version": version,
-            "files": sorted(files),
-            "spec": list(spec),
-            "partitions": partitions,
-        }
-        if transforms is not None:
-            doc["transforms"] = transforms
-        if txn is not None:
-            doc["txn"] = txn  # writer-marker -> batch id (idempotent replay)
-        if stats is not None:
-            doc["stats"] = stats  # per-file column bounds (two-level skip)
-        json.dump(doc, f)
-        f.flush()
-        os.fsync(f.fileno())
-    os.replace(tmp, os.path.join(mdir, f"v{version}.json"))
+    extra = {"spec": list(spec), "partitions": partitions}
+    if transforms is not None:
+        extra["transforms"] = transforms
+    _snap_commit(table, files, version, stats=stats, txn=txn, extra=extra)
 
 
 def snap_read_partition_pruned(
@@ -2217,16 +2123,9 @@ def snap_read_partition_pruned(
     per distinct planned tuple unioned by name, and a file missing a
     newer partition column still serves it from its DATA columns when
     present. Returns (frame, planned names, total files)."""
-    import json
     from collections import defaultdict
 
-    committed = _snap_versions(table)
-    v = max(committed) if version is None else version
-    if v not in committed:
-        raise ValueError(f"snapshot v{v} is not committed (have {sorted(committed)})")
-    manifest = json.loads(
-        open(os.path.join(table, "manifests", committed[v])).read()
-    )
+    manifest = _snap_doc(table, version)[1]
     parts = manifest.get("partitions", {})
     planned = [
         f
@@ -2450,13 +2349,7 @@ def snap_read_transform_pruned(
     (superset safety both ways); the row-level predicate must still be
     applied by the caller on the returned frame, exactly like every
     other pruning reader."""
-    import json
-
-    committed = _snap_versions(table)
-    v = max(committed) if version is None else version
-    doc = json.loads(
-        open(os.path.join(table, "manifests", committed[v])).read()
-    )
+    doc = _snap_doc(table, version)[1]
     transforms = doc.get("transforms", {})
     parts = doc.get("partitions", {})
     by_source: dict[str, list[tuple[str, dict]]] = {}
@@ -2674,7 +2567,7 @@ def snap_compact_optimistic(
     still contain), which must conflict, not retry through."""
     srcs = set(sources)
     for _ in range(max_retries):
-        v, doc = _snap_latest_doc(table)
+        v, doc = _snap_doc(table)
         files = doc["files"]
         if not srcs <= set(files):
             raise SnapCompactConflict(
@@ -2815,7 +2708,7 @@ def table_optimize_concurrent(spark: SparkSession, sf_dir: str) -> DataFrame:
     v2 = snap_compact_optimistic(table, sources, compacted)
     if v2 != 2:
         raise RuntimeError(f"compaction retry landed v{v2}, expected v2")
-    _v, files_v2 = _snap_latest(table)
+    files_v2 = _snap_doc(table)[1]["files"]
     expect_n = len(base) - len(sources) + len(compacted) + len(appended)
     if len(files_v2) != expect_n or not set(appended) <= set(files_v2):
         raise RuntimeError("commuted commit lost files")
@@ -2861,7 +2754,8 @@ def table_optimize_concurrent(spark: SparkSession, sf_dir: str) -> DataFrame:
         raise RuntimeError("overlapping compaction committed over the merge")
     except SnapCompactConflict:
         pass
-    v_latest, files_latest = _snap_latest(table2)
+    v_latest, doc_latest = _snap_doc(table2)
+    files_latest = doc_latest["files"]
     if v_latest != 1 or set(doomed) & set(files_latest):
         raise RuntimeError("conflicted compaction left visible state")
     # the merged values survived intact (nothing resurrected)
@@ -2914,11 +2808,9 @@ def snap_delete_optimistic(
     reads are O(matched files) metadata; the DV write is O(deleted
     keys); the COW write is O(rows of the above-threshold files)
     only. Returns the decision record for the pins."""
-    import json
-
     import pyarrow.parquet as pq
 
-    prev_v, doc = _snap_latest_doc(table)
+    prev_v, doc = _snap_doc(table)
     files = doc["files"]
     stats = doc.get("stats", {})
     dv_map = {f: list(v) for f, v in doc.get("dv", {}).items()}
@@ -3037,15 +2929,7 @@ def snap_read_mor(
     file-name scoping). The DV relation is O(deleted keys) and
     broadcasts; the data path is one scan + one broadcast anti-join —
     never a rewrite, never a shuffle."""
-    import json
-
-    committed = _snap_versions(table)
-    v = max(committed) if version is None else version
-    if v not in committed:
-        raise ValueError(f"snapshot v{v} is not committed (have {sorted(committed)})")
-    manifest = json.loads(
-        open(os.path.join(table, "manifests", committed[v])).read()
-    )
+    manifest = _snap_doc(table, version)[1]
     ddir = os.path.join(table, "data")
     if manifest.get("dvb"):
         raise ValueError(
@@ -3188,7 +3072,7 @@ def table_merge_dv(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         if leaked:
             raise RuntimeError(f"rewrite leaked {leaked} deleted rows")
-    _v, doc = _snap_latest_doc(table)
+    _v, doc = _snap_doc(table)
     if not doc.get("dv"):
         raise RuntimeError("manifest lost its DV map after the COW commit")
     if any(f in doc["dv"] for f in rec2["cow_rewritten"]):
@@ -3239,17 +3123,7 @@ def snap_diff(
     shared-file cancellation happens at MANIFEST grain before any
     read; exceptAll and the classify join shuffle only changed-file
     rows."""
-    import json
-
-    committed = _snap_versions(table)
-    for v in (v_from, v_to):
-        if v not in committed:
-            raise ValueError(f"snapshot v{v} is not committed")
-    docs = {}
-    for v in (v_from, v_to):
-        docs[v] = json.loads(
-            open(os.path.join(table, "manifests", committed[v])).read()
-        )
+    docs = dict(_snap_doc(table, v) for v in (v_from, v_to))
     removed = sorted(set(docs[v_from]["files"]) - set(docs[v_to]["files"]))
     added = sorted(set(docs[v_to]["files"]) - set(docs[v_from]["files"]))
     ddir = os.path.join(table, "data")
@@ -3443,9 +3317,7 @@ def snap_branch_commit(
     Delta WAP staging half. ``files`` must be a superset of the base
     snapshot's list for publish-rebase to make sense (append-shaped
     branches)."""
-    import json
-
-    v, doc = _snap_latest_doc(table)
+    v, doc = _snap_doc(table)
     bdir = os.path.join(table, "manifests", "branches")
     os.makedirs(bdir, exist_ok=True)
     tmp = os.path.join(bdir, f".{name}.json.inprogress")
@@ -3466,8 +3338,6 @@ def snap_branch_commit(
 
 
 def _snap_branch_doc(table: str, name: str) -> dict:
-    import json
-
     path = os.path.join(table, "manifests", "branches", f"{name}.json")
     if not os.path.exists(path):
         raise ValueError(f"no branch {name!r} on {table}")
@@ -3503,7 +3373,7 @@ def snap_branch_publish(table: str, name: str, max_retries: int = 20) -> int:
     doc = _snap_branch_doc(table, name)
     new = [f for f in doc["files"] if f not in set(doc["base_files"])]
     for _ in range(max_retries):
-        v, main = _snap_latest_doc(table)
+        v, main = _snap_doc(table)
         stats = dict(main.get("stats", {}))
         stats.update(doc.get("stats", {}))
         if _snap_commit_cas(
@@ -3592,13 +3462,12 @@ def table_wap_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
     )
     b_bad = _snap_add_files(corrupted, table, "wap_bad")
-    v1, files_v1 = _snap_latest(table)
-    snap_branch_commit(table, "etl_b", files_v1 + b_bad)
+    v1, doc_v1 = _snap_doc(table)
+    snap_branch_commit(table, "etl_b", doc_v1["files"] + b_bad)
     if audit_clean("etl_b"):
         raise RuntimeError("corrupted batch passed its audit")
     snap_branch_drop(table, "etl_b")
-    v_after, files_after = _snap_latest(table)
-    if (v_after, files_after) != (v1, files_v1):
+    if _snap_doc(table) != (v1, doc_v1):
         raise RuntimeError("failed audit perturbed main")
     leaked = (
         _snap_read(spark, table).filter(F.col("event_type").isNull()).count()
@@ -3610,7 +3479,7 @@ def table_wap_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
     b_files = _snap_add_files(
         ev.filter(F.expr("event_id % 10 = 9")), table, "wap_b"
     )
-    snap_branch_commit(table, "etl_b2", files_v1 + b_files)
+    snap_branch_commit(table, "etl_b2", doc_v1["files"] + b_files)
     if not audit_clean("etl_b2"):
         raise RuntimeError("clean resubmission failed its audit")
     if snap_branch_publish(table, "etl_b2") != 2:
@@ -3638,8 +3507,6 @@ def _snap_refs(table: str) -> dict[str, dict]:
     Refs live under manifests/refs/ as one JSON file each (same
     temp+fsync+rename protocol as manifests); in-progress temps are
     invisible by the dot-prefix rule."""
-    import json
-
     rdir = os.path.join(table, "manifests", "refs")
     if not os.path.isdir(rdir):
         return {}
@@ -3653,8 +3520,6 @@ def _snap_refs(table: str) -> dict[str, dict]:
 
 
 def _snap_ref_write(table: str, doc: dict) -> None:
-    import json
-
     rdir = os.path.join(table, "manifests", "refs")
     os.makedirs(rdir, exist_ok=True)
     tmp = os.path.join(rdir, f".{doc['name']}.json.inprogress")
@@ -3849,16 +3714,9 @@ def snap_restore(table: str, to_version: int, max_retries: int = 20) -> int:
     carried from the LATEST manifest, not the target: a streaming
     sink's replayed batch must still be recognized after a restore,
     or it would double-append."""
-    import json
-
-    committed = _snap_versions(table)
-    if to_version not in committed:
-        raise ValueError(f"snapshot v{to_version} is not committed")
-    target = json.loads(
-        open(os.path.join(table, "manifests", committed[to_version])).read()
-    )
+    target = _snap_doc(table, to_version)[1]
     for _ in range(max_retries):
-        v, latest = _snap_latest_doc(table)
+        v, latest = _snap_doc(table)
         doc_txn = latest.get("txn")
         if _snap_commit_cas(
             table,
@@ -3989,16 +3847,9 @@ def snap_read_two_level(
     assert EACH level pruned. The frame re-attaches identity-
     partition columns from the tuples, exactly like
     snap_read_partition_pruned."""
-    import json
     from collections import defaultdict
 
-    committed = _snap_versions(table)
-    v = max(committed) if version is None else version
-    if v not in committed:
-        raise ValueError(f"snapshot v{v} is not committed (have {sorted(committed)})")
-    manifest = json.loads(
-        open(os.path.join(table, "manifests", committed[v])).read()
-    )
+    manifest = _snap_doc(table, version)[1]
     parts = manifest.get("partitions", {})
     stats = manifest.get("stats", {})
     level1 = [
@@ -4199,7 +4050,7 @@ def table_mv_from_cdf(spark: SparkSession, sf_dir: str) -> DataFrame:
     view-maintenance economics every warehouse MV rides, here exact
     by integer-cents construction. Equality-vs-reaggregation asserted
     live in the registered run."""
-    from steaminganalysis_spark.registry import dsum, to_cents
+    from steaminganalysis_spark.registry import to_cents
     from steaminganalysis_spark.scratch import scratch_dir
 
     table = f"{scratch_dir('snapmvcdf')}/table"
@@ -4339,7 +4190,7 @@ def snap_analyze_ndv(
     # retries so a lost race never rescans a file twice.
     known: dict[str, dict[str, dict[str, int]]] = {}
     for _ in range(20):
-        v, doc = _snap_latest_doc(table)
+        v, doc = _snap_doc(table)
         # INCREMENTAL: files whose registers already ride the latest
         # manifest (same group_col AND same key_expr — a different key
         # expression makes old registers meaningless, so the carry is
@@ -4393,11 +4244,7 @@ def snap_analyze_ndv(
             for f in todo:
                 if f in ndv:
                     known[f] = ndv[f]
-        extra = {
-            k: val
-            for k, val in doc.items()
-            if k not in ("version", "files", "stats", "txn", "dv", "commit_ts")
-        }
+        extra = _snap_carried(doc)
         extra["ndv"] = {
             "group_col": group_col,
             "key_expr": key_expr,
@@ -4452,13 +4299,7 @@ def snap_ndv_estimates(table: str, version: int | None = None) -> dict[str, int]
     stats: at 100 TB, "how many distinct users per event type" costs
     O(files·groups·m) integer maxes over JSON the planner already
     reads, not a table scan."""
-    import json
-
-    committed = _snap_versions(table)
-    v = max(committed) if version is None else version
-    doc = json.loads(
-        open(os.path.join(table, "manifests", committed[v])).read()
-    )
+    doc = _snap_doc(table, version)[1]
     merged: dict[str, dict[int, int]] = {}
     for per_group in doc["ndv"]["registers"].values():
         for g, regs in per_group.items():
@@ -4556,11 +4397,8 @@ def table_analyze_ndv(spark: SparkSession, sf_dir: str) -> DataFrame:
     v1 = snap_analyze_ndv(spark, table, "event_type", "user_id + 1")
 
     # gate 1: ANALYZE was metadata-only
-    import json as _json
-
-    committed = _snap_versions(table)
-    d0 = _json.loads(open(os.path.join(table, "manifests", committed[0])).read())
-    d1 = _json.loads(open(os.path.join(table, "manifests", committed[v1])).read())
+    d0 = _snap_doc(table, 0)[1]
+    d1 = _snap_doc(table, v1)[1]
     if d0["files"] != d1["files"]:
         raise RuntimeError("ANALYZE commit rewrote data files")
 
@@ -4698,7 +4536,7 @@ def snap_bloom_build(spark: SparkSession, table: str, col: str) -> int:
     known_m: dict[str, int] = {}
     known_words: dict[str, dict[str, int]] = {}
     for _ in range(20):
-        v, doc = _snap_latest_doc(table)
+        v, doc = _snap_doc(table)
         prev = doc.get("bloom", {})
         if prev.get("col") == col:
             for f in doc["files"]:
@@ -4744,11 +4582,7 @@ def snap_bloom_build(spark: SparkSession, table: str, col: str) -> int:
                 known_words.setdefault(f, {})
             for row in words:
                 known_words[row["_file"]][str(row["w"])] = int(row["v"])
-        extra = {
-            k: val
-            for k, val in doc.items()
-            if k not in ("version", "files", "stats", "txn", "dv", "commit_ts")
-        }
+        extra = _snap_carried(doc)
         extra["bloom"] = {
             "col": col,
             "m": {f: known_m[f] for f in doc["files"]},
@@ -4776,14 +4610,9 @@ def snap_read_bloom_pruned(
     filter can only skip, never lose). Probing is pure planning-time
     integer arithmetic on JSON the planner already read: zero file
     opens, zero cluster work. Returns (frame, planned names, total)."""
-    import json
     import zlib
 
-    committed = _snap_versions(table)
-    v = max(committed)
-    doc = json.loads(
-        open(os.path.join(table, "manifests", committed[v])).read()
-    )
+    doc = _snap_doc(table)[1]
     bloom = doc.get("bloom", {})
     blooms = bloom.get("words", {})
     m_map = bloom.get("m", {})
@@ -4867,11 +4696,8 @@ def table_bloom_skip(spark: SparkSession, sf_dir: str) -> DataFrame:
     v1 = snap_bloom_build(spark, table, "text")
 
     # gate 1: metadata-only commit
-    import json as _json
-
-    committed = _snap_versions(table)
-    d0 = _json.loads(open(os.path.join(table, "manifests", committed[0])).read())
-    d1 = _json.loads(open(os.path.join(table, "manifests", committed[v1])).read())
+    d0 = _snap_doc(table, 0)[1]
+    d1 = _snap_doc(table, v1)[1]
     if d0["files"] != d1["files"]:
         raise RuntimeError("bloom build rewrote data files")
 
@@ -4936,15 +4762,7 @@ def snap_read_pruned_multi(
     the planner that makes z-order clustering pay: after the rewrite,
     per-file spans are tight in ALL clustered dimensions, so each
     predicate prunes independently and their conjunction multiplies."""
-    import json
-
-    committed = _snap_versions(table)
-    v = max(committed) if version is None else version
-    if v not in committed:
-        raise ValueError(f"snapshot v{v} is not committed (have {sorted(committed)})")
-    manifest = json.loads(
-        open(os.path.join(table, "manifests", committed[v])).read()
-    )
+    manifest = _snap_doc(table, version)[1]
     stats = manifest.get("stats", {})
     planned = [
         f
@@ -4998,7 +4816,7 @@ def snap_optimize_zorder(
     landing between our read and the CAS raises SnapCompactConflict:
     those deletes targeted rows we already re-wrote, and carrying
     the entry forward would point at a file that no longer exists."""
-    v, doc = _snap_latest_doc(table)
+    v, doc = _snap_doc(table)
     stats = doc.get("stats", {})
     dv_seen = {
         f: sorted(dvs) for f, dvs in (doc.get("dv") or {}).items()
@@ -5041,7 +4859,7 @@ def snap_optimize_zorder(
     )
     srcs = set(doc["files"])
     for _ in range(max_retries):
-        lv, ldoc = _snap_latest_doc(table)
+        lv, ldoc = _snap_doc(table)
         lfiles = ldoc["files"]
         if not srcs <= set(lfiles):
             raise SnapCompactConflict(
@@ -5193,8 +5011,6 @@ def snap_history(spark: SparkSession, table: str) -> DataFrame:
     files); on a real deployment the row counts ride the manifest at
     commit time (the Iceberg snapshot summary) and even the footer
     reads disappear."""
-    import json
-
     import pyarrow.parquet as pq
 
     committed = _snap_versions(table)
@@ -5211,10 +5027,7 @@ def snap_history(spark: SparkSession, table: str) -> DataFrame:
     out = []
     prev: set[str] = set()
     for v in sorted(committed):
-        doc = json.loads(
-            open(os.path.join(table, "manifests", committed[v])).read()
-        )
-        cur = set(doc["files"])
+        cur = set(_snap_doc(table, v)[1]["files"])
         added, removed = cur - prev, prev - cur
         if v == sorted(committed)[0]:
             op = "create"
@@ -5315,7 +5128,7 @@ def table_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     snap_analyze_ndv(spark, table, "event_type", "event_id + 1")
 
     # v3 rewrite: compact everything into 2 files
-    v2, doc2 = _snap_latest_doc(table)
+    v2, doc2 = _snap_doc(table)
     staged = _snap_add_files(
         _snap_read(spark, table, v2).repartition(2), table, "hist_c"
     )
@@ -5348,15 +5161,9 @@ def snap_metadata_files(
     this is pure manifest arithmetic the planner already performs,
     exposed as a frame you can join, filter, and alert on (small-file
     audits, skew hunts, partition health)."""
-    import json
-
     import pyarrow.parquet as pq
 
-    committed = _snap_versions(table)
-    v = max(committed) if version is None else version
-    doc = json.loads(
-        open(os.path.join(table, "manifests", committed[v])).read()
-    )
+    doc = _snap_doc(table, version)[1]
     parts = doc.get("partitions", {})
     stats = doc.get("stats", {})
     ddir = os.path.join(table, "data")
@@ -5445,8 +5252,6 @@ def table_metadata_tables(spark: SparkSession, sf_dir: str) -> DataFrame:
     small-file audit, skew hunt, and partition-health dashboard all
     become metadata queries. Reference parity: no metadata-table
     surface in the reference (SURVEY §2 B.1 extension)."""
-    import json as _json
-
     from steaminganalysis_spark.scratch import scratch_dir
 
     table = f"{scratch_dir('snapmeta')}/table"
@@ -5472,7 +5277,7 @@ def table_metadata_tables(spark: SparkSession, sf_dir: str) -> DataFrame:
         raise RuntimeError("files relation lost or invented files")
     if any(r.size_bytes <= 0 or r.row_count <= 0 for r in frows):
         raise RuntimeError("files relation carries non-positive sizes")
-    if any(set(_json.loads(r.partition)) != {"day"} for r in frows):
+    if any(set(json.loads(r.partition)) != {"day"} for r in frows):
         raise RuntimeError("files relation tuple is not the {day} spec")
 
     prel = snap_metadata_partitions(
@@ -5489,11 +5294,7 @@ def table_metadata_tables(spark: SparkSession, sf_dir: str) -> DataFrame:
         raise RuntimeError(f"snapshots relation wrong: {hist}")
 
     # NULL-poisoning: strip one file's stats in a successor commit
-    v0doc = _json.loads(
-        open(
-            os.path.join(table, "manifests", _snap_versions(table)[0])
-        ).read()
-    )
+    v0doc = _snap_doc(table, 0)[1]
     holed = dict(v0doc.get("stats", {}))
     victim = next(iter(holed))
     vday = parts[victim]["day"]
@@ -5565,7 +5366,7 @@ def snap_auto_optimize(
     import math
 
     rel = snap_metadata_files(spark, table).collect()
-    v, doc = _snap_latest_doc(table)
+    v, doc = _snap_doc(table)
     dv = doc.get("dv") or {}
     dvb = doc.get("dvb") or {}
     small = sorted(r.file for r in rel if r.row_count < small_rows)
@@ -5678,7 +5479,7 @@ def table_auto_optimize(spark: SparkSession, sf_dir: str) -> DataFrame:
             os.path.getmtime(os.path.join(ddir, f)))
         for f in big
     }
-    _, doc = _snap_latest_doc(table)
+    _, doc = _snap_doc(table)
     drip = sorted(set(doc["files"]) - set(big))
     import pyarrow.parquet as pq
 
@@ -5705,7 +5506,7 @@ def table_auto_optimize(spark: SparkSession, sf_dir: str) -> DataFrame:
     }
     if meta_before != meta_after:
         raise RuntimeError("auto-optimize touched a well-sized file")
-    _, doc2 = _snap_latest_doc(table)
+    _, doc2 = _snap_doc(table)
     if len(doc2["files"]) != len(big) + 1:
         raise RuntimeError(f"unexpected file count: {len(doc2['files'])}")
 
@@ -5794,7 +5595,7 @@ def table_auto_optimize_dv(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         )
     ddir = os.path.join(table, "data")
-    _, doc0 = _snap_latest_doc(table)
+    _, doc0 = _snap_doc(table)
     drip = sorted(set(doc0["files"]) - set(big))
 
     # the curation delete: ids ≡ 11 (mod 24) live only in drip files
@@ -5802,7 +5603,7 @@ def table_auto_optimize_dv(spark: SparkSession, sf_dir: str) -> DataFrame:
     snap_delete_bitmap(
         spark, table, ev.filter(F.col("event_id") % 24 == 11), "event_id"
     )
-    _, doc1 = _snap_latest_doc(table)
+    _, doc1 = _snap_doc(table)
     dirty = sorted(doc1.get("dvb") or {})
     if not dirty or not set(dirty) <= set(drip) or len(dirty) != 5:
         raise RuntimeError(f"harness broke: dirty={dirty}")
@@ -5833,7 +5634,7 @@ def table_auto_optimize_dv(spark: SparkSession, sf_dir: str) -> DataFrame:
     }
     if meta_before != meta_after:
         raise RuntimeError("auto-optimize touched a well-sized file")
-    _, doc2 = _snap_latest_doc(table)
+    _, doc2 = _snap_doc(table)
     if doc2.get("dvb"):
         raise RuntimeError("fold-then-compact left dvb entries behind")
     if len(doc2["files"]) != len(big) + 1:
@@ -5971,7 +5772,7 @@ def corpus_curation_commits(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     if not decision["dv_targets"]:
         raise RuntimeError("curation commit recorded no DV targets")
-    _, doc1 = _snap_latest_doc(table)
+    _, doc1 = _snap_doc(table)
     if sorted(doc1["files"]) != sorted(files):
         raise RuntimeError("pure-DV commit changed the data file list")
 
@@ -6042,29 +5843,14 @@ def snap_commit_mapped(
     each data file's field ids to the PHYSICAL names it was written
     with. A rename is then a metadata-only commit that changes
     ``schema`` and touches no file; readers resolve each file's
-    physical columns through its recorded mapping. Same atomic
-    temp+fsync+os.replace protocol; ``prev_file_schemas`` carries
-    earlier cohorts forward."""
-    import json
-
-    mdir = os.path.join(table, "manifests")
-    os.makedirs(mdir, exist_ok=True)
+    physical columns through its recorded mapping. Committed through
+    _snap_commit; ``prev_file_schemas`` carries earlier cohorts
+    forward."""
     merged = dict(prev_file_schemas or {})
     merged.update(file_schemas)
-    tmp = os.path.join(mdir, f".v{version}.json.inprogress")
-    with open(tmp, "w") as f:
-        json.dump(
-            {
-                "version": version,
-                "files": sorted(files),
-                "schema": schema,
-                "file_schemas": merged,
-            },
-            f,
-        )
-        f.flush()
-        os.fsync(f.fileno())
-    os.replace(tmp, os.path.join(mdir, f"v{version}.json"))
+    _snap_commit(
+        table, files, version, extra={"schema": schema, "file_schemas": merged}
+    )
 
 
 def snap_read_mapped(
@@ -6078,16 +5864,9 @@ def snap_read_mapped(
     exact failure column mapping exists to prevent. Cost: one scan per
     distinct write-era mapping (bounded by the number of schema
     commits, never by file count)."""
-    import json
     from collections import defaultdict
 
-    committed = _snap_versions(table)
-    v = max(committed) if version is None else version
-    if v not in committed:
-        raise ValueError(f"snapshot v{v} is not committed (have {sorted(committed)})")
-    doc = json.loads(
-        open(os.path.join(table, "manifests", committed[v])).read()
-    )
+    v, doc = _snap_doc(table, version)
     current = doc["schema"]  # field id -> current logical name
     groups: dict[tuple, list[str]] = defaultdict(list)
     for f in doc["files"]:
@@ -6159,16 +5938,12 @@ def table_column_mapping(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     # v1: RENAME value -> amount, metadata-only
-    import json as _json
-
-    committed = _snap_versions(table)
-    d0 = _json.loads(open(os.path.join(table, "manifests", committed[0])).read())
+    d0 = _snap_doc(table, 0)[1]
     schema_v1 = {"1": "event_id", "2": "event_type", "3": "amount"}
     snap_commit_mapped(
         table, d0["files"], 1, schema_v1, {}, prev_file_schemas=d0["file_schemas"]
     )
-    committed = _snap_versions(table)
-    d1 = _json.loads(open(os.path.join(table, "manifests", committed[1])).read())
+    d1 = _snap_doc(table, 1)[1]
     if d1["files"] != d0["files"]:
         raise RuntimeError("rename commit touched data files")
 
@@ -6232,7 +6007,7 @@ def snap_commit_sharded(
     its load-bearing two levels): one shard document per partition
     value — carrying that partition's file list and per-file stats —
     written first under uuid names (invisible: nothing references
-    them), then ONE atomic list-document rename that maps partition
+    them), then ONE atomic list-document commit that maps partition
     values to shard files. Planning for a partition predicate then
     reads the list (O(partitions) tuples) plus ONLY the matching
     shards — metadata I/O proportional to the QUERY's partitions, not
@@ -6240,11 +6015,9 @@ def snap_commit_sharded(
     a monolithic manifest re-parses every file's entry for every
     query; shards localize both reads AND future commits (an append
     to one partition rewrites one shard + the list)."""
-    import json
     import uuid as _uuid
 
-    mdir = os.path.join(table, "manifests")
-    sdir = os.path.join(mdir, "shards")
+    sdir = os.path.join(table, "manifests", "shards")
     os.makedirs(sdir, exist_ok=True)
     shard_names: dict[str, str] = {}
     for part, files in sorted(files_by_part.items()):
@@ -6259,26 +6032,15 @@ def snap_commit_sharded(
             os.fsync(f.fileno())
         os.replace(tmp, os.path.join(sdir, name))
         shard_names[part] = name
-    tmp = os.path.join(mdir, f".v{version}.json.inprogress")
-    with open(tmp, "w") as f:
-        json.dump(
-            {
-                "version": version,
-                "format": "manifest-list",
-                "part_col": part_col,
-                "shards": shard_names,
-                # a flat file list rides along so every existing
-                # full-table reader (_snap_read, history, vacuum)
-                # keeps working — the list is the PLANNING shortcut
-                "files": sorted(
-                    f for fs in files_by_part.values() for f in fs
-                ),
-            },
-            f,
-        )
-        f.flush()
-        os.fsync(f.fileno())
-    os.replace(tmp, os.path.join(mdir, f"v{version}.json"))
+    # a flat file list rides along so every existing full-table
+    # reader (_snap_read, history, vacuum) keeps working — the list
+    # is the PLANNING shortcut
+    _snap_commit(
+        table,
+        [f for fs in files_by_part.values() for f in fs],
+        version,
+        extra={"format": "manifest-list", "part_col": part_col, "shards": shard_names},
+    )
 
 
 def snap_read_manifest_list(
@@ -6294,13 +6056,7 @@ def snap_read_manifest_list(
     total_shards, planned_files); the frame carries the partition
     value as a literal column (the partition-identity projection the
     partitioned-table reads use)."""
-    import json
-
-    committed = _snap_versions(table)
-    v = max(committed) if version is None else version
-    doc = json.loads(
-        open(os.path.join(table, "manifests", committed[v])).read()
-    )
+    v, doc = _snap_doc(table, version)
     if doc.get("format") != "manifest-list":
         raise ValueError(f"snapshot v{v} is not a manifest-list commit")
     sdir = os.path.join(table, "manifests", "shards")
@@ -6427,15 +6183,9 @@ def snap_agg_pushdown(
     NULL — let the engine path state that). DV-carrying manifests also
     return None: deleted-but-unrewritten rows are invisible to reads
     but present in footers, so pushdown would overcount."""
-    import json
-
     import pyarrow.parquet as pq
 
-    committed = _snap_versions(table)
-    v = max(committed) if version is None else version
-    doc = json.loads(
-        open(os.path.join(table, "manifests", committed[v])).read()
-    )
+    doc = _snap_doc(table, version)[1]
     if not doc["files"] or doc.get("dv") or doc.get("dvb"):
         return None
     stats = doc.get("stats", {})
@@ -6483,15 +6233,9 @@ def snap_agg_pushdown_dv(
     pyarrow, driver-side, O(deleted keys) — delete metadata, not data
     pages; at 100 TB this keeps dashboard COUNTs on actively-deleted
     tables at manifest cost."""
-    import json
-
     import pyarrow.parquet as pq
 
-    committed = _snap_versions(table)
-    v = max(committed) if version is None else version
-    doc = json.loads(
-        open(os.path.join(table, "manifests", committed[v])).read()
-    )
+    doc = _snap_doc(table, version)[1]
     if not doc["files"] or doc.get("dvb"):
         return None  # bitmap-encoded DVs have their own O(files) path
     stats = doc.get("stats", {})
@@ -6611,20 +6355,9 @@ def table_agg_pushdown(spark: SparkSession, sf_dir: str) -> DataFrame:
         raise RuntimeError(f"pushdown diverged from scan: {got} vs {scanned}")
 
     # gate 2: eligibility — strip one file's stats, pushdown refuses
-    import json as _json
-
-    committed = _snap_versions(table)
-    mpath = os.path.join(table, "manifests", committed[0])
-    doc = _json.loads(open(mpath).read())
-    holed = dict(doc)
-    holed_stats = dict(doc["stats"])
+    holed_stats = dict(_snap_doc(table, 0)[1]["stats"])
     del holed_stats[files[0]]
-    holed["stats"] = holed_stats
-    holed["version"] = 1
-    tmp = os.path.join(table, "manifests", ".v1.json.inprogress")
-    with open(tmp, "w") as fh:
-        _json.dump(holed, fh)
-    os.replace(tmp, os.path.join(table, "manifests", "v1.json"))
+    _snap_commit(table, files, 1, stats=holed_stats)
     if snap_agg_pushdown(table, ["event_id", "user_id"], version=1) is not None:
         raise RuntimeError("pushdown answered from partial stats")
 
@@ -6705,7 +6438,7 @@ def table_agg_pushdown_dv(spark: SparkSession, sf_dir: str) -> DataFrame:
     keys = ev.filter((F.col("event_id") % 13 == 5) & (F.col("event_id") > cut))
     snap_delete_optimistic(spark, table, keys, "event_id")
 
-    _, doc = _snap_latest_doc(table)
+    _, doc = _snap_doc(table)
     dv_map = doc.get("dv", {})
     if not dv_map or argmin_f in dv_map:
         raise RuntimeError(f"harness broke: dv placement {sorted(dv_map)}")
@@ -6769,18 +6502,10 @@ def snap_read_incremental(
     a day's catch-up read over a 100 TB table plans only the appended
     files, with strategy selection costing O(versions·files) name-set
     arithmetic on manifests the planner already reads."""
-    import json
-
     committed = _snap_versions(table)
     if from_v not in committed or to_v not in committed or from_v > to_v:
         raise ValueError(f"bad version range [{from_v}, {to_v}]")
-    docs = {
-        v: json.loads(
-            open(os.path.join(table, "manifests", committed[v])).read()
-        )
-        for v in sorted(committed)
-        if from_v <= v <= to_v
-    }
+    docs = dict(_snap_doc(table, v) for v in sorted(committed) if from_v <= v <= to_v)
     append_only = True
     prev = set(docs[from_v]["files"])
     for v in sorted(docs):
@@ -6949,7 +6674,7 @@ def snap_commit_checked(
                 f"commit (example row: {bad[0]})"
             )
     for _ in range(max_retries):
-        v, doc = _snap_latest_doc(table)
+        v, doc = _snap_doc(table)
         merged = dict(doc.get("stats", {}))
         merged.update(new_stats)
         if _snap_commit_cas(
@@ -7055,7 +6780,7 @@ def table_constraint_commit(spark: SparkSession, sf_dir: str) -> DataFrame:
         rejected = True
     if not rejected:
         raise RuntimeError("corrupted batch was not rejected")
-    v, doc = _snap_latest_doc(table)
+    v, doc = _snap_doc(table)
     if v != v2 or set(d9) & set(doc["files"]):
         raise RuntimeError("rejected commit left staged files visible")
 
@@ -7140,12 +6865,8 @@ def snap_commit_with_nulls(
         has_manifest = os.path.isdir(
             os.path.join(table, "manifests")
         ) and _snap_versions(table)
-        v, doc = _snap_latest_doc(table) if has_manifest else (-1, {"files": []})
-        extra = {
-            k: val
-            for k, val in doc.items()
-            if k not in ("version", "files", "stats", "txn", "dv", "commit_ts")
-        }
+        v, doc = _snap_doc(table) if has_manifest else (-1, {"files": []})
+        extra = _snap_carried(doc)
         nulls = dict(doc.get("nulls", {}))
         nulls.update(new_nulls)
         extra["nulls"] = nulls
@@ -7176,13 +6897,7 @@ def snap_read_null_pruned(
     null_count < rows. Files without recorded null stats are always
     kept (superset safety). The frame still needs the row-level
     predicate — pruning is at FILE grain."""
-    import json
-
-    committed = _snap_versions(table)
-    v = max(committed) if version is None else version
-    doc = json.loads(
-        open(os.path.join(table, "manifests", committed[v])).read()
-    )
+    doc = _snap_doc(table, version)[1]
     nulls = doc.get("nulls", {})
     planned = []
     for f in doc["files"]:
@@ -7673,7 +7388,7 @@ def snap_delete_bitmap(
     entries (executor-side, O(files)), and CAS again. The one true
     conflict — a target file rewritten/compacted away mid-flight, so
     our positions index a dead layout — raises SnapDeleteConflict."""
-    prev_v, doc = _snap_latest_doc(table)
+    prev_v, doc = _snap_doc(table)
     files = doc["files"]
     stats = doc.get("stats", {})
     if doc.get("dv"):
@@ -7746,7 +7461,7 @@ def snap_delete_bitmap(
     base_entries = {f: base_dvb.get(f) for f in ours}
 
     for _ in range(max_retries):
-        cur_v, cur = _snap_latest_doc(table)
+        cur_v, cur = _snap_doc(table)
         if cur.get("dv"):
             raise ValueError(
                 "table gained pair-rows DVs mid-delete; mixing encodings "
@@ -7787,15 +7502,7 @@ def snap_delete_bitmap(
             cur_v + 1,
             stats=cur.get("stats"),
             txn=cur.get("txn"),
-            extra={
-                **{
-                    k: v
-                    for k, v in cur.items()
-                    if k
-                    not in ("version", "files", "stats", "txn", "dv", "dvb", "commit_ts")
-                },
-                "dvb": {**cur_dvb, **ours},
-            },
+            extra={**_snap_carried(cur), "dvb": {**cur_dvb, **ours}},
         ):
             return {
                 "dvb_targets": sorted(ours),
@@ -7822,15 +7529,7 @@ def snap_read_mor_bitmap(
     per-executor state bounded by the bitmaps of locally-read files
     instead of every deleted position in the table). Either way: no
     rewrite, no shuffle of data rows."""
-    import json
-
-    committed = _snap_versions(table)
-    v = max(committed) if version is None else version
-    if v not in committed:
-        raise ValueError(f"snapshot v{v} is not committed (have {sorted(committed)})")
-    manifest = json.loads(
-        open(os.path.join(table, "manifests", committed[v])).read()
-    )
+    manifest = _snap_doc(table, version)[1]
     ddir = os.path.join(table, "data")
     df = spark.read.parquet(*[os.path.join(ddir, f) for f in manifest["files"]])
     dvb = {
@@ -7884,15 +7583,9 @@ def snap_agg_pushdown_bitmap(
     the caller scans. Any file lacking stats for a requested column
     refuses outright, as does an empty table or a pair-DV manifest
     (that encoding has its own path)."""
-    import json
-
     import pyarrow.parquet as pq
 
-    committed = _snap_versions(table)
-    v = max(committed) if version is None else version
-    doc = json.loads(
-        open(os.path.join(table, "manifests", committed[v])).read()
-    )
+    doc = _snap_doc(table, version)[1]
     if not doc["files"] or doc.get("dv"):
         return None
     stats = doc.get("stats", {})
@@ -7986,7 +7679,7 @@ def table_merge_dv_bitmap(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     if rec1["files_rewritten"] or rec2["files_rewritten"]:
         raise RuntimeError("bitmap delete rewrote data files")
-    _, doc = _snap_latest_doc(table)
+    _, doc = _snap_doc(table)
     if sorted(doc["files"]) != sorted(files) or any(
         os.path.getsize(os.path.join(ddir, f)) != sizes0[f] for f in files
     ):
@@ -8091,9 +7784,8 @@ def _snap_commit_schema_wide(
     The declared schema itself also validates against the PREVIOUS
     committed schema (identical or _WIDEN_OK per column, no drops) so
     a metadata-only narrowing commit rejects too (ADVICE r15).
-    O(new files) footer reads + one prior manifest, zero data pages."""
-    import json
-
+    O(new files) footer reads + one prior manifest, zero data pages.
+    Committed through _snap_commit."""
     declared = {name: (t, d) for name, t, d in schema}
     # Validate the DECLARED schema against the previous manifest's
     # (ADVICE r15): a metadata-only commit that NARROWS a column
@@ -8110,9 +7802,7 @@ def _snap_commit_schema_wide(
         if v < version
     ]
     if prior:
-        prev_doc = json.loads(
-            open(os.path.join(mdir, _snap_versions(table)[max(prior)])).read()
-        )
+        prev_doc = _snap_doc(table, max(prior))[1]
         prev_schema = {n: t for n, t, _d in (tuple(p) for p in prev_doc.get("schema") or [])}
         bad_tr = sorted(
             n
@@ -8148,22 +7838,12 @@ def _snap_commit_schema_wide(
                 f"file {n} type-conflicts with the table schema on: {bad} "
                 f"({[(c, got[c], declared[c][0]) for c in bad]})"
             )
-    mdir = os.path.join(table, "manifests")
-    os.makedirs(mdir, exist_ok=True)
-    tmp = os.path.join(mdir, f".v{version}.json.inprogress")
-    with open(tmp, "w") as f:
-        json.dump(
-            {
-                "version": version,
-                "files": sorted(files),
-                "schema": [list(p) for p in schema],
-                "schema_rev": 3,
-            },
-            f,
-        )
-        f.flush()
-        os.fsync(f.fileno())
-    os.replace(tmp, os.path.join(mdir, f"v{version}.json"))
+    _snap_commit(
+        table,
+        files,
+        version,
+        extra={"schema": [list(p) for p in schema], "schema_rev": 3},
+    )
 
 
 def _snap_read_schema_wide(
@@ -8178,15 +7858,7 @@ def _snap_read_schema_wide(
     type — so int32-footer files read as int64 under a widened schema
     with no rewrite. Groups union by name; within a group parquet
     column pruning reaches every file."""
-    import json
-
-    committed = _snap_versions(table)
-    v = max(committed) if version is None else version
-    if v not in committed:
-        raise ValueError(f"snapshot v{v} is not committed (have {sorted(committed)})")
-    manifest = json.loads(
-        open(os.path.join(table, "manifests", committed[v])).read()
-    )
+    manifest = _snap_doc(table, version)[1]
     schema = [tuple(p) for p in manifest["schema"]]
     ddir = os.path.join(table, "data")
     # group by the full footer signature of declared columns (name →
@@ -8423,7 +8095,7 @@ def snap_rewrite_bitmap_deletes(
     ADVANCED after this fold's scan (a concurrent delete whose rows
     our staged replacements still contain) raises
     SnapCompactConflict instead of retrying through."""
-    prev_v, doc = _snap_latest_doc(table)
+    prev_v, doc = _snap_doc(table)
     dvb = {
         f: e
         for f, e in (doc.get("dvb") or {}).items()
@@ -8449,7 +8121,7 @@ def snap_rewrite_bitmap_deletes(
     else:
         replacements, rstats = _snap_add_files(survivor, table, "dvb_fold"), {}
     for _ in range(20):
-        cur_v, cur = _snap_latest_doc(table)
+        cur_v, cur = _snap_doc(table)
         gone = sorted(set(dirty) - set(cur["files"]))
         if gone:
             raise SnapCompactConflict(
@@ -8477,11 +8149,7 @@ def snap_rewrite_bitmap_deletes(
             stats=kept_stats or None,
             txn=cur.get("txn"),
             extra={
-                **{
-                    k: v
-                    for k, v in cur.items()
-                    if k not in ("version", "files", "stats", "txn", "dv", "dvb", "commit_ts")
-                },
+                **{k: v for k, v in _snap_carried(cur).items() if k != "dvb"},
                 **({"dvb": kept_dvb} if kept_dvb else {}),
             },
         ):
@@ -8554,7 +8222,7 @@ def table_dv_bitmap_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     snap_delete_bitmap(
         spark, table, ev.filter(low & (F.col("event_id") % 3 == 1)), "event_id"
     )
-    _, doc = _snap_latest_doc(table)
+    _, doc = _snap_doc(table)
     dirty = sorted(doc["dvb"])
     clean = sorted(set(files) - set(dirty))
     if not dirty or not clean:
@@ -8565,7 +8233,7 @@ def table_dv_bitmap_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     rec = snap_rewrite_bitmap_deletes(spark, table, stats_cols=["event_id"])
     if sorted(rec["rewritten"]) != dirty:
         raise RuntimeError(f"fold rewrote {rec['rewritten']}, wanted {dirty}")
-    _, doc1 = _snap_latest_doc(table)
+    _, doc1 = _snap_doc(table)
     if doc1.get("dvb"):
         raise RuntimeError("fold left dvb entries behind")
     if any(
@@ -8597,7 +8265,7 @@ def table_dv_bitmap_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
         raise RuntimeError(f"second fold was not a no-op: {rec2}")
 
     final = spark.read.parquet(
-        *[os.path.join(ddir, f) for f in _snap_latest_doc(table)[1]["files"]]
+        *[os.path.join(ddir, f) for f in _snap_doc(table)[1]["files"]]
     )
     return (
         final.groupBy("event_type")
@@ -8691,7 +8359,7 @@ def table_dv_bitmap_concurrent(spark: SparkSession, sf_dir: str) -> DataFrame:
     if errs:
         raise RuntimeError(f"concurrent bitmap delete failed: {errs[0]}")
 
-    v, doc = _snap_latest_doc(table)
+    v, doc = _snap_doc(table)
     if v != 2:
         raise RuntimeError(f"expected exactly two successor commits, at v{v}")
     if sorted(doc["files"]) != sorted(files) or any(
@@ -8735,8 +8403,6 @@ def _snap_ts_log_read(table: str) -> dict[int, int | None]:
     lines win (concurrent self-heal appends may duplicate a version —
     manifests are immutable, so duplicates agree). Missing file →
     empty dict (legacy table; callers self-heal)."""
-    import json
-
     out: dict[int, int | None] = {}
     try:
         with open(_snap_ts_log_path(table)) as f:
@@ -8753,8 +8419,6 @@ def _snap_ts_log_read(table: str) -> dict[int, int | None]:
 
 
 def _snap_ts_log_append(table: str, entries: list[tuple[int, int | None]]) -> None:
-    import json
-
     if not entries:
         return
     with open(_snap_ts_log_path(table), "a") as f:
@@ -8772,8 +8436,6 @@ def _snap_ts_log_covering(table: str) -> dict[int, int | None]:
     catch-up line appended, so the NEXT resolution is back to one
     log read. Expired versions lingering in the log are filtered
     against the committed set (a directory listing, zero opens)."""
-    import json
-
     committed = _snap_versions(table)
     log = _snap_ts_log_read(table)
     covered = max(log) if log else -1
@@ -8781,10 +8443,7 @@ def _snap_ts_log_covering(table: str) -> dict[int, int | None]:
     if missing:
         catch_up = []
         for v in missing:
-            doc = json.loads(
-                open(os.path.join(table, "manifests", committed[v])).read()
-            )
-            cts = doc.get("commit_ts")
+            cts = _snap_doc(table, v)[1].get("commit_ts")
             catch_up.append((v, None if cts is None else int(cts)))
         _snap_ts_log_append(table, catch_up)
         log.update(dict(catch_up))
@@ -8845,7 +8504,7 @@ def snap_commit_ts_append(
             cts for cts in _snap_ts_log_covering(table).values() if cts is not None
         ]
         max_stamped = max(stamped) if stamped else None
-        v, doc = _snap_latest_doc(table)
+        v, doc = _snap_doc(table)
         prev_ts = doc.get("commit_ts")
         if prev_ts is not None and int(ts) <= int(prev_ts):
             raise ValueError(
@@ -8863,15 +8522,7 @@ def snap_commit_ts_append(
             stats=doc.get("stats"),
             txn=doc.get("txn"),
             dv=doc.get("dv"),
-            extra={
-                **{
-                    k: val
-                    for k, val in doc.items()
-                    if k
-                    not in ("version", "files", "stats", "txn", "dv", "commit_ts")
-                },
-                "commit_ts": int(ts),
-            },
+            extra={**_snap_carried(doc), "commit_ts": int(ts)},
         ):
             _snap_ts_log_append(table, [(v + 1, int(ts))])
             return v + 1

@@ -1723,42 +1723,42 @@ def snapshot_ingest_sink(table: str, store_name: str, marker: str):
     """foreachBatch sink appending each micro-batch to the atomic-
     manifest snapshot table through ``sinks.exactly_once``: (1) a
     replayed batch is skipped before writing anything; (2) new uuid
-    data files land invisible; (3) manifest v{batch+1} = previous
-    committed list + the new files commits via fsync + os.replace; (4)
+    data files land invisible; (3) manifest v{latest+1} = previous
+    committed list + the new files commits via the CAS link, carrying
+    every other manifest key (ndv, bloom, nulls, ...) forward; (4)
     the KVStore batch watermark advances LAST — a crash anywhere
     earlier leaves either orphan files (invisible by the manifest
     contract) or a committed manifest whose ``txn`` marker map already
     carries this batch id, so the replay only re-advances the
     watermark WITHOUT committing a duplicate successor (the Delta txn
-    appId/version pattern — ADVICE r12: _snap_latest()+1 addressing
+    appId/version pattern — ADVICE r12: latest-version+1 addressing
     alone made a commit-then-crash replay re-append on top of its own
     committed result). Module-level so the replay/crash pins in
     tests/test_streaming.py drive it directly."""
     from steaminganalysis_spark.operators.storage import (
         _snap_add_files,
-        _snap_commit,
-        _snap_latest_doc,
+        _snap_carried,
+        _snap_commit_cas,
+        _snap_doc,
     )
     from steaminganalysis_spark.streaming.sinks import exactly_once
 
     def commit(batch_df: DataFrame, batch_id: int) -> None:
-        from steaminganalysis_spark.operators.storage import _snap_commit_cas
-
-        # Commit via CAS with a retry loop (r13): the sink used plain
-        # os.replace, which CLOBBERS (or is clobbered by) a concurrent
-        # maintenance commit — an OPTIMIZE landing mid-batch would
-        # silently lose one side. Append-vs-rewrite commits always
-        # COMMUTE (the retry re-reads the compacted file list and adds
-        # our files on top), so the loser retries, never aborts. The
-        # batch is staged ONCE outside the loop — a lost race costs one
-        # manifest read + one link syscall, no data rewrite.
+        # Commit via CAS with a retry loop (r13): a concurrent
+        # maintenance commit (an OPTIMIZE landing mid-batch) may take
+        # the version first, and neither side may be lost.
+        # Append-vs-rewrite commits always COMMUTE (the retry re-reads
+        # the compacted file list and adds our files on top), so the
+        # loser retries, never aborts. The batch is staged ONCE
+        # outside the loop — a lost race costs one manifest read + one
+        # link syscall, no data rewrite.
         new_files: list | None = None
         for _ in range(20):
             # Resolve the previous snapshot via the latest-committed
             # lookup (never v{batch_id}: batch ids restart at 0 on a
             # fresh checkpoint, and a pre-loaded table may hold several
             # committed snapshots before ingestion starts).
-            prev_v, prev_doc = _snap_latest_doc(table)
+            prev_v, prev_doc = _snap_doc(table)
             prev_txn = prev_doc.get("txn", {})
             if int(prev_txn.get(marker, -1)) >= batch_id:
                 # Crash landed between the manifest commit and the
@@ -1775,6 +1775,7 @@ def snapshot_ingest_sink(table: str, store_name: str, marker: str):
                 stats=prev_doc.get("stats"),
                 txn={**prev_txn, marker: batch_id},
                 dv=prev_doc.get("dv"),
+                extra=_snap_carried(prev_doc),
             ):
                 return
         raise RuntimeError(
@@ -1804,8 +1805,8 @@ def stream_table_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     snapshot v0, then the delta streams in two micro-batches and each
     ``foreachBatch`` (1) appends the batch as new uuid data files —
     invisible until committed, (2) commits manifest
-    v{batch+1} = previous committed list + the new files (fsync +
-    os.replace — O(1) regardless of table size, no data rewritten),
+    v{latest+1} = previous committed list + the new files (fsync +
+    CAS link — O(1) regardless of table size, no data rewritten),
     and (3) advances the KVStore batch watermark. Replayed batch ids
     return before writing anything (exactly-once); a crash between the
     file-append and the manifest commit strands orphan files that the
@@ -1818,12 +1819,11 @@ def stream_table_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     saw orphans or torn manifests would hash-mismatch.
 
     Scale shape: per batch, only batch rows are written (one
-    partitionless parquet write), the commit is one manifest rename,
+    partitionless parquet write), the commit is one manifest link,
     and nothing existing is rewritten — O(batch) forever, the Delta/
     Iceberg streaming-sink economics. Replay idempotence and
     crash-window behavior pinned in tests/test_streaming.py."""
     import glob
-    import json
     import os
     import shutil
     import time
@@ -1933,12 +1933,12 @@ def snapshot_cdc_merge_sink(table: str, store_name: str, marker: str):
     from steaminganalysis_spark.operators.storage import (
         _snap_add_files_with_stats,
         _snap_commit_cas,
-        _snap_latest_doc,
+        _snap_doc,
     )
     from steaminganalysis_spark.streaming.sinks import exactly_once
 
     def commit(batch_df: DataFrame, batch_id: int) -> None:
-        _pv, _pdoc = _snap_latest_doc(table)
+        _pv, _pdoc = _snap_doc(table)
         _ptxn = _pdoc.get("txn", {})
         if int(_ptxn.get(marker, -1)) >= batch_id:
             # commit-then-crash replay (ADVICE r12): the manifest txn
@@ -2065,7 +2065,7 @@ def stream_table_cdc_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from steaminganalysis_spark.operators.storage import (
         _snap_add_files_with_stats,
-        _snap_commit_stats,
+        _snap_commit,
         _snap_read,
     )
     from steaminganalysis_spark.scratch import scratch_dir
@@ -2082,7 +2082,7 @@ def stream_table_cdc_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         "cdc_base",
         ["event_id"],
     )
-    _snap_commit_stats(table, files, 0, stats)
+    _snap_commit(table, files, 0, stats=stats)
     m = int(ev.agg(F.max("event_id")).first()[0])
     cut1, cut2 = m // 8, m // 4
 
@@ -2178,17 +2178,20 @@ def snapshot_ingest_schema_sink(table: str, store_name: str, marker: str):
     against whatever schema is COMMITTED when it arrives — evolving
     the schema between batches (or across a stream restart) is one
     metadata commit, after which NULL-fill reads serve the
-    pre-evolution batches. Module-level so the rejection/replay pins
+    pre-evolution batches. A concurrent commit that takes the
+    successor version first makes the batch raise FileExistsError
+    (never overwritten; the watermark stays, so the rerun lands on
+    top of it). Module-level so the rejection/replay pins
     in tests/test_streaming.py drive it directly."""
     from steaminganalysis_spark.operators.storage import (
         _snap_add_files,
         _snap_commit_schema,
-        _snap_latest_doc,
+        _snap_doc,
     )
     from steaminganalysis_spark.streaming.sinks import exactly_once
 
     def commit(batch_df: DataFrame, batch_id: int) -> None:
-        prev_v, prev_doc = _snap_latest_doc(table)
+        prev_v, prev_doc = _snap_doc(table)
         prev_txn = prev_doc.get("txn", {})
         if int(prev_txn.get(marker, -1)) >= batch_id:
             # commit-then-crash replay: the table already holds this
@@ -2263,7 +2266,7 @@ def stream_table_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame
         MV_CUTOFF,
         _snap_add_files,
         _snap_commit_schema,
-        _snap_latest_doc,
+        _snap_doc,
         _snap_read_schema,
     )
     from steaminganalysis_spark.scratch import scratch_dir
@@ -2332,7 +2335,7 @@ def stream_table_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame
 
     # rejection #1 (pre-evolution): a batch already carrying `day` —
     # undeclared column, must fail at commit with nothing visible
-    v_before, doc_before = _snap_latest_doc(table)
+    v_before, doc_before = _snap_doc(table)
     store = KVStore.instance(store_name)
     wm_before = store.last_applied(marker)
     rogue = ev.filter(F.col("ts") >= mid).limit(10).select(
@@ -2346,7 +2349,7 @@ def stream_table_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame
         raise RuntimeError("pre-evolution rogue batch was accepted")
     except ValueError:
         pass
-    v_after, _doc = _snap_latest_doc(table)
+    v_after, _doc = _snap_doc(table)
     if v_after != v_before or store.last_applied(marker) != wm_before:
         raise RuntimeError("rejected batch moved the table or watermark")
 
@@ -2422,18 +2425,20 @@ def snapshot_ingest_partitioned_sink(
     reference's day-bucketed output model (KafkaApp.scala:58-60 keys
     results by the date substring) elevated to streaming TABLE
     layout: a dashboard's day-range query prunes at manifest grain
-    against data that arrived seconds ago. Module-level so the
+    against data that arrived seconds ago. Like the schema sink, a
+    lost race on the successor version raises FileExistsError and
+    never overwrites the winner. Module-level so the
     replay/tuple-carry pins in tests/test_streaming.py drive it
     directly."""
     from steaminganalysis_spark.operators.storage import (
         _snap_add_files_partitioned,
         _snap_commit_partitioned,
-        _snap_latest_doc,
+        _snap_doc,
     )
     from steaminganalysis_spark.streaming.sinks import exactly_once
 
     def commit(batch_df: DataFrame, batch_id: int) -> None:
-        prev_v, prev_doc = _snap_latest_doc(table)
+        prev_v, prev_doc = _snap_doc(table)
         prev_txn = prev_doc.get("txn", {})
         if int(prev_txn.get(marker, -1)) >= batch_id:
             return
@@ -2499,7 +2504,7 @@ def stream_table_partition_ingest(spark: SparkSession, sf_dir: str) -> DataFrame
         MV_CUTOFF,
         _snap_add_files_partitioned,
         _snap_commit_partitioned,
-        _snap_latest_doc,
+        _snap_doc,
         snap_read_partition_pruned,
     )
     from steaminganalysis_spark.scratch import scratch_dir
@@ -2565,7 +2570,7 @@ def stream_table_partition_ingest(spark: SparkSession, sf_dir: str) -> DataFrame
         for r in delta.select("day").distinct().collect()
     }
     got, planned, total = snap_read_partition_pruned(spark, table, "day", days)
-    _v, doc = _snap_latest_doc(table)
+    _v, doc = _snap_doc(table)
     parts = doc["partitions"]
     expect = sorted(f for f in doc["files"] if parts[f]["day"] in days)
     if sorted(planned) != expect:
@@ -2619,12 +2624,12 @@ def snapshot_cdc_dv_sink(table: str, store_name: str, marker: str):
         _snap_add_files,
         _snap_add_files_with_stats,
         _snap_commit_cas,
-        _snap_latest_doc,
+        _snap_doc,
     )
     from steaminganalysis_spark.streaming.sinks import exactly_once
 
     def commit(batch_df: DataFrame, batch_id: int) -> None:
-        prev_v, doc = _snap_latest_doc(table)
+        prev_v, doc = _snap_doc(table)
         prev_txn = doc.get("txn", {})
         if int(prev_txn.get(marker, -1)) >= batch_id:
             return
@@ -2957,12 +2962,12 @@ def _table_cdf_commit(
     from steaminganalysis_spark.operators.storage import (
         _snap_add_files,
         _snap_commit_cas,
-        _snap_latest_doc,
+        _snap_doc,
         _snap_read,
     )
     from steaminganalysis_spark.registry import to_cents
 
-    mv_v, mv_doc = _snap_latest_doc(mv_table)
+    mv_v, mv_doc = _snap_doc(mv_table)
     mv_txn = mv_doc.get("txn", {})
     m = int(mv_txn.get(marker, -1))
     if start < m < stop:
@@ -2990,7 +2995,7 @@ def _table_cdf_commit(
         .coalesce(1)
     )
     files = _snap_add_files(mv1, mv_table, f"cdfmv_{stop}")
-    # CAS, not os.replace: the MV table has exactly one writer (this
+    # A lost CAS fails loudly: the MV table has exactly one writer (this
     # consumer), so a lost race means a misconfigured second consumer
     # — fail loudly rather than clobber its commit.
     if not _snap_commit_cas(
@@ -3317,7 +3322,7 @@ def stream_table_replicate(spark: SparkSession, sf_dir: str) -> DataFrame:
         _snap_add_files_with_stats,
         _snap_commit,
         _snap_commit_cas,
-        _snap_latest_doc,
+        _snap_doc,
         _snap_read,
         snap_diff,
         snap_read_mor,
@@ -3407,7 +3412,7 @@ def stream_table_replicate(spark: SparkSession, sf_dir: str) -> DataFrame:
         sink(batch, v)
 
     # gate 2: replaying the last version leaves the manifest identical
-    rv, rdoc = _snap_latest_doc(rep)
+    rv, rdoc = _snap_doc(rep)
     before = json.dumps(rdoc, sort_keys=True)
     diff2 = snap_diff(spark, src, 1, 2, "event_id")
     sink(
@@ -3422,7 +3427,7 @@ def stream_table_replicate(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         2,
     )
-    rv2, rdoc2 = _snap_latest_doc(rep)
+    rv2, rdoc2 = _snap_doc(rep)
     if json.dumps(rdoc2, sort_keys=True) != before:
         raise RuntimeError("replay mutated the replica manifest")
     # gate 3: the scattered deletes took the DV path on the replica
@@ -3494,7 +3499,7 @@ def stream_table_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     import time
 
     from steaminganalysis_spark.operators.storage import (
-        _snap_latest_doc,
+        _snap_doc,
         _snap_read,
         snap_auto_optimize,
     )
@@ -3555,7 +3560,7 @@ def stream_table_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     for i in range(5):
         drip(i)
     run_epoch()
-    _, doc1 = _snap_latest_doc(table)
+    _, doc1 = _snap_doc(table)
     if len(doc1["files"]) != 5:
         raise RuntimeError(f"epoch 1 landed {len(doc1['files'])} files")
     import pyarrow.parquet as pq
@@ -3569,7 +3574,7 @@ def stream_table_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     if sorted(rec1["selected"]) != doc1["files"] or rec1["n_out"] != 1:
         raise RuntimeError(f"epoch-1 maintenance misfired: {rec1}")
-    _, doc1b = _snap_latest_doc(table)
+    _, doc1b = _snap_doc(table)
     merged1 = doc1b["files"][0]
     ddir = os.path.join(table, "data")
     meta1 = (
@@ -3581,7 +3586,7 @@ def stream_table_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     for i in range(5, 10):
         drip(i)
     run_epoch()
-    _, doc2 = _snap_latest_doc(table)
+    _, doc2 = _snap_doc(table)
     new_small = sorted(set(doc2["files"]) - {merged1})
     if len(new_small) != 5:
         raise RuntimeError(f"epoch 2 landed {sorted(doc2['files'])}")
@@ -3601,7 +3606,7 @@ def stream_table_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     if rec3["selected"] or rec3["version"] != rec2["version"]:
         raise RuntimeError(f"maintenance did not converge: {rec3}")
-    _, doc3 = _snap_latest_doc(table)
+    _, doc3 = _snap_doc(table)
     if len(doc3["files"]) != 2:
         raise RuntimeError(f"expected 2 files, got {len(doc3['files'])}")
 
@@ -3666,7 +3671,7 @@ def stream_table_epoch_tags(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from steaminganalysis_spark.operators.storage import (
         _snap_commit,
-        _snap_latest_doc,
+        _snap_doc,
         _snap_read,
         _snap_versions,
         snap_auto_optimize,
@@ -3725,7 +3730,7 @@ def stream_table_epoch_tags(spark: SparkSession, sf_dir: str) -> DataFrame:
         drip(i)
     run_epoch()
     v1 = snap_ref_create(table, "train_v1", "tag")
-    v1_files = set(_snap_latest_doc(table)[1]["files"])
+    v1_files = set(_snap_doc(table)[1]["files"])
     v1_rows = _snap_read(spark, table, v1).count()
 
     # epoch 2 (%10 in {8,9}), then maintenance replaces EVERY file
@@ -3734,7 +3739,7 @@ def stream_table_epoch_tags(spark: SparkSession, sf_dir: str) -> DataFrame:
     run_epoch()
     import pyarrow.parquet as pq
 
-    _, doc = _snap_latest_doc(table)
+    _, doc = _snap_doc(table)
     total = sum(
         pq.ParquetFile(os.path.join(table, "data", f)).metadata.num_rows
         for f in doc["files"]
@@ -3835,20 +3840,13 @@ def table_cdf_signed_step(
     100 TB table drains as 10k/N bounded batches, each O(max_files)
     file reads + one O(groups) MV commit, restartable at entry
     grain."""
-    import json
     import os
     from functools import reduce
 
-    from steaminganalysis_spark.operators.storage import _snap_versions
+    from steaminganalysis_spark.operators.storage import _snap_doc, _snap_versions
     from steaminganalysis_spark.streaming.sinks import KVStore
 
-    committed = _snap_versions(src_table)
-    docs = {
-        v: json.loads(
-            open(os.path.join(src_table, "manifests", committed[v])).read()
-        )
-        for v in sorted(committed)
-    }
+    docs = dict(_snap_doc(src_table, v) for v in sorted(_snap_versions(src_table)))
     vs = sorted(docs)
     log: list[tuple[str, int]] = []
     prev = set(docs[vs[0]]["files"])

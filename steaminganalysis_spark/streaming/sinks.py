@@ -297,11 +297,13 @@ def apply_day_rollup_batch(
 
     ``scope`` namespaces the last-applied watermark. foreachBatch batch
     ids are monotonic PER CHECKPOINT, so the watermark must be scoped
-    per checkpoint too: with a store-global key, a second stream (or a
-    recreated checkpoint restarting at batch 0) sharing the same store
-    would silently drop every batch id at-or-below the other stream's
-    watermark. `day_rollup_sink` derives the scope from its checkpoint
-    dir.
+    per checkpoint too: with a store-global key, a second stream sharing
+    the same store would silently drop every batch id at-or-below the
+    other stream's watermark. `day_rollup_sink` derives the scope from
+    its checkpoint dir's path. That does NOT cover a checkpoint deleted
+    and recreated at the same path: it restarts at batch 0 against the
+    old watermark, and its batches are skipped unreported until their
+    ids pass it (open gap, ROADMAP item 3).
 
     Exactly-once: the delta is computed FIRST (one row per day —
     O(days), independent of batch volume), then every increment and the

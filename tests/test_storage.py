@@ -365,14 +365,27 @@ def test_snapshot_manifest_contract(spark):
     directly against the helpers: (a) a snapshot read plans ONLY the
     manifest's files — an orphan data file in data/ is invisible; (b)
     appends never mutate an old snapshot (v0 re-read byte-identical
-    after the v1 commit); (c) an uncommitted version raises; (d) the
-    latest-committed resolution ignores in-progress manifests."""
+    after the v1 commit); (c) an uncommitted version raises, from
+    every reader that takes a version; (d) the latest-committed
+    resolution ignores in-progress manifests; (e) a committed version
+    is never replaced — a second commit at it raises and leaves its
+    manifest byte-identical."""
+    import os
+
     import pytest as _pytest
 
     from steaminganalysis_spark.operators.storage import (
         _snap_add_files,
         _snap_commit,
         _snap_read,
+        snap_agg_pushdown,
+        snap_agg_pushdown_bitmap,
+        snap_agg_pushdown_dv,
+        snap_metadata_files,
+        snap_ndv_estimates,
+        snap_read_manifest_list,
+        snap_read_null_pruned,
+        snap_read_transform_pruned,
     )
     from steaminganalysis_spark.scratch import scratch_dir
 
@@ -382,14 +395,32 @@ def test_snapshot_manifest_contract(spark):
     _snap_commit(table, f0, 0)
     v0_before = sorted(map(tuple, _snap_read(spark, table, 0).collect()))
 
+    v0_path = os.path.join(table, "manifests", "v0.json")
+    with open(v0_path, "rb") as fh:
+        v0_bytes = fh.read()
+    with _pytest.raises(FileExistsError):
+        _snap_commit(table, ["b.parquet"], 0)
+    with open(v0_path, "rb") as fh:
+        assert fh.read() == v0_bytes
+    for read in (
+        lambda: snap_read_transform_pruned(spark, table, version=7),
+        lambda: snap_ndv_estimates(table, version=7),
+        lambda: snap_metadata_files(spark, table, version=7),
+        lambda: snap_read_manifest_list(spark, table, ["x"], version=7),
+        lambda: snap_agg_pushdown(table, ["id"], version=7),
+        lambda: snap_agg_pushdown_dv(table, ["id"], version=7),
+        lambda: snap_read_null_pruned(spark, table, "v", True, version=7),
+        lambda: snap_agg_pushdown_bitmap(table, ["id"], version=7),
+    ):
+        with _pytest.raises(ValueError, match="not committed"):
+            read()
+
     f1 = _snap_add_files(
         spark.range(100, 150).selectExpr("id", "id * 2 AS v"), table, "snaptest_d"
     )
     _snap_commit(table, f0 + f1, 1)
     # orphan + torn manifest on disk
     _snap_add_files(spark.range(7).selectExpr("id", "id AS v"), table, "snaptest_o")
-    import os
-
     with open(os.path.join(table, "manifests", ".v9.json.inprogress"), "w") as fh:
         fh.write("{")
 
@@ -415,7 +446,7 @@ def test_cas_commit_thread_race_and_loser_invisibility(spark):
         _snap_add_files,
         _snap_commit,
         _snap_commit_cas,
-        _snap_latest,
+        _snap_doc,
         _snap_read,
         snap_append_optimistic,
     )
@@ -451,11 +482,11 @@ def test_cas_commit_thread_race_and_loser_invisibility(spark):
 
     # contiguous versions 1..N, one per writer
     assert sorted(results) == list(range(1, n_writers + 1)), results
-    v, files = _snap_latest(table)
+    v, doc = _snap_doc(table)
     assert v == n_writers
     # every append present exactly once in the final manifest
     expected = sorted(f0 + [f for fs in file_sets for f in fs])
-    assert sorted(files) == expected
+    assert sorted(doc["files"]) == expected
     # and in the data: 100 base + 6*10 appended rows
     assert _snap_read(spark, table).count() == 100 + 10 * n_writers
     # each intermediate manifest is a superset chain (no lost appends)
@@ -539,10 +570,10 @@ def test_vacuum_shared_file_safety_and_merge_amplification(spark):
     # files: commit the staged files, then expire with grace 0 — the
     # delete-time re-list sees v2 and keeps them even though the
     # caller's retain list predates it.
-    from steaminganalysis_spark.operators.storage import _snap_latest
+    from steaminganalysis_spark.operators.storage import _snap_doc
 
-    v1, f1 = _snap_latest(table)
-    _snap_commit(table, f1 + staged, v1 + 1)
+    v1, d1 = _snap_doc(table)
+    _snap_commit(table, d1["files"] + staged, v1 + 1)
     record3 = snap_expire(table, retain=[1], orphan_grace_seconds=0.0)
     assert record3["files_removed"] == []  # staged now referenced by v2
     assert all(os.path.exists(os.path.join(ddir, f)) for f in staged)
@@ -584,7 +615,7 @@ def test_pruned_read_superset_safety_and_stats_roundtrip(spark):
     from steaminganalysis_spark.operators.storage import (
         _snap_add_files,
         _snap_add_files_with_stats,
-        _snap_commit_stats,
+        _snap_commit,
         snap_read_pruned,
     )
     from steaminganalysis_spark.scratch import scratch_dir
@@ -600,7 +631,7 @@ def test_pruned_read_superset_safety_and_stats_roundtrip(spark):
         table,
         "pn",
     )
-    _snap_commit_stats(table, files + extra, 0, stats)
+    _snap_commit(table, files + extra, 0, stats=stats)
 
     import os
 
@@ -769,7 +800,7 @@ def test_optimize_concurrent_thread_race(spark):
         SnapCompactConflict,
         _snap_add_files,
         _snap_commit,
-        _snap_latest,
+        _snap_doc,
         _snap_read,
         snap_append_optimistic,
         snap_compact_optimistic,
@@ -822,9 +853,9 @@ def test_optimize_concurrent_thread_race(spark):
     for t in ts:
         t.join()
     assert not errs, errs
-    v, files = _snap_latest(table)
+    v, doc = _snap_doc(table)
     assert v == 6  # v0 + 5 appends + 1 compaction, contiguous
-    assert set(files) == set(compacted) | {f for a in appends for f in a}
+    assert set(doc["files"]) == set(compacted) | {f for a in appends for f in a}
     got = _snap_read(spark, table)
     assert got.count() == 650
     assert got.select("id").distinct().count() == 650
@@ -837,8 +868,8 @@ def test_optimize_concurrent_thread_race(spark):
     )
     with _pytest.raises(SnapCompactConflict):
         snap_compact_optimistic(table, [base[0]], doomed)
-    v2, files2 = _snap_latest(table)
-    assert v2 == 6 and not set(doomed) & set(files2)
+    v2, doc2 = _snap_doc(table)
+    assert v2 == 6 and not set(doomed) & set(doc2["files"])
 
 
 def test_dv_scoping_reinsert_and_rewrite_compaction(spark):
@@ -853,8 +884,7 @@ def test_dv_scoping_reinsert_and_rewrite_compaction(spark):
     from steaminganalysis_spark.operators.storage import (
         _snap_add_files_with_stats,
         _snap_commit,
-        _snap_latest,
-        _snap_latest_doc,
+        _snap_doc,
         snap_append_optimistic,
         snap_delete_optimistic,
         snap_expire,
@@ -906,7 +936,7 @@ def test_dv_scoping_reinsert_and_rewrite_compaction(spark):
         *[_os.path.join(ddir, f) for f in rec2["cow_new_files"]]
     )
     assert rep.filter("event_id % 13 = 0 OR event_id < 25").count() == 0
-    _v, doc = _snap_latest_doc(table)
+    _v, doc = _snap_doc(table)
     assert all(f not in doc.get("dv", {}) for f in rec2["cow_rewritten"])
     # below 25: 23 base rows still present (0 and 13 were DV-deleted)
     # PLUS the re-inserted 13 in its own file — delete #2 correctly
@@ -921,7 +951,7 @@ def test_dv_scoping_reinsert_and_rewrite_compaction(spark):
     )
 
     # (c) VACUUM keeps referenced DV files
-    v, _f = _snap_latest(table)
+    v, _doc = _snap_doc(table)
     record = snap_expire(table, retain=[v], orphan_grace_seconds=0.0)
     assert not set(rec["dv_files"]) & set(record["files_removed"])
     assert snap_read_mor(spark, table, "event_id").count() == expect
@@ -997,7 +1027,7 @@ def test_wap_branch_race_and_orphan_invisibility(spark):
     from steaminganalysis_spark.operators.storage import (
         _snap_add_files,
         _snap_commit,
-        _snap_latest,
+        _snap_doc,
         _snap_read,
         snap_branch_commit,
         snap_branch_drop,
@@ -1045,8 +1075,8 @@ def test_wap_branch_race_and_orphan_invisibility(spark):
     for t in ts:
         t.join()
     assert not errs, errs
-    v, files = _snap_latest(table)
-    assert v == 2 and set(files) == set(base + a + b)
+    v, doc = _snap_doc(table)
+    assert v == 2 and set(doc["files"]) == set(base + a + b)
     assert _snap_read(spark, table).count() == 180
 
     # (b) dropped branch: orphans invisible, swept only by VACUUM
@@ -1055,7 +1085,7 @@ def test_wap_branch_race_and_orphan_invisibility(spark):
         table,
         "wp_c",
     )
-    snap_branch_commit(table, "bc", files + c)
+    snap_branch_commit(table, "bc", doc["files"] + c)
     snap_branch_drop(table, "bc")
     assert _snap_read(spark, table).count() == 180
     record = snap_expire(table, retain=[2], orphan_grace_seconds=0.0)
@@ -1079,7 +1109,7 @@ def test_restore_vacuum_interplay_and_txn_carry(spark):
         _snap_add_files,
         _snap_commit,
         _snap_commit_cas,
-        _snap_latest_doc,
+        _snap_doc,
         _snap_read,
         snap_expire,
         snap_restore,
@@ -1103,7 +1133,7 @@ def test_restore_vacuum_interplay_and_txn_carry(spark):
     v2 = snap_restore(table, 0)
     assert v2 == 2
     # (b) txn carried from latest (v1), not the target (v0 had none)
-    _v, doc = _snap_latest_doc(table)
+    _v, doc = _snap_doc(table)
     assert doc.get("txn", {}).get("m") == 7
     # (a) VACUUM: retain the restore, expire the bad line
     record = snap_expire(table, retain=[0, 2], orphan_grace_seconds=0.0)
@@ -1455,7 +1485,7 @@ def test_optimize_zorder_conflicts_stats_carry_and_tight_spans(spark):
         SnapCompactConflict,
         _snap_add_files_with_stats,
         _snap_commit,
-        _snap_latest_doc,
+        _snap_doc,
         _snap_read,
         _snap_versions,
         snap_append_optimistic,
@@ -1502,7 +1532,7 @@ def test_optimize_zorder_conflicts_stats_carry_and_tight_spans(spark):
     finally:
         st._snap_add_files_with_stats = real_stage
     assert fired  # the injection actually ran
-    lv, doc = _snap_latest_doc(table)
+    lv, doc = _snap_doc(table)
     assert lv == v and set(fa) <= set(doc["files"])  # append survived
     assert not (set(f0) & set(doc["files"]))  # sources replaced
     assert _snap_read(spark, table).count() == 500  # both visible
@@ -1550,7 +1580,7 @@ def test_optimize_zorder_conflicts_stats_carry_and_tight_spans(spark):
         st._snap_add_files_with_stats = real_stage
     assert fired2
     # nothing from the failed zorder is visible
-    _, doc2 = _snap_latest_doc(table2)
+    _, doc2 = _snap_doc(table2)
     assert set(doc2["files"]) == (set(f0) - {f0[0]}) | set(rw)
 
 
@@ -1566,7 +1596,7 @@ def test_snap_history_operation_classes_and_footer_rows(spark):
     from steaminganalysis_spark.operators.storage import (
         _snap_add_files,
         _snap_commit,
-        _snap_latest_doc,
+        _snap_doc,
         snap_history,
     )
     from steaminganalysis_spark.scratch import scratch_dir
@@ -1972,7 +2002,7 @@ def test_constraint_commit_edge_bounds_and_null_rejection(spark):
         _snap_add_files,
         _snap_add_files_with_stats,
         _snap_commit,
-        _snap_latest_doc,
+        _snap_doc,
         snap_commit_checked,
     )
     from steaminganalysis_spark.scratch import scratch_dir
@@ -2026,7 +2056,7 @@ def test_constraint_commit_edge_bounds_and_null_rejection(spark):
     except SnapConstraintViolation:
         pass
     # (4) version counter untouched by the rejection
-    v4, doc = _snap_latest_doc(table)
+    v4, doc = _snap_doc(table)
     assert v4 == 2 and not (set(f3) & set(doc["files"]))
 
     # (5) in-bounds stats + NULLs must NOT stats-prove: parquet
@@ -2117,7 +2147,7 @@ def test_zorder_dv_table_applies_and_drops_dvs(spark):
         SnapCompactConflict,
         _snap_add_files_with_stats,
         _snap_commit,
-        _snap_latest_doc,
+        _snap_doc,
         snap_delete_optimistic,
         snap_optimize_zorder,
         snap_read_mor,
@@ -2145,7 +2175,7 @@ def test_zorder_dv_table_applies_and_drops_dvs(spark):
         [(i,) for i in range(0, 400, 50)], "event_id long"
     )
     rec = snap_delete_optimistic(spark, table, dels, "event_id")
-    _, doc = _snap_latest_doc(table)
+    _, doc = _snap_doc(table)
     assert doc.get("dv"), f"harness broke: delete took COW ({rec})"
 
     # (1) refusal without key_col
@@ -2159,7 +2189,7 @@ def test_zorder_dv_table_applies_and_drops_dvs(spark):
     v = snap_optimize_zorder(
         spark, table, "event_id", "user_id", key_col="event_id"
     )
-    lv, doc = _snap_latest_doc(table)
+    lv, doc = _snap_doc(table)
     assert lv == v and not doc.get("dv")
     got = sorted(
         r.event_id
@@ -2212,7 +2242,7 @@ def test_analyze_ndv_key_expr_invalidates_carry(spark):
     from steaminganalysis_spark.operators.storage import (
         _snap_add_files,
         _snap_commit,
-        _snap_latest_doc,
+        _snap_doc,
         snap_analyze_ndv,
         snap_ndv_estimates,
     )
@@ -2227,7 +2257,7 @@ def test_analyze_ndv_key_expr_invalidates_carry(spark):
     f1 = _snap_add_files(df, table, "kx1")
     _snap_commit(table, f1, 0)
     snap_analyze_ndv(spark, table, "event_type", "user_id + 1")
-    _, doc = _snap_latest_doc(table)
+    _, doc = _snap_doc(table)
     assert doc["ndv"]["key_expr"] == "user_id + 1"
     # same grouping, different key expression -> full recompute
     snap_analyze_ndv(spark, table, "event_type", "event_id * 2")
@@ -2250,7 +2280,7 @@ def test_metadata_commits_cas_never_clobber_concurrent_append(spark):
     from steaminganalysis_spark.operators.storage import (
         _snap_add_files,
         _snap_commit,
-        _snap_latest_doc,
+        _snap_doc,
         snap_analyze_ndv,
         snap_append_optimistic,
         snap_bloom_build,
@@ -2291,7 +2321,7 @@ def test_metadata_commits_cas_never_clobber_concurrent_append(spark):
     finally:
         st._snap_commit_cas = real_cas
     assert fired
-    lv, doc = _snap_latest_doc(table)
+    lv, doc = _snap_doc(table)
     # the append survived AND the analyze covers the appended file
     assert lv == v and set(fa) <= set(doc["files"])
     assert set(doc["ndv"]["registers"]) == set(f1 + fa)
@@ -2299,7 +2329,7 @@ def test_metadata_commits_cas_never_clobber_concurrent_append(spark):
     # same discipline for the bloom build (no injection needed to
     # check key preservation: ndv must survive the bloom commit)
     snap_bloom_build(spark, table, "text")
-    _, doc2 = _snap_latest_doc(table)
+    _, doc2 = _snap_doc(table)
     assert set(doc2["bloom"]["words"]) == set(f1 + fa)
     assert doc2.get("ndv"), "bloom commit dropped the ndv block"
 
@@ -2438,7 +2468,7 @@ def test_ann_index_commits_crash_and_rewrite_paths(spark):
     from steaminganalysis_spark.operators.storage import (
         _snap_add_files,
         _snap_commit_cas,
-        _snap_latest_doc,
+        _snap_doc,
         _snap_read,
         snap_append_optimistic,
         snap_compact_optimistic,
@@ -2484,7 +2514,7 @@ def test_ann_index_commits_crash_and_rewrite_paths(spark):
     _snap_add_files(  # orphan — a crashed updater's staging
         seed.limit(3), index_table, "axp_orphan"
     )
-    v_ix, doc_ix = _snap_latest_doc(index_table)
+    v_ix, doc_ix = _snap_doc(index_table)
     assert v_ix == 0 and doc_ix["covers_corpus_version"] == 0  # (1) invisible
 
     rec = snap_ann_index_update(spark, corpus_table, index_table, index_dir)
@@ -2496,7 +2526,7 @@ def test_ann_index_commits_crash_and_rewrite_paths(spark):
     rw = _snap_add_files(
         _snap_read(spark, corpus_table).coalesce(1), corpus_table, "axprw"
     )
-    _, cdoc = _snap_latest_doc(corpus_table)
+    _, cdoc = _snap_doc(corpus_table)
     snap_compact_optimistic(corpus_table, cdoc["files"], rw)
     rec2 = snap_ann_index_update(spark, corpus_table, index_table, index_dir)
     assert rec2["strategy"] == "diff-fallback"
@@ -2519,7 +2549,7 @@ def test_compact_carries_metadata_and_refuses_dv_sources(spark):
         _snap_add_files,
         _snap_add_files_with_stats,
         _snap_commit,
-        _snap_latest_doc,
+        _snap_doc,
         _snap_read,
         snap_compact_optimistic,
         snap_delete_optimistic,
@@ -2542,7 +2572,7 @@ def test_compact_carries_metadata_and_refuses_dv_sources(spark):
         spark.createDataFrame([(3,), (7,)], "event_id long"),
         "event_id",
     )
-    _, doc = _snap_latest_doc(table)
+    _, doc = _snap_doc(table)
     dv_files = sorted(doc.get("dv", {}))
     assert dv_files  # harness: the delete took the DV path
     clean = [f for f in doc["files"] if f not in doc.get("dv", {})][:2]
@@ -2556,7 +2586,7 @@ def test_compact_carries_metadata_and_refuses_dv_sources(spark):
         "ccs",
     )
     snap_compact_optimistic(table, clean, staged)
-    _, doc2 = _snap_latest_doc(table)
+    _, doc2 = _snap_doc(table)
     assert sorted(doc2.get("dv", {})) == dv_files  # dv carried
     survivors = [f for f in doc["files"] if f not in clean]
     assert all(f in doc2.get("stats", {}) for f in survivors)
@@ -2621,7 +2651,7 @@ def test_dvb_lifecycle_compact_refusal_carry_and_append(spark):
         _snap_add_files,
         _snap_add_files_with_stats,
         _snap_commit,
-        _snap_latest_doc,
+        _snap_doc,
         snap_append_optimistic,
         snap_compact_optimistic,
         snap_delete_bitmap,
@@ -2652,7 +2682,7 @@ def test_dvb_lifecycle_compact_refusal_carry_and_append(spark):
         ),
         "k",
     )
-    _, doc = _snap_latest_doc(table)
+    _, doc = _snap_doc(table)
     dirty = sorted(doc["dvb"])
     clean = sorted(set(doc["files"]) - set(dirty))
     assert dirty and clean
@@ -2672,7 +2702,7 @@ def test_dvb_lifecycle_compact_refusal_carry_and_append(spark):
     )
     merged = _snap_add_files(clean_df.coalesce(1), table, "dvbp_merge")
     snap_compact_optimistic(table, clean, merged)
-    _, doc2 = _snap_latest_doc(table)
+    _, doc2 = _snap_doc(table)
     assert doc2["dvb"] == doc["dvb"]
 
     # (3) append carries dvb untouched
@@ -2684,7 +2714,7 @@ def test_dvb_lifecycle_compact_refusal_carry_and_append(spark):
         "dvbp_extra",
     )
     snap_append_optimistic(table, extra)
-    _, doc3 = _snap_latest_doc(table)
+    _, doc3 = _snap_doc(table)
     assert doc3["dvb"] == doc["dvb"]
 
     # (5) MoR bitmap read: original minus deletes plus append
@@ -2714,7 +2744,7 @@ def test_commit_ts_is_commit_scoped_not_carried(spark):
         _snap_add_files,
         _snap_add_files_with_stats,
         _snap_commit_cas,
-        _snap_latest_doc,
+        _snap_doc,
         snap_append_optimistic,
         snap_commit_ts_append,
         snap_delete_bitmap,
@@ -2744,7 +2774,7 @@ def test_commit_ts_is_commit_scoped_not_carried(spark):
         "cts_plain",
     )
     snap_append_optimistic(table, extra)
-    _, doc1 = _snap_latest_doc(table)
+    _, doc1 = _snap_doc(table)
     assert "commit_ts" not in doc1, doc1.get("commit_ts")
 
     # bitmap delete: ditto
@@ -2756,12 +2786,12 @@ def test_commit_ts_is_commit_scoped_not_carried(spark):
         ),
         "k",
     )
-    _, doc2 = _snap_latest_doc(table)
+    _, doc2 = _snap_doc(table)
     assert "commit_ts" not in doc2
 
     # DV fold: ditto
     snap_rewrite_bitmap_deletes(spark, table)
-    _, doc3 = _snap_latest_doc(table)
+    _, doc3 = _snap_doc(table)
     assert "commit_ts" not in doc3
 
     # AS OF any ts >= 1000 resolves to the v0 timestamped snapshot,
@@ -2868,7 +2898,7 @@ def test_auto_optimize_dv_crash_shape_converges_and_advance_conflicts(spark):
         _snap_add_files,
         _snap_add_files_with_stats,
         _snap_commit,
-        _snap_latest_doc,
+        _snap_doc,
         snap_auto_optimize,
         snap_compact_optimistic,
         snap_delete_bitmap,
@@ -2897,7 +2927,7 @@ def test_auto_optimize_dv_crash_shape_converges_and_advance_conflicts(spark):
         ),
         "k",
     )
-    _, doc = _snap_latest_doc(table)
+    _, doc = _snap_doc(table)
     assert sorted(doc["dvb"]) == sorted(tiny)
     before = sorted(
         r.k for r in snap_read_mor_bitmap(spark, table).select("k").collect()
@@ -2907,7 +2937,7 @@ def test_auto_optimize_dv_crash_shape_converges_and_advance_conflicts(spark):
     # file; the policy must fold+compact, not raise
     rec = snap_auto_optimize(spark, table, small_rows=150, target_rows=10**6)
     assert rec["folded"] == sorted(tiny) and rec["selected"] == sorted(tiny)
-    _, doc1 = _snap_latest_doc(table)
+    _, doc1 = _snap_doc(table)
     assert not doc1.get("dvb")
     from steaminganalysis_spark.operators.storage import _snap_read
 
@@ -2925,7 +2955,7 @@ def test_auto_optimize_dv_crash_shape_converges_and_advance_conflicts(spark):
         spark.range(901, 903).select(F.col("id").alias("k")),
         "k",
     )
-    _, doc2 = _snap_latest_doc(table)
+    _, doc2 = _snap_doc(table)
     applied = {target[0]: dict(doc2["dvb"][target[0]])}
     staged = _snap_add_files(
         snap_read_mor_bitmap(spark, table)
@@ -2949,7 +2979,7 @@ def test_auto_optimize_dv_crash_shape_converges_and_advance_conflicts(spark):
     _snap_commit(table2, t2, 0)
     import json as _json
 
-    v, d2 = _snap_latest_doc(table2)
+    v, d2 = _snap_doc(table2)
     # hand-plant a pair-rows dv entry (the r13 encoding)
     from steaminganalysis_spark.operators.storage import _snap_commit_cas
 
@@ -3017,7 +3047,7 @@ def test_bitmap_delete_retry_merge_deterministic_and_dead_layout_conflict(spark,
     )
     monkeypatch.setattr(st, "_snap_commit_cas", orig_cas)
     assert rec["deleted_rows"] == 60  # ours only, relative to winner
-    v, doc = st._snap_latest_doc(table)
+    v, doc = st._snap_doc(table)
     assert v == 2
     card_sum = sum(e["card"] for e in doc["dvb"].values())
     assert card_sum == 120  # union of both writers, no double count
@@ -3036,7 +3066,7 @@ def test_bitmap_delete_retry_merge_deterministic_and_dead_layout_conflict(spark,
             # fold DVs then compact EVERYTHING into one file — every
             # original target of the in-flight delete disappears
             st.snap_rewrite_bitmap_deletes(spark, table)
-            _, d = st._snap_latest_doc(table)
+            _, d = st._snap_doc(table)
             merged = st._snap_add_files(
                 spark.read.parquet(
                     *[os.path.join(table, "data", x) for x in d["files"]]
@@ -3110,7 +3140,7 @@ def test_dv_fold_commutes_with_append_and_conflicts_on_advance(spark, monkeypatc
     monkeypatch.setattr(st, "_snap_commit_cas", racing_cas)
     rec = st.snap_rewrite_bitmap_deletes(spark, table, stats_cols=["k"])
     monkeypatch.setattr(st, "_snap_commit_cas", orig_cas)
-    _, doc = st._snap_latest_doc(table)
+    _, doc = st._snap_doc(table)
     assert not doc.get("dvb")
     assert set(appended) <= set(doc["files"])  # winner's append carried
     got = sorted(r.k for r in st._snap_read(spark, table).select("k").collect())

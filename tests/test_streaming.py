@@ -2152,6 +2152,41 @@ def test_snapshot_ingest_sink_replay_and_crash_windows(spark):
     KVStore.reset(store_name)
 
 
+def test_snapshot_ingest_sink_carries_manifest_keys(spark):
+    """A streamed batch keeps the table's metadata: the ingest sink's
+    successor manifest carries every key it does not restate, so an
+    ANALYZE commit's ``ndv`` registers survive the next batch."""
+    import uuid as _uuid
+
+    from steaminganalysis_spark.operators.storage import (
+        _snap_add_files,
+        _snap_commit,
+        _snap_doc,
+        snap_analyze_ndv,
+    )
+    from steaminganalysis_spark.scratch import scratch_dir
+    from steaminganalysis_spark.streaming.queries import snapshot_ingest_sink
+    from steaminganalysis_spark.streaming.sinks import KEY_PREFIX, KVStore
+
+    run = _uuid.uuid4().hex[:8]
+    table = f"{scratch_dir('ingest_carry')}/t"
+    mk = lambda lo, hi: spark.range(lo, hi).selectExpr(
+        "id", "CAST(id % 4 AS STRING) AS grp"
+    )
+    _snap_commit(table, _snap_add_files(mk(0, 100), table, "carry_base"), 0)
+    assert snap_analyze_ndv(spark, table, "grp", "id") == 1
+    ndv = _snap_doc(table, 1)[1]["ndv"]
+    store_name = f"ingest_carry_{run}"
+    sink = snapshot_ingest_sink(
+        table, store_name, f"{KEY_PREFIX}ingest-carry:{run}"
+    )
+    sink(mk(100, 120), 0)
+    v, doc = _snap_doc(table)
+    assert v == 2
+    assert doc["ndv"] == ndv
+    KVStore.reset(store_name)
+
+
 def test_snapshot_sinks_commit_then_crash_replay(spark):
     """ADVICE r12 (exactly-once gap): a crash BETWEEN the manifest
     commit and the KVStore watermark advance must NOT make the replay
@@ -2255,7 +2290,7 @@ def test_snapshot_ingest_sink_decoupled_from_batch_ids(spark):
     from steaminganalysis_spark.operators.storage import (
         _snap_add_files,
         _snap_commit,
-        _snap_latest,
+        _snap_doc,
         _snap_read,
     )
     from steaminganalysis_spark.scratch import scratch_dir
@@ -2277,16 +2312,16 @@ def test_snapshot_ingest_sink_decoupled_from_batch_ids(spark):
     sink = snapshot_ingest_sink(table, store_name, marker)
     # (b) batch ids resume at 7 (not 0)
     sink(spark.range(30, 45).selectExpr("id", "id AS v"), 7)
-    v, files = _snap_latest(table)
+    v, _doc = _snap_doc(table)
     assert v == 2  # latest+1, NOT batch_id+1
     assert _snap_read(spark, table).count() == 45
     sink(spark.range(45, 50).selectExpr("id", "id AS v"), 8)
-    v, _ = _snap_latest(table)
+    v, _ = _snap_doc(table)
     assert v == 3
     assert _snap_read(spark, table).count() == 50
     # replay of the resumed id is still a strict no-op
     sink(spark.range(30, 45).selectExpr("id", "id AS v"), 7)
-    v, _ = _snap_latest(table)
+    v, _ = _snap_doc(table)
     assert v == 3
     assert _snap_read(spark, table).count() == 50
     KVStore.reset(store_name)
@@ -2309,9 +2344,8 @@ def test_cdc_merge_sink_replay_pruning_and_stats_carry(spark):
 
     from steaminganalysis_spark.operators.storage import (
         _snap_add_files_with_stats,
-        _snap_commit_stats,
-        _snap_latest,
-        _snap_latest_doc,
+        _snap_commit,
+        _snap_doc,
         _snap_read,
     )
     from steaminganalysis_spark.scratch import scratch_dir
@@ -2331,7 +2365,7 @@ def test_cdc_merge_sink_replay_pruning_and_stats_carry(spark):
         ["event_id"],
     )
     assert len(files) == 4 and len(stats) == 4
-    _snap_commit_stats(table, files, 0, stats)
+    _snap_commit(table, files, 0, stats=stats)
 
     store_name = f"cdc_pin_{run}"
     marker = f"{KEY_PREFIX}cdc-last-applied:{run}"
@@ -2353,7 +2387,7 @@ def test_cdc_merge_sink_replay_pruning_and_stats_carry(spark):
 
     # (a) batch 0 updates keys 0..49 — inside the FIRST file's span only
     sink(batch(0, 49, 1000.0, 10_000, 5), 0)
-    v1, doc1 = _snap_latest_doc(table)
+    v1, doc1 = _snap_doc(table)
     files1, stats1 = doc1["files"], doc1.get("stats", {})
     assert v1 == 1
     survivors = [f for f in files if f in files1]
@@ -2370,8 +2404,8 @@ def test_cdc_merge_sink_replay_pruning_and_stats_carry(spark):
     # (c) replay: strict no-op
     n_data = len(os.listdir(os.path.join(table, "data")))
     sink(batch(0, 49, 1000.0, 10_000, 5), 0)
-    v_r, files_r = _snap_latest(table)
-    assert (v_r, sorted(files_r)) == (v1, sorted(files1))
+    v_r, doc_r = _snap_doc(table)
+    assert (v_r, sorted(doc_r["files"])) == (v1, sorted(files1))
     assert len(os.listdir(os.path.join(table, "data"))) == n_data
 
     # (d) crash window: batch 1's files written, NO commit, NO watermark
@@ -2381,7 +2415,7 @@ def test_cdc_merge_sink_replay_pruning_and_stats_carry(spark):
     )
     assert _snap_read(spark, table).count() == 405  # orphans invisible
     sink(b1, 1)  # replay after the crash
-    v2, doc2 = _snap_latest_doc(table)
+    v2, doc2 = _snap_doc(table)
     files2 = doc2["files"]
     assert v2 == 2
     got = _snap_read(spark, table)
@@ -2406,7 +2440,7 @@ def test_snapshot_schema_sink_rejection_and_crash_replay(spark):
     from steaminganalysis_spark.operators.storage import (
         _snap_add_files,
         _snap_commit_schema,
-        _snap_latest_doc,
+        _snap_doc,
         _snap_read_schema,
         _snap_versions,
     )
@@ -2446,7 +2480,7 @@ def test_snapshot_schema_sink_rejection_and_crash_replay(spark):
     assert _snap_read_schema(spark, table).count() == 80
 
     # evolution adds `tag`, then (b) a conflicting double `tag`
-    v, doc = _snap_latest_doc(table)
+    v, doc = _snap_doc(table)
     _snap_commit_schema(
         table, doc["files"], v + 1, schema0 + [("tag", "string")],
         new_files=[], txn=doc.get("txn", {}),
@@ -2490,7 +2524,7 @@ def test_snapshot_partitioned_sink_replay_and_tuple_carry(spark):
     from steaminganalysis_spark.operators.storage import (
         _snap_add_files_partitioned,
         _snap_commit_partitioned,
-        _snap_latest_doc,
+        _snap_doc,
         _snap_versions,
         snap_read_partition_pruned,
     )
@@ -2518,7 +2552,7 @@ def test_snapshot_partitioned_sink_replay_and_tuple_carry(spark):
 
     sink(mk(60, 90), 0)
     sink(mk(90, 120), 1)
-    _v, doc = _snap_latest_doc(table)
+    _v, doc = _snap_doc(table)
     # (a) tuple carry: EVERY file in the latest manifest has a tuple
     assert set(doc["files"]) == set(doc["partitions"])
     got, planned, total = snap_read_partition_pruned(
@@ -2531,7 +2565,7 @@ def test_snapshot_partitioned_sink_replay_and_tuple_carry(spark):
     versions = sorted(_snap_versions(table))
     n_files = len(doc["files"])
     sink(mk(90, 120), 1)
-    _v2, doc2 = _snap_latest_doc(table)
+    _v2, doc2 = _snap_doc(table)
     assert sorted(_snap_versions(table)) == versions
     assert len(doc2["files"]) == n_files
 
@@ -2540,6 +2574,134 @@ def test_snapshot_partitioned_sink_replay_and_tuple_carry(spark):
     sink(mk(90, 120), 1)
     assert sorted(_snap_versions(table)) == versions
     assert store.last_applied(marker) == 1
+    KVStore.reset(store_name)
+
+
+def test_snapshot_schema_sink_never_overwrites_a_concurrent_commit(
+    spark, monkeypatch
+):
+    """A rival append that commits v1 between the schema sink's
+    manifest read and its publish keeps its files: the sink's commit
+    raises FileExistsError instead of replacing v1, the watermark
+    stays unmoved, and the rerun lands v2 holding both appends."""
+    import uuid as _uuid
+
+    import pytest as _pytest
+
+    from steaminganalysis_spark.operators import storage
+    from steaminganalysis_spark.operators.storage import (
+        _snap_commit_schema,
+        _snap_read_schema,
+        _snap_versions,
+        snap_append_optimistic,
+    )
+    from steaminganalysis_spark.scratch import scratch_dir
+    from steaminganalysis_spark.streaming.queries import (
+        snapshot_ingest_schema_sink,
+    )
+    from steaminganalysis_spark.streaming.sinks import KEY_PREFIX, KVStore
+
+    run = _uuid.uuid4().hex[:8]
+    table = f"{scratch_dir('evorace')}/t"
+    mk = lambda lo, hi: spark.range(lo, hi).selectExpr(
+        "id", "CAST(id AS DOUBLE) AS v"
+    )
+    stage = storage._snap_add_files
+    base = stage(mk(0, 50), table, "evr_base")
+    _snap_commit_schema(table, base, 0, [("id", "int64"), ("v", "double")])
+    raced = []
+
+    def stage_then_rival(df, tbl, tag):
+        names = stage(df, tbl, tag)
+        if not raced:  # the rival commits v1 after the sink's read
+            rival = stage(mk(80, 90), tbl, "evr_rival")
+            raced.append(snap_append_optimistic(tbl, rival))
+        return names
+
+    monkeypatch.setattr(storage, "_snap_add_files", stage_then_rival)
+    store_name = f"evorace_{run}"
+    marker = f"{KEY_PREFIX}evorace-last-applied:{run}"
+    sink = snapshot_ingest_schema_sink(table, store_name, marker)
+    store = KVStore.instance(store_name)
+
+    with _pytest.raises(FileExistsError):
+        sink(mk(50, 80), 0)
+    assert raced == [1]
+    assert store.last_applied(marker) == -1
+    assert _snap_read_schema(spark, table).count() == 60  # base + rival
+    sink(mk(50, 80), 0)
+    assert sorted(_snap_versions(table)) == [0, 1, 2]
+    assert store.last_applied(marker) == 0
+    got = _snap_read_schema(spark, table)
+    assert got.count() == 90
+    assert got.select("id").distinct().count() == 90
+    KVStore.reset(store_name)
+
+
+def test_snapshot_partitioned_sink_never_overwrites_a_concurrent_commit(
+    spark, monkeypatch
+):
+    """The partition-aware sink under the same race: a rival commit
+    of v1 between its manifest read and its publish survives, the
+    sink raises FileExistsError with its watermark unmoved, and the
+    rerun lands v2 with every file's partition tuple."""
+    import uuid as _uuid
+
+    import pytest as _pytest
+
+    from steaminganalysis_spark.operators import storage
+    from steaminganalysis_spark.operators.storage import (
+        _snap_commit_partitioned,
+        _snap_doc,
+        _snap_read,
+        _snap_versions,
+    )
+    from steaminganalysis_spark.scratch import scratch_dir
+    from steaminganalysis_spark.streaming.queries import (
+        snapshot_ingest_partitioned_sink,
+    )
+    from steaminganalysis_spark.streaming.sinks import KEY_PREFIX, KVStore
+
+    run = _uuid.uuid4().hex[:8]
+    table = f"{scratch_dir('prace')}/t"
+    mk = lambda lo, hi: spark.range(lo, hi).selectExpr(
+        "id", "CAST(id % 3 AS STRING) AS bucket"
+    )
+    stage = storage._snap_add_files_partitioned
+    files, parts = stage(mk(0, 60), table, "pr_base", ["bucket"])
+    _snap_commit_partitioned(table, files, 0, ["bucket"], parts)
+    raced = []
+
+    def stage_then_rival(df, tbl, tag, spec):
+        staged = stage(df, tbl, tag, spec)
+        if not raced:  # the rival commits v1 after the sink's read
+            rf, rp = stage(mk(90, 100), tbl, "pr_rival", spec)
+            v, doc = _snap_doc(tbl)
+            _snap_commit_partitioned(
+                tbl, doc["files"] + rf, v + 1, spec, {**doc["partitions"], **rp}
+            )
+            raced.append(v + 1)
+        return staged
+
+    monkeypatch.setattr(storage, "_snap_add_files_partitioned", stage_then_rival)
+    store_name = f"prace_{run}"
+    marker = f"{KEY_PREFIX}prace-last-applied:{run}"
+    sink = snapshot_ingest_partitioned_sink(table, store_name, marker, ["bucket"])
+    store = KVStore.instance(store_name)
+
+    with _pytest.raises(FileExistsError):
+        sink(mk(60, 90), 0)
+    assert raced == [1]
+    assert store.last_applied(marker) == -1
+    assert _snap_read(spark, table).count() == 70  # base + rival
+    sink(mk(60, 90), 0)
+    assert sorted(_snap_versions(table)) == [0, 1, 2]
+    assert store.last_applied(marker) == 0
+    _v, doc = _snap_doc(table)
+    assert set(doc["files"]) == set(doc["partitions"])
+    got = _snap_read(spark, table)
+    assert got.count() == 100
+    assert got.select("id").distinct().count() == 100
     KVStore.reset(store_name)
 
 
@@ -2556,7 +2718,7 @@ def test_cdc_dv_sink_fold_semantics(spark):
     from steaminganalysis_spark.operators.storage import (
         _snap_add_files_with_stats,
         _snap_commit,
-        _snap_latest_doc,
+        _snap_doc,
         snap_read_mor,
     )
     from steaminganalysis_spark.scratch import scratch_dir
@@ -2602,7 +2764,7 @@ def test_cdc_dv_sink_fold_semantics(spark):
     assert got.count() == 397
     assert got.filter("event_id IN (5, 300, 350)").count() == 0  # (a)
     # (c) the high files holding 300/350 were NOT rewritten
-    _v, doc = _snap_latest_doc(table)
+    _v, doc = _snap_doc(table)
     untouched_alive = [f for f in files if f in doc["files"]]
     for f in untouched_alive:
         assert (
@@ -2619,7 +2781,7 @@ def test_cdc_dv_sink_fold_semantics(spark):
         "op string, event_id long, event_type string, value double",
     )
     sink(b1, 1)
-    _v2, doc2 = _snap_latest_doc(table)
+    _v2, doc2 = _snap_doc(table)
     got2 = snap_read_mor(spark, table, "event_id")
     assert got2.count() == 397
     assert got2.filter("event_id = 300").count() == 0  # stayed deleted
@@ -2633,7 +2795,7 @@ def test_cdc_dv_sink_fold_semantics(spark):
 
     before = _json.dumps(doc2, sort_keys=True)
     sink(b1, 1)
-    _v3, doc3 = _snap_latest_doc(table)
+    _v3, doc3 = _snap_doc(table)
     assert _json.dumps(doc3, sort_keys=True) == before
     KVStore.reset(store_name)
 
@@ -2730,7 +2892,7 @@ def test_ingest_sink_commutes_with_concurrent_compaction(spark):
     from steaminganalysis_spark.operators.storage import (
         _snap_add_files,
         _snap_commit,
-        _snap_latest_doc,
+        _snap_doc,
         _snap_read,
         snap_compact_optimistic,
     )
@@ -2779,7 +2941,7 @@ def test_ingest_sink_commutes_with_concurrent_compaction(spark):
         st._snap_add_files = real_stage
     assert fired
 
-    v, doc = _snap_latest_doc(table)
+    v, doc = _snap_doc(table)
     assert v == 2  # compaction v1 + batch v2 — nothing clobbered
     got = _snap_read(spark, table)
     assert got.count() == 102  # both the compacted base and the batch
@@ -2799,7 +2961,7 @@ def test_replicate_out_of_order_version_is_noop(spark):
     from steaminganalysis_spark.operators.storage import (
         _snap_add_files_with_stats,
         _snap_commit,
-        _snap_latest_doc,
+        _snap_doc,
     )
     from steaminganalysis_spark.scratch import scratch_dir
     from steaminganalysis_spark.streaming.queries import snapshot_cdc_dv_sink
@@ -2822,13 +2984,13 @@ def test_replicate_out_of_order_version_is_noop(spark):
         [("I", 100, "b", 1.0)], "op string, event_id long, event_type string, value double"
     )
     sink(b2, 2)  # newer version applies
-    _, doc = _snap_latest_doc(rep)
+    _, doc = _snap_doc(rep)
     before = json.dumps(doc, sort_keys=True)
     b1 = spark.createDataFrame(
         [("D", 3, "a", 0.0)], "op string, event_id long, event_type string, value double"
     )
     sink(b1, 1)  # stale version: must be a no-op
-    _, doc2 = _snap_latest_doc(rep)
+    _, doc2 = _snap_doc(rep)
     assert json.dumps(doc2, sort_keys=True) == before
     KVStore.reset(store_name)
 
@@ -2846,7 +3008,7 @@ def test_cdf_step_restart_with_larger_max_files_clamps_at_marker(spark):
     from steaminganalysis_spark.operators.storage import (
         _snap_add_files,
         _snap_commit,
-        _snap_latest_doc,
+        _snap_doc,
         _snap_read,
     )
     from steaminganalysis_spark.registry import to_cents
@@ -2867,7 +3029,7 @@ def test_cdf_step_restart_with_larger_max_files_clamps_at_marker(spark):
         inc = spark.createDataFrame(
             [row], "event_id long, event_type string, value double"
         ).coalesce(1)  # exactly ONE file per commit -> a 3-entry log
-        v, doc = _snap_latest_doc(src)
+        v, doc = _snap_doc(src)
         _snap_commit(
             src, doc["files"] + _snap_add_files(inc, src, f"c{i+1}"), v + 1
         )
