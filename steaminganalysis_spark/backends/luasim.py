@@ -4,27 +4,28 @@ Neither ``redis`` + a server, nor ``fakeredis``, nor ``lupa`` is
 installable here, so ``MiniRedisServer`` runs scripts compiled by this
 module, for the subset Redis scripts use: local assignment,
 if/then/return, numeric for, ``and``/``or``, ``tonumber``, ``#``,
-arithmetic/comparison, string/number literals, ``--`` comments and
-``redis.call``. ``compile_script`` parses a script in one pass in which
-each grammar rule returns a closure with its operands bound in (there
-is no syntax tree); the server compiles a script once and keeps the
-result by SHA. The compiled script holds no keyspace and takes no lock:
-the server passes a ``redis.call`` that runs its own command dispatch
-under its command lock, so a command behaves the same inside a script
-as over the wire.
+arithmetic/comparison, string/number literals, ``--`` comments,
+``redis.call`` and ``cjson.decode`` (of a JSON array of strings only).
+``compile_script`` emits, in one pass, Python source for the whole
+script (no syntax tree, no closure per node) and compiles it; the
+server does so once per SHA. The source is safe by construction: each
+Lua local is an identifier unique to its declaration (``L<n>_<name>``),
+so scoping is settled at compile time; a literal enters only as the
+``repr()`` of its value; the code has no builtins, and its globals are
+the helpers it calls. ``redis.call`` runs the server's own dispatch,
+so a command behaves the same inside a script as over the wire.
 
-Faithful Redis-Lua details that matter to the production script:
-- all Lua numbers are doubles (Lua 5.1);
-- a number returned from the script is truncated to an integer reply.
-
-This is deliberately NOT general Lua: an unsupported construct raises
-a ``SyntaxError`` naming ``lua-sim`` instead of guessing, so if the
-script grows past the subset the tests fail loudly and this compiler
-must be extended.
+Redis-Lua rules kept: numbers are doubles (Lua 5.1); values of
+different types are never equal; only ``nil`` and ``false`` are falsy;
+only an integral number in ``1..#t`` indexes an array element; reading
+an undefined global is an error; a number returned from the script is
+truncated to an integer reply. Anything outside the subset raises a
+``SyntaxError`` naming ``lua-sim`` instead of guessing.
 """
 
 from __future__ import annotations
 
+import json
 import operator
 import re
 
@@ -34,13 +35,17 @@ __all__ = ["compile_script"]
 # ending the script is never re-read as ``-`` operators.
 _TOKEN = re.compile(
     r"(?:\s+|--[^\n]*)*+(?:(?P<num>\d+\.?\d*)|(?P<name>[A-Za-z_][A-Za-z0-9_]*)"
-    r"|(?P<str>'(?:[^'\\]|\\.)*')"
+    r"|(?P<str>'(?:[^'\\\n]|\\.)*')"
     r"|(?P<op><=|>=|==|~=|[#=<>+\-*(),.\[\]])|(?P<eof>\Z))"
 )
 # all of Lua 5.1's reserved words, so one outside the subset (``else``,
 # ``while``, ``true``...) fails to compile instead of reading as a variable
 _KEYWORDS = set("and break do else elseif end false for function if in local nil not"
                 " or repeat return then true until while".split())
+_ESCAPES = dict(zip("ntrabfv\\'\"", "\n\t\r\a\b\f\v\\'\""))
+_ESCAPES.update((f"{c:0{w}d}", chr(c)) for c in range(128) for w in (1, 2, 3))  # \ddd, ASCII only
+_GLOBALS = ("KEYS", "ARGV", "tonumber", "redis", "cjson")
+_ORDER = {"<": operator.lt, "<=": operator.le, ">": operator.gt, ">=": operator.ge}
 
 
 def _tokenize(src: str) -> list[tuple[str, str]]:
@@ -57,28 +62,48 @@ def _tokenize(src: str) -> list[tuple[str, str]]:
         toks.append((kind, text[1:-1] if kind == "str" else text))
 
 
-def _const(v):
-    return lambda env: v
+# The helpers emitted code calls; each raises a ``lua-sim`` error where Lua raises one.
+def _undef(name):
+    raise NameError(f"lua-sim: undefined {name}")
 
 
 def _eq(a, b):
-    # Lua: values of different types are never equal (1 == '1' is false)
-    return type(a) is type(b) and a == b
+    # Lua: values of different types are never equal; a table equals only itself
+    return type(a) is type(b) and (a == b if type(a) in (float, str) else a is b)
+
+
+def _compare(a, b, op):
+    if type(a) is type(b) and type(a) in (float, str):
+        return _ORDER[op](a, b)
+    raise RuntimeError(f"lua-sim: attempt to compare {type(a).__name__} with {type(b).__name__}")
 
 
 def _num(v):
     # Lua coerces a numeric string operand of arithmetic to a number
-    return float(v) if type(v) is str else v
+    if type(v) is not float and type(v := _tonumber(v)) is not float:
+        raise RuntimeError("lua-sim: attempt to perform arithmetic on a non-number")
+    return v
 
 
-_CMP = {"<=": operator.le, "<": operator.lt, ">=": operator.ge, ">": operator.gt,
-        "==": _eq, "~=": lambda a, b: not _eq(a, b)}
-_ARITH = {"+": operator.add, "-": operator.sub, "*": operator.mul}
+def _len(v):
+    if type(v) not in (str, list):
+        raise RuntimeError(f"lua-sim: attempt to get length of a {type(v).__name__} value")
+    return float(len(v.encode() if type(v) is str else v))  # a string's length is in bytes
 
 
-def _truthy(v):
-    # Lua: only nil and false are falsy (0 and '' are truthy)
-    return not (v is None or v is False)
+def _ix(t, k):
+    if type(t) is list:  # a Lua array: only an integral number in 1..#t reads an element
+        return t[int(k) - 1] if type(k) is float and k.is_integer() and 1 <= k <= len(t) else None
+    if type(t) is dict:  # a library table (``redis``, ``cjson``)
+        return t.get(k) if type(k) is str else None
+    raise RuntimeError(f"lua-sim: attempt to index a {type(t).__name__} value")
+
+
+def _range(i, stop, step):
+    i, stop, step = _num(i), _num(stop), _num(step)
+    while (step > 0 and i <= stop) or (step < 0 and i >= stop):
+        yield i
+        i += step
 
 
 def _tonumber(v):
@@ -88,13 +113,32 @@ def _tonumber(v):
         return None
 
 
+def _decode(s):
+    """``cjson.decode``, for a JSON array of strings only (the apply script's payload)."""
+    try:
+        v = json.loads(s)
+        if type(v) is list and set(map(type, v)) <= {str}:
+            "".join(v).encode()  # an escaped lone surrogate is not text
+            return v
+    except (TypeError, ValueError):
+        pass
+    raise RuntimeError("lua-sim: cjson.decode takes a JSON array of strings only")
+
+
+_HELPERS = {f.__name__: f for f in (_undef, _eq, _compare, _num, _len, _ix, _range)}
+_CJSON = {"decode": _decode}
+
+
 class _Compiler:
-    """Recursive descent over the tokens. A statement compiles to
-    ``f(env)``, which returns None to go on or ``(value,)`` to return;
-    an expression compiles to ``f(env) -> value``."""
+    """Recursive descent over the tokens, emitting Python as it goes: a
+    statement appends lines to ``self.out``; an expression compiles to
+    ``(source, is_number)``, and arithmetic on a number needs no helper."""
 
     def __init__(self, toks):
-        self.toks, self.i = toks, 0
+        self.toks, self.i, self.n = toks, 0, 0
+        self.out = ["def script(" + ", ".join("G_" + g for g in _GLOBALS) + "):"]
+        self.scopes: list[dict[str, tuple[str, bool]]] = []  # local → (ident, is_number)
+        self.used: set[str] = set()  # helpers the emitted code calls
 
     def peek(self):
         return self.toks[self.i] if self.i < len(self.toks) else ("eof", "")
@@ -110,174 +154,161 @@ class _Compiler:
             raise SyntaxError(f"lua-sim: expected {kind} {val}, got {t}")
         return t[1]
 
-    def block(self, stop=("end",)):
-        stats, stops = [], [("eof", "")] + [("kw", s) for s in stop]
-        while self.peek() not in stops:
-            stats.append(self.stat())
+    def fresh(self, prefix):
+        self.n += 1
+        return f"{prefix}{self.n}"
 
-        def run(env):
-            for s in stats:
-                r = s(env)
-                if r is not None:
-                    return r
-        return run
+    def helper(self, name, *args):
+        self.used.add(name)
+        return f"{name}({', '.join(args)})"
+
+    def emit(self, line):
+        self.out.append("    " * len(self.scopes) + line)
+
+    def block(self, stop=("end",), scope=None):
+        """A block, in a new scope (``scope`` holds a loop's variable)."""
+        self.scopes.append(scope or {})
+        start, stops = len(self.out), [("eof", "")] + [("kw", s) for s in stop]
+        while self.peek() not in stops:
+            self.stat()
+        if len(self.out) == start:
+            self.emit("pass")
+        self.scopes.pop()
 
     def stat(self):
         k, v = self.next()
         if (k, v) == ("kw", "local"):
             name = self.expect("name")
             self.expect("op", "=")
-            e = self.expr()
-            return lambda env: env.__setitem__(name, e(env))
-        if (k, v) == ("kw", "if"):
-            cond = self.expr()
+            src, is_num = self.expr()
+            ident = f"{self.fresh('L')}_{name}"
+            self.emit(f"{ident} = {src}")
+            self.scopes[-1][name] = ident, is_num  # in scope from the next statement on
+        elif (k, v) == ("kw", "if"):
+            self.emit(f"if {self.truthy(self.expr()[0])[0]}:")
             self.expect("kw", "then")
-            body = self.block()
+            self.block()
             self.expect("kw", "end")
-            return lambda env: body(env) if _truthy(cond(env)) else None
-        if (k, v) == ("kw", "for"):
-            return self.numeric_for()
-        if (k, v) == ("kw", "return"):
-            e = self.expr()
-            return lambda env: (e(env),)
-        self.i -= 1
-        e = self.prefix()
-        if not self.called:  # as in Lua, only a call can be a statement
-            raise SyntaxError(f"lua-sim: unexpected statement at {k} {v}")
+        elif (k, v) == ("kw", "for"):  # numeric for only
+            var = self.expect("name")
+            self.expect("op", "=")
+            lo = self.expr()[0]
+            self.expect("op", ",")
+            hi, step = self.expr()[0], "1.0"
+            if self.peek() == ("op", ","):
+                self.next()
+                step = self.expr()[0]
+            self.expect("kw", "do")
+            ident = f"{self.fresh('L')}_{var}"
+            self.emit(f"for {ident} in {self.helper('_range', lo, hi, step)}:")
+            self.block(scope={var: (ident, True)})
+            self.expect("kw", "end")
+        elif (k, v) == ("kw", "return"):
+            self.emit(f"return {self.expr()[0]}")
+        else:
+            self.i -= 1
+            src, _ = self.prefix()
+            if not self.called:  # as in Lua, only a call can be a statement
+                raise SyntaxError(f"lua-sim: unexpected statement at {k} {v}")
+            self.emit(src)
 
-        def run(env):
-            e(env)
-        return run
-
-    def numeric_for(self):
-        var = self.expect("name")
-        self.expect("op", "=")
-        lo = self.expr()
-        self.expect("op", ",")
-        hi = self.expr()
-        step = _const(1.0)
-        if self.peek() == ("op", ","):
-            self.next()
-            step = self.expr()
-        self.expect("kw", "do")
-        body = self.block()
-        self.expect("kw", "end")
-
-        def run(env):
-            i, stop, st = lo(env), hi(env), step(env)
-            while (st > 0 and i <= stop) or (st < 0 and i >= stop):
-                env[var] = i
-                r = body(env)
-                if r is not None:
-                    return r
-                i += st
-        return run
-
-    def expr(self):
-        return self.binary(0)
+    def truthy(self, src):
+        """Lua's test of ``src`` (only nil and false are falsy), and its temporary."""
+        t = self.fresh("T")
+        return f"(({t} := {src}) is not None and {t} is not False)", t
 
     # one precedence level per entry, loosest first, as in Lua
-    _LEVELS = ({"or"}, {"and"}, set(_CMP), {"+", "-"}, {"*"})
+    _LEVELS = ({"or"}, {"and"}, {"==", "~=", *_ORDER}, {"+", "-"}, {"*"})
 
-    def binary(self, level):
+    def expr(self, level=0):
         if level == len(self._LEVELS):
-            return self.unary()
-        left = self.binary(level + 1)
+            if self.peek() != ("op", "#"):
+                return self.prefix()
+            self.next()
+            return self.helper("_len", self.expr(level)[0]), True
+        left = self.expr(level + 1)
         while self.peek()[0] in ("op", "kw") and self.peek()[1] in self._LEVELS[level]:
             op = self.next()[1]
-            left = _binary(op, left, self.binary(level + 1))
+            (a, a_num), (b, b_num) = left, self.expr(level + 1)
+            if op in ("or", "and"):
+                test, t = self.truthy(a)
+                left = (f"({t} if {test} else {b})" if op == "or"
+                        else f"({b} if {test} else {t})"), a_num and b_num
+            elif op in ("==", "~="):
+                left = f"({'' if op == '==' else 'not '}{self.helper('_eq', a, b)})", False
+            elif op in _ORDER:
+                left = self.helper("_compare", a, b, repr(op)), False
+            else:
+                a = a if a_num else self.helper("_num", a)
+                left = f"({a} {op} {b if b_num else self.helper('_num', b)})", True
         return left
-
-    def unary(self):
-        if self.peek() == ("op", "#"):
-            self.next()
-            e = self.unary()
-            return lambda env: float(len(e(env)))
-        return self.prefix()
 
     def prefix(self):
         """A prefix expression; ``self.called`` says whether it ends in a call."""
         k, v = self.next()
         self.called = False
-        if k in ("num", "str"):
-            return _const(float(v) if k == "num" else v)
+        if k == "num":
+            if float(v) == float("inf"):
+                raise SyntaxError(f"lua-sim: number {v} is out of range")
+            return repr(float(v)), True
+        if k == "str":
+            try:
+                return repr(re.sub(r"\\(\d{1,3}|.)", lambda m: _ESCAPES[m.group(1)], v)), False
+            except KeyError as e:
+                raise SyntaxError(f"lua-sim: unsupported escape \\{e.args[0]}") from None
         if (k, v) == ("op", "("):
-            node = self.expr()
+            src, is_num = self.expr()  # every emitted expression is already atomic
             self.expect("op", ")")
-            self.called = False
         elif k == "name":
-            node = _var(v)
+            src, is_num = self.name(v)
         else:
             raise SyntaxError(f"lua-sim: unexpected {k} {v}")
+        self.called = False
         while self.peek() in (("op", "."), ("op", "["), ("op", "(")):
-            op = self.next()[1]
+            op, is_num = self.next()[1], False
             if op == ".":
-                node = _attr(node, self.expect("name"))
+                src = self.helper("_ix", src, repr(self.expect("name")))
             elif op == "[":
-                node = _index(node, self.expr())
+                src = self.helper("_ix", src, self.expr()[0])
                 self.expect("op", "]")
             else:
-                node = _call(node, self.args())
+                src = f"{src}({', '.join(self.args())})"
             self.called = op == "("
-        return node
+        return src, is_num
+
+    def name(self, v):
+        for scope in reversed(self.scopes):
+            if v in scope:
+                return scope[v]
+        if v in _GLOBALS:
+            return "G_" + v, False
+        return self.helper("_undef", repr(v)), False  # Redis: reading one is an error
 
     def args(self):
-        args = []
-        if self.peek() != ("op", ")"):
-            args.append(self.expr())
-            while self.peek() == ("op", ","):
-                self.next()
-                args.append(self.expr())
+        args = [] if self.peek() == ("op", ")") else [self.expr()[0]]
+        while args and self.peek() == ("op", ","):
+            self.next()
+            args.append(self.expr()[0])
         self.expect("op", ")")
         return args
-
-
-# Closure factories: each binds its operands, the compiled sub-expressions.
-def _binary(op, a, b):
-    if op == "or":
-        return lambda env: x if _truthy(x := a(env)) else b(env)
-    if op == "and":
-        return lambda env: b(env) if _truthy(x := a(env)) else x
-    if op in _CMP:
-        f = _CMP[op]
-        return lambda env: f(a(env), b(env))
-    f = _ARITH[op]
-    return lambda env: f(_num(a(env)), _num(b(env)))
-
-
-def _var(name):
-    def get(env):
-        try:
-            return env[name]
-        except KeyError:
-            raise NameError(f"lua-sim: undefined {name}") from None
-    return get
-
-
-def _attr(obj, name):
-    return lambda env: obj(env)[name]
-
-
-def _index(seq, idx):
-    def get(env):
-        s, i = seq(env), int(idx(env)) - 1  # Lua is 1-indexed
-        return s[i] if 0 <= i < len(s) else None  # past either end → nil
-    return get
-
-
-def _call(fn, args):
-    return lambda env: fn(env)(*[a(env) for a in args])
 
 
 def compile_script(src: str):
     """Compile ``src`` once; the result runs it as EVAL with KEYS, ARGV
     and ``redis.call`` bound to ``call``. Raises ``SyntaxError`` on a
-    construct outside the subset."""
-    body = _Compiler(_tokenize(src)).block(stop=())
+    construct outside the subset, Python's own nesting limits included."""
+    c = _Compiler(_tokenize(src))
+    try:
+        c.block(stop=())
+        code = compile("\n".join(c.out), "<lua-sim>", "exec")
+    except (RecursionError, SyntaxError) as e:
+        raise SyntaxError(str(e) if "lua-sim" in str(e) else f"lua-sim: {e}") from None
+    env = {"__builtins__": {}, **{h: _HELPERS[h] for h in c.used}}
+    exec(code, env)
+    body = env["script"]
 
     def run(keys: list[str], argv: list[str], call):
-        r = body({"KEYS": keys, "ARGV": argv, "tonumber": _tonumber, "redis": {"call": call}})
-        v = r[0] if r is not None else None
+        v = body(keys, argv, _tonumber, {"call": call}, _CJSON)
         # Redis truncates ANY Lua number to an integer in the EVAL
         # reply (fractional parts are dropped, not an error).
         return int(v) if isinstance(v, float) else v

@@ -13,9 +13,12 @@ module implements exactly the command surface the KV sink uses
 one keyspace (key -> string or hash) under one command lock. As Redis
 does, it compiles a script once, at SCRIPT LOAD or its first EVAL, and
 keeps it by SHA; the compiler is the in-repo Lua-5.1-subset one
-(``steaminganalysis_spark.backends.luasim``), whose ``redis.call`` runs
-the server's own dispatch, so a command inside a script behaves
-exactly as it does over the wire. As in Redis, a nil reply reaches the
+(``steaminganalysis_spark.backends.luasim``), which compiles a script
+to Python source once. A script's environment is ``KEYS``, ``ARGV``,
+``tonumber``, ``redis.call`` and ``cjson.decode`` (for a JSON array of
+strings, the sink's increment payload); ``redis.call`` runs the
+server's own dispatch, so a command inside a script behaves exactly as
+it does over the wire. As in Redis, a nil reply reaches the
 script as ``false``, an integer reply as a Lua number, and an error
 reply aborts the script; holding the command lock for the whole script
 gives the atomicity a real Redis gives scripts.

@@ -28,10 +28,14 @@ one: ``foreachBatch`` → per-batch aggregate (map-side partial + final,
 so the KV store sees one row per day, tiny at any input scale) → one
 columnar collect of that delta (``toArrow``, one Spark job) → one
 EVAL with one client per process, never per row (cf. the reference's
-leaked per-call JedisPool, CommonUtil.scala:44-48). The increments go
-out sorted by day, with the rejected group last, so a batch sends the
-same ``ARGV`` however Spark partitions it, and a replayed batch sends
-the same ``ARGV`` again.
+leaked per-call JedisPool, CommonUtil.scala:44-48). ``apply_batch``
+takes ``(key, field, delta)`` triples; on the wire they travel as one
+compact JSON array of strings in ``ARGV[2]`` (the batch id is
+``ARGV[1]``), which the script reads with ``cjson.decode`` (built into
+Redis's Lua, and into the mini-Redis). The increments go out sorted by
+day, with the rejected group last, so a batch sends the same bytes
+however Spark partitions it, and a replayed batch sends the same bytes
+again.
 
 The skip / run / advance-marker protocol is `exactly_once`, the one
 place it is written: this sink, the version-store and file sinks
@@ -43,6 +47,7 @@ attaches a body to a stream with its checkpoint's scope.
 
 from __future__ import annotations
 
+import json
 import os
 import threading
 from collections.abc import Callable
@@ -73,13 +78,15 @@ except ImportError:
 # Redis runs scripts atomically, so the last-applied check, all
 # HINCRBYs, and the marker advance commit together (the
 # MULTI/EXEC-equivalent the contract requires). This script is the only
-# body of ``apply_batch``, for every store.
+# body of ``apply_batch``, for every store. ARGV is the batch id and one
+# JSON array of key, field, delta strings.
 _APPLY_BATCH_LUA = """
 local last = tonumber(redis.call('GET', KEYS[1]) or '-1')
 local bid = tonumber(ARGV[1])
 if bid <= last then return 0 end
-for i = 2, #ARGV, 3 do
-  redis.call('HINCRBY', ARGV[i], ARGV[i + 1], ARGV[i + 2])
+local inc = cjson.decode(ARGV[2])
+for i = 1, #inc, 3 do
+  redis.call('HINCRBY', inc[i], inc[i + 1], inc[i + 2])
 end
 redis.call('SET', KEYS[1], ARGV[1])
 return 1
@@ -139,11 +146,17 @@ class RedisKVStore:
         together. A replay after a crash therefore sees either none of
         the batch's effects (marker unmoved → re-applies) or all of
         them (marker moved → skips). Returns True iff the batch was
-        applied."""
-        args: list[str] = [str(int(batch_id))]
-        for key, field, delta in increments:
-            args += [key, field, str(int(delta))]
-        return bool(self._apply(keys=[marker_key], args=args))
+        applied.
+
+        The triples are the contract; the wire is ``EVALSHA <sha> 1
+        <marker> <batch id> <payload>``, the payload one compact JSON
+        array of the flattened triples with each delta as decimal text
+        (text, so a delta past 2^53 survives ``cjson``'s doubles). The
+        array keeps the triples' order, so the same increments send the
+        same bytes on a replay."""
+        flat = [x for key, field, delta in increments for x in (key, field, str(int(delta)))]
+        payload = json.dumps(flat, separators=(",", ":"))
+        return bool(self._apply(keys=[marker_key], args=[str(int(batch_id)), payload]))
 
 
 class KVStore(RedisKVStore):
@@ -313,7 +326,7 @@ def apply_day_rollup_batch(
     ``toArrow()`` (one Spark job, where ``toLocalIterator()`` ran one
     per partition and built a ``Row`` per day), and its increments are
     built sorted by day: the partitioning of the micro-batch then
-    cannot change the order, so a replay sends the same ``ARGV``.
+    cannot change the order, so a replay sends the same bytes.
     A replay either re-applies a batch that never committed or is
     skipped whole — a crash can no longer strand the guard set with
     the increments half-applied (the at-most-once hazard of

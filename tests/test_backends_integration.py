@@ -18,6 +18,7 @@ moves nothing, and a body's increments commit with the marker in one
 from __future__ import annotations
 
 import itertools
+import json
 import os
 import socket
 import threading
@@ -34,10 +35,13 @@ from steaminganalysis_spark.streaming.sinks import (
 
 
 def _exercise_contract(store) -> None:
-    """Shared conformance suite for any KVStore-contract implementation."""
+    """Shared conformance suite for any KVStore-contract implementation.
+    Its full-size batch (a non-ASCII key, a delta past 2^53, ~10 000
+    increments in one JSON payload) checks the ``cjson`` path byte for
+    byte wherever a real Redis is reachable."""
     run = uuid.uuid4().hex[:8]
     marker = f"t-{run}-last-applied"
-    k1, k2 = f"t-{run}-day1", f"t-{run}-day2"
+    k1, k2 = f"t-{run}-day1", f"t-{run}-day2é日"
 
     # fresh marker
     assert store.last_applied(marker) == -1
@@ -55,6 +59,16 @@ def _exercise_contract(store) -> None:
     assert store.apply_batch(1, [(k1, "total", 5), (k1, "success", 1)], marker)
     assert store.hgetall(k1) == {"total": 7, "success": 1}
     assert store.last_applied(marker) == 1
+    # a full-size batch: 3 334 keys x 3 fields, deltas negative and past 2^53
+    days = [f"t-{run}-big{d}-é" for d in range(3334)]
+    big = [(k, f, d % 97 - 40 if f != "fee_cents" else 2**53 + d)
+           for d, k in enumerate(days) for f in ("total", "success", "fee_cents")]
+    assert store.apply_batch(2, big, marker)
+    assert not store.apply_batch(2, big, marker)
+    for d, k in enumerate(days):
+        assert store.hgetall(k) == {
+            "total": d % 97 - 40, "success": d % 97 - 40, "fee_cents": 2**53 + d}
+    assert store.hgetall(k2) == {"total": 3}
     # plain hincrby / setnx still behave at the store's client
     assert store._r.hincrby(k2, "total", -1) == 2
     assert store._r.setnx(f"t-{run}-nx", "a")
@@ -106,21 +120,29 @@ def test_exactly_once_failed_body_moves_nothing_and_the_retry_applies_once():
 
 def test_exactly_once_commits_increments_and_marker_in_one_evalsha(monkeypatch):
     """Counted at the server's dispatch: the marker read, then one
-    ``EVALSHA`` carrying every increment and the marker advance."""
-    name = f"once-eval-{uuid.uuid4().hex[:6]}"
-    store = KVStore.instance(name)
-    server = store._r._server
-    dispatch, seen = server.dispatch, []
+    ``EVALSHA`` carrying every increment and the marker advance, in
+    exactly two ``ARGV`` entries (the batch id and one JSON payload)
+    for 2 increments and for 3 000."""
+    for n in (2, 3000):
+        name = f"once-eval-{uuid.uuid4().hex[:6]}"
+        store = KVStore.instance(name)
+        server = store._r._server
+        dispatch, seen = server.dispatch, []
 
-    def counting(argv):
-        seen.append(argv[0].upper())
-        return dispatch(argv)
+        def counting(argv, dispatch=dispatch, seen=seen):
+            seen.append(argv)
+            return dispatch(argv)
 
-    monkeypatch.setattr(server, "dispatch", counting)
-    assert exactly_once(name, "m", 7, lambda: [("a", "n", 1), ("b", "n", 2)])
-    assert seen == ["GET", "EVALSHA"]
-    assert store.hgetall("a") == {"n": 1} and store.hgetall("b") == {"n": 2}
-    assert store.last_applied("m") == 7
+        monkeypatch.setattr(server, "dispatch", counting)
+        inc = [(f"k{i}", "n", i + 1) for i in range(n)]
+        assert exactly_once(name, "m", 7, lambda: inc)
+        assert [a[0].upper() for a in seen] == ["GET", "EVALSHA"]
+        _, _sha, numkeys, marker, *argv = seen[1]
+        assert (numkeys, marker) == ("1", "m")
+        flat = [x for k, f, d in inc for x in (k, f, str(d))]
+        assert argv == ["7", json.dumps(flat, separators=(",", ":"))]
+        assert store.hgetall("k0") == {"n": 1} and store.hgetall(f"k{n - 1}") == {"n": n}
+        assert store.last_applied("m") == 7
 
 
 def test_failed_attempt_leaves_store_untouched_then_replay_applies(spark):
@@ -174,9 +196,10 @@ def _redis_store(url=None):
 
 def test_redis_kvstore_contract():
     """Same conformance suite against an externally-provided Redis
-    (Lua-atomic apply_batch). Skips when no server is reachable at
-    SPARK_GRAFT_REDIS_URL — the in-sandbox socket path is covered
-    un-skipped by the miniredis tests below."""
+    (Lua-atomic apply_batch), so a real server's ``cjson`` decodes the
+    suite's full-size, non-ASCII payload. Skips when no server is
+    reachable at SPARK_GRAFT_REDIS_URL — the in-sandbox socket path is
+    covered un-skipped by the miniredis tests below."""
     store = _redis_store()
     if store is None:
         pytest.skip("no external redis server reachable")
@@ -195,6 +218,29 @@ def test_miniredis_kvstore_contract_over_socket(miniredis):
     _exercise_contract(store)
     # keys() must see only hashes (TYPE-filtered SCAN), deduped
     assert all(isinstance(k, str) for k in store.keys())
+
+
+def test_full_size_day_batch_over_the_socket(miniredis):
+    """Ten years of days, three fields each, one rejected-records
+    increment and a non-ASCII day key, through ``RedisKVStore`` over
+    the socket: one apply leaves the exact state, and a replay of the
+    same id is skipped and changes nothing."""
+    from steaminganalysis_spark.streaming.sinks import REJECTED_KEY, RedisKVStore
+
+    store = RedisKVStore(miniredis)
+    days = [f"{KEY_PREFIX}day-{d:04d}" for d in range(3651)] + [f"{KEY_PREFIX}é日"]
+    fields = {"total": 9, "success": 7, "fee_cents": 123_456}
+    inc = [(k, f, v + d) for d, k in enumerate(days) for f, v in fields.items()]
+    inc.append((REJECTED_KEY, "total", 5))
+    assert len(inc) == 3652 * 3 + 1
+    assert store.apply_batch(0, inc, "m")
+    want = {k: {f: v + d for f, v in fields.items()} for d, k in enumerate(days)}
+    want[REJECTED_KEY] = {"total": 5}
+    assert sorted(store.keys()) == sorted(want)
+    assert {k: store.hgetall(k) for k in want} == want
+    assert not store.apply_batch(0, inc, "m")
+    assert {k: store.hgetall(k) for k in want} == want
+    assert store.last_applied("m") == 0
 
 
 def test_miniredis_streaming_rollup_end_to_end(spark, miniredis):

@@ -11,11 +11,14 @@ equivalence sweep against a plain dict-and-marker model written in the
 test. If the script drifts (a typo in HINCRBY marshalling, an
 off-by-one in the ARGV stride, a broken marker compare) these fail.
 Other scripts pin the compiler's Lua rules (equality across types,
-comments, precedence, refusal at SCRIPT LOAD) and that the server
-compiles each script once."""
+comments, precedence, table indexing, block scoping, refusal at SCRIPT
+LOAD), ``cjson.decode`` of the apply script's payload, that the
+emitted Python cannot be steered by a literal or a local's name, and
+that the server compiles each script once."""
 
 from __future__ import annotations
 
+import json
 from contextlib import closing
 
 import pytest
@@ -125,6 +128,8 @@ def test_lua_runner_rejects_unsupported_constructs(miniredis):
         # as in Lua, an expression that is not a call is no statement
         with pytest.raises(ResponseError, match="lua-sim"):
             r.execute_command("EVAL", "local x = 1 x return 2", "0")
+        with pytest.raises(ResponseError, match="lua-sim"):
+            r.execute_command("EVAL", "redis.call('PING') 'a' return 2", "0")
         # as in Redis, a script that does not compile is refused at load
         with pytest.raises(ResponseError, match="Error compiling script.*lua-sim"):
             r.execute_command("SCRIPT", "LOAD", "while true do end")
@@ -142,6 +147,11 @@ _SCRIPTS = {
     "comment-line": ("-- a comment\nreturn ARGV[1] -- trailing", [], ["v"], "v"),
     "mul-binds-tighter-than-add": ("return 1 + 2 * 3", [], [], 7),
     "index-out-of-range-nil": ("return ARGV[0]", [], ["v"], None),
+    # only an integral number in 1..#t reads an element; Redis gives nil
+    # for a fraction, a numeric string and a string key alike
+    "index-fraction-nil": ("return ARGV[1.5]", [], ["a", "b"], None),
+    "index-numeric-string-nil": ("return ARGV[ARGV[1]]", [], ["2", "b"], None),
+    "index-string-key-nil": ("return ARGV['a']", [], ["a", "b"], None),
 }
 
 
@@ -149,10 +159,62 @@ _SCRIPTS = {
 def test_lua_script_replies_as_redis(miniredis, case):
     """Scripts outside the production one still get Lua's and Redis's
     answer: equality across types, ``--`` inside a string literal,
-    comments, operator precedence and an index past the end."""
+    comments, operator precedence, and an index past the end or not an
+    integral number."""
     script, keys, argv, reply = _SCRIPTS[case]
     with closing(MiniRedisClient.from_url(miniredis)) as r:
         assert r.execute_command("EVAL", script, str(len(keys)), *keys, *argv) == reply
+
+
+def test_cjson_decode_reads_a_json_array_of_strings(miniredis):
+    """``cjson.decode`` of the apply script's payload: ``#`` counts the
+    elements, reads are 1-based, an index past the end is nil, and an
+    escaped character decodes to the text Python's ``json`` gives."""
+    payload = json.dumps(["a", "b", "c"], separators=(",", ":"))
+    decode = "local t = cjson.decode(ARGV[1]) "
+    with closing(MiniRedisClient.from_url(miniredis)) as r:
+        assert r.execute_command("EVAL", decode + "return #t", "0", payload) == 3
+        for i, want in ((1, "a"), (3, "c"), (4, None)):
+            assert r.execute_command("EVAL", decode + f"return t[{i}]", "0", payload) == want
+        escaped = json.dumps(["sa-spark-é"])  # ensure_ascii: é travels as \u00e9
+        assert "\\u00e9" in escaped
+        got = r.execute_command("EVAL", decode + "return t[1]", "0", escaped)
+        assert got == json.loads(escaped)[0] == "sa-spark-é"
+
+
+@pytest.mark.parametrize("payload", ['{"a":"b"}', '[["a"]]', '["a",1]', "[true]", '["a",null]',
+                                     '["a"', ""])
+def test_cjson_decode_refuses_all_but_an_array_of_strings(miniredis, payload):
+    """An object, a nested array, a number, ``true`` or ``null`` element,
+    and malformed JSON are each an error reply naming lua-sim, and the
+    connection still serves."""
+    with closing(MiniRedisClient.from_url(miniredis)) as r:
+        with pytest.raises(ResponseError, match="lua-sim"):
+            r.execute_command("EVAL", "return cjson.decode(ARGV[1])", "0", payload)
+        assert r.ping()
+
+
+def test_emitted_python_is_not_steered_by_literals_or_names(miniredis):
+    """The compiler emits Python, so nothing in a script may reach it
+    as code: a string literal holding Python source, quotes and
+    backslashes comes back as Lua reads it; locals named like Python
+    keywords, builtins or the compiler's own names behave as Lua
+    locals; and a local declared inside an ``if`` block is out of
+    scope after its ``end``, so reading it there is an undefined
+    global."""
+    with closing(MiniRedisClient.from_url(miniredis)) as r:
+        # Lua: \\ is one backslash and \' a quote; the rest is verbatim
+        src = """return '"); __import__("os") #\\\\ \\' )' """
+        assert r.execute_command("EVAL", src, "0") == """"); __import__("os") #\\ ' )"""
+        names = ("local None = tonumber(ARGV[1]) local class = None + 1 local len = class * 2 "
+                 "local G = len + None local _ix = G * 10 local __import__ = _ix + 1 "
+                 "return __import__")
+        assert r.execute_command("EVAL", names, "0", "2") == 81  # 2, 3, 6, 8, 80, 81
+        with pytest.raises(ResponseError, match="lua-sim: undefined x"):
+            r.execute_command("EVAL", "if 1 == 1 then local x = 5 end return x", "0")
+        shadow = "local x = 1 if 1 == 1 then local x = x + 5 end return x"
+        assert r.execute_command("EVAL", shadow, "0") == 1
+        assert r.ping()
 
 
 def test_each_script_is_compiled_once(monkeypatch):
